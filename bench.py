@@ -1174,60 +1174,6 @@ def main() -> None:
         len(lsh_pairs & truth_pairs) / max(len(truth_pairs), 1), 3
     )
 
-    # Media decode throughput: real PNG/WAV payloads through the Arrow
-    # mapInPandas decode stage (library-free kernels) — recorded so the
-    # multimodal pipeline's rate is a measured number, not a claim.
-    from financial_big_data_spark.operators.multimodal import (
-        extract_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, n=1024).repartition(cpus).cache()
-    media_mb = (
-        media.agg(F.sum(F.length("payload"))).collect()[0][0] or 0
-    ) / 1e6
-    media.count()  # materialize outside the timed window
-
-    def run_media() -> float:
-        t0 = time.time()
-        extract_features(media, dim=16).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    run_media()  # warm the python workers
-    _media_samples = [run_media() for _ in range(3)]
-    bands["media_decode_sec"] = [
-        round(min(_media_samples), 3), round(max(_media_samples), 3)
-    ]
-    media_decode_sec = round(min(_media_samples), 3)
-    media_mb_per_sec = round(media_mb / max(media_decode_sec, 1e-9), 1)
-    media.unpersist()
-
-    # Per-core Paeth decode kernel rate (single-threaded, driver-side):
-    # the honest per-worker throughput number for libpng-style images —
-    # decoded-pixel MB/s of a 512x512 RGB Paeth-filtered PNG through the
-    # wavefront unfilter. Map-only stage rate ≈ this × cores.
-    import numpy as np
-
-    from financial_big_data_spark.operators.media_codecs import (
-        decode_png,
-        encode_png,
-    )
-
-    _rng = np.random.default_rng(3)
-    _px = (
-        np.arange(512)[:, None, None] + 2 * np.arange(512)[None, :, None]
-        + np.arange(3)[None, None, :]
-    ).astype(np.uint8) + _rng.integers(0, 8, size=(512, 512, 3), dtype=np.uint8)
-    _paeth_payload = encode_png(_px, filter_type=4)
-    decode_png(_paeth_payload)  # warm
-    _best = None
-    for _ in range(3):
-        _t0 = time.time()
-        decode_png(_paeth_payload)
-        _dt = time.time() - _t0
-        _best = _dt if _best is None else min(_best, _dt)
-    media_paeth_mb_per_core = round(_px.nbytes / 1e6 / _best, 1)
-
     # Skew-mitigation probe (VERDICT r2 next #9): a 95%-hot-key join, timed
     # naive (AQE skew-join off), naive (AQE skew-join on) and salted — the
     # recorded ratio is what the salting operators earn over letting one
@@ -1776,9 +1722,6 @@ def main() -> None:
         "ep3_hard_lstm_margin": round(
             ep3_hard_lstm_acc - ep3_hard_baseline_acc, 4
         ),
-        "media_decode_sec": media_decode_sec,
-        "media_decode_mb_per_sec": media_mb_per_sec,
-        "media_paeth_mb_per_core": media_paeth_mb_per_core,
         "ep3_seq_mlp_sec": ep3_seq_mlp_sec,
         "ep3_seq_mlp_acc": ep3_seq_mlp_acc,
         "ep3_lstm_sec": ep3_lstm_sec,

@@ -4,7 +4,7 @@ A brand-new engine re-expressing the operator surface of the reference
 pipeline (NikoPindao/Financial-Big-Data — a single-node pandas/sklearn/torch
 market-regime analytics stack) as idiomatic, scale-out Spark DataFrame / SQL
 plans, plus the large-scale training-data-pipeline operators (dedup,
-similarity search, text analysis, multimodal plumbing) that a 100 TB corpus
+similarity search, text analysis) that a 100 TB corpus
 pipeline needs.
 
 Layout

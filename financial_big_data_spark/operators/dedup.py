@@ -229,7 +229,7 @@ def shingle_table(
     self-join form.
     """
     toks = F.split(normalized_text(text), " ")
-    base = _repartitioned(docs).select(F.col(id_col), toks.alias("_toks"))
+    base = fan_out(docs).select(F.col(id_col), toks.alias("_toks"))
     if n == 1:
         out = base.select(id_col, F.explode("_toks").alias("shingle"))
         return out.distinct() if distinct else out
@@ -245,18 +245,44 @@ def shingle_table(
     return out.distinct() if distinct else out
 
 
-def _repartitioned(docs: DataFrame) -> DataFrame:
-    """Spread CPU-bound per-row hashing across all cores.
+def fan_out(docs: DataFrame) -> DataFrame:
+    """Spread CPU-bound per-row hashing across all cores — only when the
+    input is under-partitioned.
 
     A small single-file parquet scans as ONE partition (maxPartitionBytes ≫
     file size), serializing the md5-heavy map work; text bytes are tiny
     relative to the hashing cost, so a round-robin repartition to the
-    cluster's parallelism is pure win. At 100 TB the scan is already
-    many-partitioned and this becomes a no-op-sized shuffle — callers can
-    pass pre-partitioned input to skip it.
+    cluster's parallelism is pure win there. An input that already has at
+    least ``defaultParallelism`` partitions is returned unchanged: a
+    repartition would shuffle every row and coalesce a wide scan down to
+    ``defaultParallelism`` partitions.
+
+    The partition count is read without running a job. An exchange-free
+    plan (scan, local rows, range) is sized by its RDD, which only lists
+    file splits on the driver. An adaptive plan would execute its stages
+    to size its RDD, so its initial physical plan's declared partitioning
+    is used instead, looking through cached relations; undeclared counts
+    as 0, which fans out.
     """
     target = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(target)
+    plan = docs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        n = _declared_partitions(plan)
+    else:
+        n = docs.rdd.getNumPartitions()
+    return docs if n >= target else docs.repartition(target)
+
+
+def _declared_partitions(plan) -> int:
+    """Partition count a physical plan declares before it runs (0 when
+    unknown), reading through adaptive wrappers and in-memory caches."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _declared_partitions(plan.inputPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n == 0 and name == "InMemoryTableScan":
+        return _declared_partitions(plan.relation().cachedPlan())
+    return n
 
 
 def minhash_digest(num_hashes: int, shingle: str | Column = "shingle") -> Column:
@@ -341,10 +367,10 @@ def minhash_signatures(
 def _cap_bucket(
     banded: DataFrame, keys: list[str], id_col: str, cap: int,
     site: str = "_cap_bucket",
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Bound a banded table's per-bucket membership at ``cap``.
 
-    Returns ``(head, overflow_with_rep)``: ``head`` keeps each bucket's
+    Returns ``(head, overflow_with_rep, ranked)``: ``head`` keeps each bucket's
     ``cap`` min-``xxhash64`` members (deterministic uniform sample — the
     same discipline as ml/graph.py ``cooccurrence_pairs``' slot_cap);
     ``overflow_with_rep`` carries every row PAST the cap joined to its
@@ -664,7 +690,7 @@ def simhash(docs: DataFrame, text: str = "text", id_col: str = "doc_id", bits: i
     the vote sum is positive. Token hash = first 16 hex chars of md5 → bigint
     (cross-engine reproducible via conv()).
     """
-    toks = _repartitioned(docs).select(
+    toks = fan_out(docs).select(
         F.col(id_col), F.explode(F.array_distinct(F.split(normalized_text(text), " "))).alias("tok")
     )
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("bigint")
@@ -1188,7 +1214,7 @@ def span_dedup(
         method = "rolling" if span_tokens >= _SPAN_ROLLING_MIN_TOKENS else "lead"
 
     toks = tracked_persist(
-        _repartitioned(docs).select(
+        fan_out(docs).select(
             F.col(id_col),
             F.posexplode(F.split(normalized_text(text), " ")).alias("idx", "tok"),
         )

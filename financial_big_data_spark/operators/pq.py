@@ -133,7 +133,12 @@ def _lloyd_np(S, k: int, n_iter: int = 10):
     thousand rows; a distributed fit per alternation would be all job
     floor. Assignment + center update are fully vectorized (one dgemm +
     one bincount per iteration) — the per-cluster boolean-mask mean loop
-    was 184k interpreted numpy calls per opq_train (optimization r13)."""
+    was 184k interpreted numpy calls per opq_train (optimization r13).
+    The mean update changed numerics too: ``np.add.at`` sums divided by
+    the bincount accumulate in a different order than the old
+    ``S[mask].mean(0)``, so centers can differ in the last float bits,
+    on top of the argmin near-ties of ``_sqdist_np``; property tests, not
+    exact floats, pin this path."""
     import numpy as np
 
     n = S.shape[0]

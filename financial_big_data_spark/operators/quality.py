@@ -119,23 +119,23 @@ def repetition_profile(
 ) -> DataFrame:
     """Per-document repetition/quality metrics + pass/fail flags.
 
-    All metrics are pure Column expressions (no Python, no shuffle — the
-    input repartition spreads a small single-file scan across cores and
-    is a no-op-sized move at scale). The top-token count runs O(n log n)
-    per document: sort the token array once, then a single aggregate pass
+    All metrics are pure Column expressions (no Python, no shuffle — an
+    under-partitioned input is fanned out across cores by dedup.fan_out;
+    a wide one is left as is). The top-token count runs O(n log n) per
+    document: sort the token array once, then a single aggregate pass
     tracks the longest equal-run — NOT the naive O(distinct × tokens)
     nested scan, which on real prose-length documents costs ~40× more
     interpreted higher-order-function steps, nor an explode+groupBy,
     which would turn a map-only operator into a shuffling one at 100 TB.
     """
-    from .dedup import _repartitioned
+    from .dedup import fan_out
 
     # two-step select: the token array becomes a materialized attribute so
     # the interpreted HOF metrics (sort/run-scan, trigrams, distinct) read
     # it instead of each re-running the split (see quality_metric_columns)
     cols = quality_metric_columns(text, toks_attr="_toks")
     return (
-        _repartitioned(docs)
+        fan_out(docs)
         .select(F.col(id_col), F.col(text), tokens(F.col(text)).alias("_toks"))
         .select(F.col(id_col), *[c.alias(name) for name, c in cols.items()])
     )

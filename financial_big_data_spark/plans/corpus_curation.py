@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..cache import tracked_persist
 from ..functions.stats import global_running_sum
-from ..operators.dedup import exact_dedup_keys, near_dup_lsh
+from ..operators.dedup import exact_dedup_keys, fan_out, near_dup_lsh
 from ..operators.text import text_profile
 
 
@@ -104,15 +104,15 @@ def curate_corpus(
     text the heuristics cannot see. The audit gains an
     ``n_model_quality`` column when enabled.
     """
-    # Fan the corpus out to the cluster's parallelism before the map-heavy
-    # stages (optimization r13): a small single-file parquet scans as ONE
-    # partition, and because `quality` is persisted BELOW any shuffle, the
-    # single partition propagates through the cache into every map-only
-    # consumer — the profile pass, the exact-dedup md5 fingerprints and
-    # the audit counts all ran single-task (job-profiled ~0.7 s each). At
-    # 100 TB the scan is already many-partitioned and this is a no-op-
-    # sized shuffle (same rationale as operators/dedup._repartitioned).
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    # Fan an under-partitioned corpus out to the cluster's parallelism
+    # before the map-heavy stages (optimization r13): a small single-file
+    # parquet scans as ONE partition, and because `quality` is persisted
+    # BELOW any shuffle, the single partition propagates through the cache
+    # into every map-only consumer — the profile pass, the exact-dedup md5
+    # fingerprints and the audit counts all ran single-task (job-profiled
+    # ~0.7 s each). A scan that is already wide passes through unshuffled
+    # (operators/dedup.fan_out).
+    docs = fan_out(docs)
     # keep_text: the profile select carries the text column through, so the
     # quality gate reads one map-only pass — the old form re-joined the
     # corpus to itself on id_col (two exchanges) purely to re-attach text

@@ -2694,7 +2694,11 @@ def q_doc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, then the full MinHash/band/verify chain evaluated on the
     exact-dedup survivors (not the raw corpus — stage composition matters),
     and the anti-join of verified near-dup victims. One hash mismatch in
-    ANY stage shifts every downstream count."""
+    ANY stage shifts every downstream count.
+
+    The returned audit is eager (CurationResult.audit): building this
+    frame runs about 7 driver count() actions, and its plan is a 1-row
+    local relation."""
     from .plans.corpus_curation import curate_corpus
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3116,120 +3120,6 @@ def q_ev_user_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(float(metrics["modularity"]), int(metrics["n_communities"]))],
         "modularity double, n_communities int",
     )
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode in the gate: real PNG-pixel / WAV-sample feature
-    extraction (media_codecs) over the deterministic synthetic media table,
-    through the Arrow mapInPandas stage. Rows-only: binary payload decode
-    has no SQL equivalent."""
-    from .operators.multimodal import extract_features, synthetic_media
-
-    media = synthetic_media(spark, n=64)
-    out = extract_features(media, dim=8)
-    return out.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.round(F.col("features")[0], 6).alias("f0"),
-        F.round(F.col("features")[1], 6).alias("f1"),
-    )
-
-
-def q_media_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-checked media-decode audit (VERDICT r7 #5 — the last twin-less
-    entry): fixture PNGs (all five scanline filter types, so every
-    unfilter kernel incl. the wavefront Average/Paeth path is under the
-    hash) and 16-bit PCM WAVs are built from CLOSED-FORM content —
-    pixel(y,x,c) = (7x + 13y + 29c + 31·id) mod 256, sample(i) =
-    ((31·id + 7i)·97) mod 65536 − 32768 — encoded with the library-free
-    encoders, then decoded by the REAL production kernels
-    (media_codecs.decode_png / decode_wav) inside the same Arrow
-    mapInPandas stage extract_features uses. Both codecs are lossless, so
-    the per-channel integer pixel/sample sums must equal the closed form
-    exactly — which DuckDB recomputes from generate_series with no file
-    in common. Any decode defect (filter reconstruction, bit depth,
-    channel order, chunk walking) breaks the hash."""
-    import numpy as np
-
-    from .operators.media_codecs import encode_png, encode_wav
-
-    H, W = 48, 64
-    rows = []
-    for i in range(10):  # 2 full cycles of the 5 PNG filter types
-        y, x, c = np.ogrid[0:H, 0:W, 0:3]
-        px = ((x * 7 + y * 13 + c * 29 + i * 31) % 256).astype(np.uint8)
-        rows.append((i, "image", bytearray(encode_png(px, filter_type=i % 5))))
-    for i in range(10, 16):
-        n = 1600 + (i - 10) * 160
-        idx = np.arange(n, dtype=np.int64)
-        s = ((i * 31 + idx * 7) * 97) % 65536 - 32768
-        # s/32767 round-trips the exact int16 through the PCM encoder
-        rows.append((i, "audio", bytearray(encode_wav(s / 32767.0))))
-    media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-
-    def fn(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        from .operators.media_codecs import decode_png, decode_wav
-
-        cols = ["media_id", "channel", "px_count", "px_sum"]
-        for pdf in batches:
-            recs = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind == "image":
-                    px = decode_png(bytes(payload))
-                    for c in range(px.shape[2]):
-                        recs.append(
-                            (
-                                int(mid),
-                                c,
-                                int(px.shape[0] * px.shape[1]),
-                                int(px[:, :, c].astype(_np.int64).sum()),
-                            )
-                        )
-                else:
-                    samples, _rate = decode_wav(bytes(payload))
-                    ints = _np.rint(samples[:, 0] * 32768.0).astype(_np.int64)
-                    recs.append((int(mid), 0, int(len(ints)), int(ints.sum())))
-            yield _pd.DataFrame(recs, columns=cols)
-
-    out = media.mapInPandas(
-        fn, "media_id long, channel int, px_count long, px_sum long"
-    )
-    return out.orderBy("media_id", "channel")
-
-
-# The oracle recomputes the closed-form content sums from generate_series
-# — no shared file, no shared decode code: if Spark's hash matches, the
-# real decoders reproduced every pixel/sample of 10 PNGs (5 filter types)
-# and 6 WAVs bit-exactly.
-_SQL_MEDIA_DECODE_CHECK = r"""
-WITH img AS (
-  SELECT i.i AS media_id, c.c::INT AS channel,
-         (48 * 64)::BIGINT AS px_count,
-         sum((x.x * 7 + y.y * 13 + c.c * 29 + i.i * 31) % 256)::BIGINT AS px_sum
-  FROM generate_series(0, 9) i(i),
-       generate_series(0, 47) y(y),
-       generate_series(0, 63) x(x),
-       generate_series(0, 2) c(c)
-  GROUP BY 1, 2
-), aud AS (
-  SELECT i.i AS media_id, 0::INT AS channel,
-         count(*)::BIGINT AS px_count,
-         sum(((i.i * 31 + s.s * 7) * 97) % 65536 - 32768)::BIGINT AS px_sum
-  FROM generate_series(10, 15) i(i)
-  JOIN generate_series(0, 2399) s(s) ON s.s < 1600 + (i.i - 10) * 160
-  GROUP BY 1
-)
-SELECT * FROM img
-UNION ALL
-SELECT * FROM aud
-ORDER BY media_id, channel
-"""
 
 
 def q_doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7385,8 +7275,8 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "ev_incremental_agg": (q_ev_incremental_agg, _SQL_EV_INCREMENTAL_AGG),
     # ── r12 rotating segment (30): never-driver-checked until now —
     # TPC-H round-9 shapes, matview variants, CUBE/canonical, the ML
-    # oracle twins, the round-12 persisted ANN index, the streaming
-    # twins and the media decode check ──
+    # oracle twins, the round-12 persisted ANN index and the streaming
+    # twins ──
     "min_cost_supplier": (q_min_cost_supplier, _SQL_MIN_COST_SUPPLIER),
     "discount_band_revenue": (q_discount_band_revenue, _SQL_DISCOUNT_BAND_REVENUE),
     "nation_market_share": (q_nation_market_share, _SQL_NATION_MARKET_SHARE),
@@ -7502,10 +7392,6 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "emb_dbscan": (q_emb_dbscan, None),
     "ev_session_windows": (q_ev_session_windows, _SQL_EV_SESSION_WINDOWS),
     "ev_user_modularity": (q_ev_user_modularity, None),
-    "media_features": (q_media_features, None),
-    # bumped from the r12 rotating segment to r13 (the round-12 streaming
-    # sum/count matview twin took its slot — see COVERAGE.md schedule)
-    "media_decode_check": (q_media_decode_check, _SQL_MEDIA_DECODE_CHECK),
     "doc_contamination": (q_doc_contamination, _SQL_DOC_CONTAMINATION),
     "doc_packing": (q_doc_packing, _SQL_DOC_PACKING),
     "doc_quality_flags": (q_doc_quality_flags, _SQL_DOC_QUALITY),

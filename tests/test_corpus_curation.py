@@ -179,3 +179,31 @@ def test_curate_corpus_model_quality_stage(spark):
     assert set(range(8)) <= ids_with              # seeds survive
     assert audit.n_model_quality == audit.n_quality - 4
     release_tracked()
+
+
+def _range_corpus(spark, parts):
+    # the partition count comes from the range itself, so the input
+    # carries no exchange of its own
+    return spark.range(0, 64, 1, parts).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("the quick brown fox jumps over the lazy dog number "),
+            F.col("id").cast("string"),
+        ).alias("text"),
+    )
+
+
+def _round_robin(df):
+    # the executed-plan string includes the plans of cached stages
+    return "RoundRobinPartitioning" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("parts,fans_out", [(64, False), (1, True)])
+def test_fan_out_only_when_under_partitioned(spark, parts, fans_out):
+    from financial_big_data_spark.cache import release_tracked
+    from financial_big_data_spark.operators.dedup import shingle_table
+
+    docs = _range_corpus(spark, parts)
+    assert _round_robin(shingle_table(docs)) is fans_out
+    assert _round_robin(curate_corpus(docs).corpus) is fans_out
+    release_tracked()

@@ -133,6 +133,21 @@ def test_personalized_pagerank_matches_dense_reference(spark):
         assert got[n] == pytest.approx(want[n], abs=1e-9)
 
 
+def test_personalized_pagerank_fused_matches_dense_few_iters(spark):
+    # every node has an in-edge, so pagerank takes the fused-aggregate
+    # path; a few iterations keep this in the default tier
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (1, 4)]
+    reset = spark.createDataFrame([(0,), (3,)], "node long")
+    got = {
+        r.node: r.rank
+        for r in pagerank(_edges_df(spark, edges), n_iter=4, reset=reset).collect()
+    }
+    want = _dense_ppr(edges, [0, 3], iters=4)
+    assert set(got) == set(want)
+    for n in want:
+        assert got[n] == pytest.approx(want[n], abs=1e-12)
+
+
 def test_personalized_pagerank_concentrates_near_seeds(spark):
     # symmetric ring: uniform PR gives every node 1/6; personalization
     # must pull mass toward the seed

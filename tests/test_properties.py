@@ -163,53 +163,6 @@ def test_global_running_sum_property(spark, vals, parts):
     assert got == expected
 
 
-# ---------------------------------------------------------------------------
-# Media codec round-trips (pure functions — no Spark session needed)
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    h=st.integers(1, 12),
-    w=st.integers(1, 12),
-    c=st.sampled_from([1, 2, 3, 4]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_png_roundtrip_property(h, w, c, seed):
-    """encode_png → decode_png is the identity for every 8-bit shape/
-    channel-count the encoder emits."""
-    import numpy as np
-
-    from financial_big_data_spark.operators.media_codecs import decode_png, encode_png
-
-    px = np.random.default_rng(seed).integers(0, 256, size=(h, w, c), dtype=np.uint8)
-    got = decode_png(encode_png(px))
-    assert got.shape == (h, w, c)
-    assert np.array_equal(got, px)
-
-
-@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    n=st.integers(1, 400),
-    ch=st.sampled_from([1, 2, 3]),
-    rate=st.sampled_from([8000, 16000, 44100]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_wav_roundtrip_property(n, ch, rate, seed):
-    """encode_wav → decode_wav preserves shape, rate and sample values to
-    16-bit quantization accuracy for any frame/channel count."""
-    import numpy as np
-
-    from financial_big_data_spark.operators.media_codecs import decode_wav, encode_wav
-
-    x = np.random.default_rng(seed).uniform(-1.0, 1.0, size=(n, ch))
-    got, got_rate = decode_wav(encode_wav(x, sample_rate=rate))
-    assert got_rate == rate and got.shape == (n, ch)
-    # encode rounds x*32767, decode divides by 32768 → worst case
-    # |x|/32768 (scale mismatch) + 0.5/32768 (rounding) = 1.5/32768
-    assert np.abs(got - x).max() <= 1.5 / 32768 + 1e-12
-
-
 # ---- round-5 quality-operator invariants ---------------------------------
 
 WORDS = ["aa", "bb", "cc", "dd", "spark", "x"]

@@ -51,10 +51,10 @@ def test_repetition_profile_flags(spark):
 
 
 def test_repetition_profile_is_shuffle_free(spark):
-    # the ONLY exchange is the round-robin spread of a small input across
-    # cores (a no-op-sized move at scale); no metric needs a key shuffle
+    # the ONLY exchange is the round-robin fan-out of an under-partitioned
+    # input across cores (dedup.fan_out); no metric needs a key shuffle
     plan = repetition_profile(
-        _docs(spark, ["a b c d e f g"])
+        _docs(spark, ["a b c d e f g"]).coalesce(1)
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "roundrobin" in plan.lower()

@@ -7,6 +7,9 @@ from the frame the loop hands to `_ckpt`. This intercepts the first
 over the cached edge frame and the initial rank state.
 
 Usage: python tools/dump_pagerank_iter.py <tag>   (writes plans/r13/)
+
+plans/ is git-ignored; the committed r12/r13 dumps live in git history at
+281f973.
 """
 
 from __future__ import annotations

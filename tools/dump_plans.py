@@ -2,6 +2,14 @@
 
 Usage: python tools/dump_plans.py <tag> [name ...]
 Defaults to the bench HEADLINE set when no names are given.
+
+plans/ is git-ignored; the committed r12/r13 dumps live in git history at
+281f973.
+
+doc_curation returns CurationResult.audit, which is eager: building it
+runs about 7 driver count() actions over the whole pipeline, so dumping
+its plan executes the curation first and prints the plan of a 1-row
+local relation.
 """
 
 from __future__ import annotations
