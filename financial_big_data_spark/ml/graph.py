@@ -10,9 +10,13 @@ paths implemented as pure DataFrame iterations — no GraphFrames dependency:
   one row per node. Community structure ≈ Louvain's for well-separated
   graphs (modularity-optimal splits differ on ambiguous nodes).
 - **louvain_distributed**: the REAL Louvain — modularity-optimizing local
-  moves (parity-gated synchronous sweeps) + graph contraction, entirely
+  moves (hash-gated synchronous sweeps) + graph contraction, entirely
   DataFrame joins/aggregates; matches networkx Louvain's partition quality
-  on the classic fixtures (tests).
+  on the classic fixtures (tests). A sweep is one checkpoint: the state row
+  per node carries its community and that community's degree total, the
+  candidate scores, stay score and argmax come from one join-aggregate and
+  one window sort, and the convergence count is observed on the
+  checkpoint job itself (``_louvain_phase1``).
 - **connected_components**: iterative min-label flooding (each node takes
   the min component id in its neighborhood) — the DBSCAN ε-graph labeller
   at scale. Converges in O(graph diameter) rounds.
@@ -25,7 +29,10 @@ driver ends up multiplying million-bit BigInts per job).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import warnings
+
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -45,7 +52,8 @@ def _ckpt(df: DataFrame) -> DataFrame:
     LogicalRDD, default sizeInBytes): values, schema and partitioning
     are untouched, lineage stays cut, and join strategies at runtime
     are AQE's call from real shuffle sizes anyway. Falls back to the
-    plain checkpoint if the internal constructor ever moves."""
+    plain checkpoint, with a warning, if the internal constructor ever
+    moves — the fallback brings the geometric stats growth back."""
     ck = df.localCheckpoint(eager=True)
     try:
         jdf = ck._jdf
@@ -53,9 +61,15 @@ def _ckpt(df: DataFrame) -> DataFrame:
         new_jdf = sess.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
-        return DataFrame(new_jdf, df.sparkSession)
-    except Exception:  # noqa: BLE001 - private API drift: keep plain ckpt
+    except (AttributeError, Py4JError) as exc:  # private API drift
+        warnings.warn(
+            f"_ckpt: statistics reset unavailable ({exc!r}); iterative plan "
+            "statistics will compound across checkpoints",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return ck
+    return DataFrame(new_jdf, df.sparkSession)
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -109,9 +123,11 @@ def modularity(
 
     Q = Σ_c [ W_in(c)/m − (S(c)/2m)² ] over an undirected weighted graph:
     m = total edge weight, W_in(c) = intra-community edge weight, S(c) =
-    summed weighted degree of c's nodes. Three bounded aggregates (one
-    over edges, one over degrees, one over communities) — no collect of
-    anything node- or edge-sized; only the final scalars reach the driver.
+    summed weighted degree of c's nodes. ONE pass: every labeled edge
+    contributes its weight to both endpoints' communities, a grouped
+    aggregate per community gives (S(c), W_in(c)), and a global aggregate
+    over it gives ΣS = 2m, ΣW_in and ΣS² — only those three scalars reach
+    the driver, nothing node- or edge-sized.
 
     ``edges``: (src, dst[, weight]) with each undirected edge listed once
     and no self-loops; ``communities``: (node, community), e.g. LPA output.
@@ -121,36 +137,34 @@ def modularity(
     w = (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("_w")
     e = edges.select(F.col("src"), F.col("dst"), w)
     c = communities.select("node", "community")
-    lab = (
-        e.join(
-            c.select(F.col("node").alias("src"), F.col("community").alias("_ca")),
-            on="src",
-        ).join(
-            c.select(F.col("node").alias("dst"), F.col("community").alias("_cb")),
-            on="dst",
-        )
-    ).cache()
-    totals = lab.agg(
-        F.sum("_w").alias("m"),
-        F.sum(F.when(F.col("_ca") == F.col("_cb"), F.col("_w")).otherwise(0.0)).alias(
-            "w_in"
-        ),
-    ).collect()[0]
-    m = totals.m
-    if not m:
-        lab.unpersist()
-        return 0.0
-    deg = (
-        lab.select(F.col("_ca").alias("community"), F.col("_w"))
-        .unionByName(lab.select(F.col("_cb").alias("community"), F.col("_w")))
-        .groupBy("community")
-        .agg(F.sum("_w").alias("s"))
+    lab = e.join(
+        c.select(F.col("node").alias("src"), F.col("community").alias("_ca")),
+        on="src",
+    ).join(
+        c.select(F.col("node").alias("dst"), F.col("community").alias("_cb")),
+        on="dst",
     )
-    expected = deg.agg(
-        F.sum(F.pow(F.col("s") / F.lit(2.0 * m), F.lit(2.0)))
-    ).collect()[0][0]
-    lab.unpersist()
-    return float(totals.w_in / m - expected)
+    # each edge lands once on each endpoint's community: S(c) sums both,
+    # W_in(c) counts an intra edge once (on the src side)
+    intra = F.when(F.col("_ca") == F.col("_cb"), F.col("_w")).otherwise(0.0)
+    ends = lab.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("_ca").alias("c"), "_w", intra.alias("_in")),
+                F.struct(F.col("_cb").alias("c"), "_w", F.lit(0.0).alias("_in")),
+            )
+        )
+    )
+    per_c = ends.groupBy("c").agg(F.sum("_w").alias("s"), F.sum("_in").alias("w_in"))
+    tot = per_c.agg(
+        F.sum("s").alias("s"),
+        F.sum("w_in").alias("w_in"),
+        F.sum(F.col("s") * F.col("s")).alias("s2"),
+    ).first()
+    if not tot.s:
+        return 0.0
+    m = tot.s / 2.0
+    return float(tot.w_in / m - tot.s2 / (4.0 * m * m))
 
 
 def lpa_communities_df(edges: DataFrame, max_iter: int = 10) -> tuple[DataFrame, dict]:
@@ -194,7 +208,7 @@ def _louvain_phase1(
     sweep)`` — moves flow strictly "downhill" in a per-sweep random total
     order over communities, so an A↔B swap can never apply in one sweep,
     and the order RE-DRAWS each sweep so no desired move is persistently
-    unreachable (the r7 fixed smaller/larger-id parity gate biased early
+    unreachable (a fixed smaller/larger-id parity gate biased early
     sweeps toward low-id communities and halved the effective move rate —
     measured as under-convergence on the planted-partition bench: Q 0.57
     vs the driver path's 0.79). Ties between equal-score candidates break
@@ -203,22 +217,37 @@ def _louvain_phase1(
     low-id chains. Convergence is decided on DESIRED moves (ungated best
     beats stay): a sweep whose desired moves were all gated out simply
     re-draws, and the loop exits only when no node wants to move at all.
+
+    The state is one row per node, (node, comm, k, S): weighted degree k
+    and S = Σtot(comm), the summed degree of the node's community. Each
+    sweep is ONE eager ``_ckpt`` of the next state and nothing else:
+
+    1. candidates: the cached links (both directions of every edge, plus
+       a zero-weight self row per node) joined with the state on the
+       neighbor (its community C and S(C)) and on the node (its current
+       community and k), then summed per (node, C) into k_in(C). The self
+       row makes the node's own community a candidate even with no
+       same-community neighbor, so the stay score always exists and an
+       isolated contracted supernode keeps its row; S(C) rides along from
+       the neighbor's row, so no Σtot aggregate is joined back in;
+    2. per-node windows, all served by one sort: the best downhill
+       candidate ranked by (score desc, hash(node, C), C), the stay score
+       (own-community row) and the ungated best, which decides
+       convergence;
+    3. next labels ``comm = when(move, C).otherwise(current)`` and the
+       next S as a window sum of k over ``comm``, checkpointed.
+
+    The sweep's desired-move count is read from that same checkpoint job
+    through an ``Observation`` — no extra Spark job.
     """
-    pairs = (
-        edges.where(F.col("a") != F.col("b"))
-        .select("a", "b", "w")
-        .unionByName(
-            edges.where(F.col("a") != F.col("b")).select(
-                F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-            )
-        )
-    ).cache()
+    pairs = edges.where(F.col("a") != F.col("b")).select("a", "b", "w")
+    pairs = pairs.unionByName(
+        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
+    )
     # weighted degree in ONE union+aggregate (self-loops count twice, per
     # the networkx degree convention): endpoint rows from both directions
-    # plus a double-weight row per self-loop. k rides INSIDE labels so
-    # every per-sweep aggregate/join below needs one less join — with AQE
-    # materializing every exchange as its own micro-stage, stage count per
-    # sweep is the latency driver on small/contracted graphs.
+    # plus a double-weight row per self-loop. Every node starts alone in
+    # its community, so S = k.
     deg = (
         pairs.select("a", "w")
         .unionByName(
@@ -230,103 +259,74 @@ def _louvain_phase1(
         .agg(F.sum("w").alias("k"))
     )
     labels = _ckpt(deg.select(
-        F.col("a").alias("node"), F.col("a").alias("comm"), "k"
+        F.col("a").alias("node"), F.col("a").alias("comm"), "k", F.col("k").alias("S")
     ))
+    # a zero-weight self row per node makes its own community a candidate
+    # even without a same-community neighbor (and keeps an isolated
+    # contracted supernode in the sweep); adding 0.0 to k_in is exact
+    links = pairs.unionByName(
+        labels.select(F.col("node").alias("a"), F.col("node").alias("b"), F.lit(0.0).alias("w"))
+    ).cache()
+    # build the cache in one job of its own: left to the first sweep, AQE's
+    # concurrent stages race to build it and the job count varies
+    links.count()
+    two_m2 = F.lit(2.0 * m * m)
     for sweep in range(max_sweeps):
-        sigma = labels.groupBy("comm").agg(F.sum("k").alias("S"))
-        # candidate (node, community) rows: every neighboring community
-        # with its in-weight, UNION the node's own community at kin 0 (so
-        # the stay-score exists even with no same-community neighbor)
-        k_in = (
-            pairs.join(
-                labels.select(F.col("node").alias("b"), F.col("comm")), on="b"
-            )
-            .groupBy("a", "comm")
-            .agg(F.sum("w").alias("kin"))
-            .unionByName(
-                labels.select(
-                    F.col("node").alias("a"), F.col("comm"), F.lit(0.0).alias("kin")
-                )
-            )
-            .groupBy("a", "comm")
-            .agg(F.sum("kin").alias("kin"))
-        )
         cand = (
-            k_in.join(
-                labels.select(
-                    F.col("node").alias("a"), F.col("comm").alias("_cc"), "k"
-                ),
+            links.join(labels.select(F.col("node").alias("b"), "comm", "S"), on="b")
+            .join(
+                labels.select(F.col("node").alias("a"), F.col("comm").alias("_cc"), "k"),
                 on="a",
             )
-            .join(sigma, on="comm")
-            .withColumn(
-                "_S_excl",
-                F.col("S") - F.when(F.col("comm") == F.col("_cc"), F.col("k")).otherwise(0.0),
-            )
-            .withColumn(
-                "_score",
-                F.col("kin") / F.lit(m)
-                - F.col("k") * F.col("_S_excl") / F.lit(2.0 * m * m),
-            )
+            .groupBy("a", "_cc", "k", "comm")
+            .agg(F.sum("w").alias("kin"), F.max("S").alias("S"))
         )
-        # stay score and UNGATED best ride as window functions over the
-        # same partitioning the gated argmax uses — no extra exchange, no
-        # self-joins; the gate filters BEFORE the argmax so a gated-out
-        # global best can't shadow an eligible downhill candidate (move
-        # throughput), while _best_any decides convergence ungated.
-        wall = Window.partitionBy("a")
-        wbest = Window.partitionBy("a").orderBy(
-            F.desc("_score"), F.xxhash64(F.col("a"), F.col("comm")), "comm"
-        )
+        is_own = F.col("comm") == F.col("_cc")
+        score = F.col("kin") / F.lit(m) - F.col("k") * (
+            F.col("S") - F.when(is_own, F.col("k")).otherwise(0.0)
+        ) / two_m2
         gate = (
             F.xxhash64(F.col("comm"), F.lit(sweep))
             < F.xxhash64(F.col("_cc"), F.lit(sweep))
         )
+        # eligible (downhill, non-own) candidates rank first, so rank 1 is
+        # the gated argmax, or no move for a node without one. The ranking
+        # sort also serves the unordered stay/best windows (same key).
+        wbest = Window.partitionBy("a").orderBy(
+            F.desc("_elig"), F.desc("_score"), F.xxhash64(F.col("a"), F.col("comm")),
+            "comm",
+        )
+        wall = Window.partitionBy("a")
         per_node = (
-            cand.withColumn(
-                "_ss",
-                F.max(
-                    F.when(F.col("comm") == F.col("_cc"), F.col("_score"))
-                ).over(wall),
-            )
-            .withColumn(
-                "_best_any",
-                F.max(
-                    F.when(F.col("comm") != F.col("_cc"), F.col("_score"))
-                ).over(wall),
-            )
-            .where(gate | (F.col("comm") == F.col("_cc")))
+            cand.withColumn("_score", score)
+            .withColumn("_elig", ~is_own & gate)
             .withColumn("_rk", F.row_number().over(wbest))
+            .withColumn("_ss", F.max(F.when(is_own, F.col("_score"))).over(wall))
+            .withColumn(
+                "_best_any", F.max(F.when(~is_own, F.col("_score"))).over(wall)
+            )
             .where(F.col("_rk") == 1)
-            .select(
-                F.col("a").alias("node"),
-                F.col("comm").alias("_new"),
-                (
-                    (F.col("comm") != F.col("_cc"))
-                    & (F.col("_score") > F.col("_ss") + F.lit(tol))
-                ).alias("_move"),
-                (
-                    F.col("_best_any").isNotNull()
-                    & (F.col("_best_any") > F.col("_ss") + F.lit(tol))
-                ).alias("_desired"),
+            .withColumn(
+                "_move", F.col("_elig") & (F.col("_score") > F.col("_ss") + F.lit(tol))
             )
         )
-        per_node = _ckpt(per_node)  # ONE evaluation of the sweep DAG
-        counts = per_node.agg(
-            F.sum(F.col("_move").cast("int")).alias("nm"),
-            F.sum(F.col("_desired").cast("int")).alias("nd"),
-        ).first()
-        if not counts["nd"]:
+        desired = Observation()
+        nxt = per_node.observe(
+            desired,
+            F.sum((F.col("_best_any") > F.col("_ss") + F.lit(tol)).cast("int")).alias("nd"),
+        ).select(
+            F.col("a").alias("node"),
+            F.when(F.col("_move"), F.col("comm")).otherwise(F.col("_cc")).alias("comm"),
+            "k",
+        )
+        labels = _ckpt(  # ONE evaluation of the sweep DAG
+            nxt.withColumn("S", F.sum("k").over(Window.partitionBy("comm")))
+        )
+        if not desired.get["nd"]:
             break  # TRUE convergence: no node's ungated best beats stay
-        if counts["nm"]:
-            moves = per_node.where(F.col("_move")).select("node", "_new")
-            labels = _ckpt(
-                labels.join(moves, on="node", how="left")
-                .select("node", F.coalesce("_new", "comm").alias("comm"), "k")
-            )
-        # nm == 0 with nd > 0: every desired move was gated out this
-        # sweep — the next sweep re-draws the community order
-    pairs.unpersist()
+        # desired moves that were all gated out this sweep are retried
+        # under the next sweep's re-drawn community order
+    links.unpersist()
     return labels.select("node", "comm")
 
 
@@ -354,8 +354,10 @@ def _louvain_driver_finish(edge_rows: list, seed: int = 42) -> list:
     import networkx as nx
     from networkx.algorithms import community as nxc
 
+    # seeded networkx Louvain depends on node/edge insertion order: sort,
+    # so the partition does not depend on the order rows were collected in
     g = nx.Graph()
-    for a, b, w in edge_rows:
+    for a, b, w in sorted(edge_rows):
         if g.has_edge(a, b):
             g[a][b]["weight"] += w
         else:
@@ -400,6 +402,18 @@ def louvain_distributed(
     downgrade (VERDICT r7 #1). ``None`` disables the finish (pure
     distributed sweeps at every level).
     """
+    return _louvain_levels(edges, max_levels, max_sweeps, tol, driver_finish_edges)[0]
+
+
+def _louvain_levels(
+    edges: DataFrame,
+    max_levels: int,
+    max_sweeps: int,
+    tol: float,
+    driver_finish_edges: int | None,
+) -> tuple[DataFrame, int]:
+    """``louvain_distributed`` plus its community count, which the level
+    loop already knows on the driver (no extra job to count it)."""
     w = (
         F.abs(F.col("weight").cast("double"))
         if "weight" in edges.columns
@@ -409,12 +423,13 @@ def louvain_distributed(
     m = cur.agg(F.sum("w")).collect()[0][0]
     if not m:
         spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, community string")
+        return spark.createDataFrame([], "node string, community string"), 0
     mapping: DataFrame | None = None
     for _level in range(max_levels):
         labels = _louvain_phase1(cur, float(m), max_sweeps, tol)
-        n_nodes = labels.count()
-        n_comms = labels.select("comm").distinct().count()
+        n_nodes, n_comms = labels.agg(
+            F.count(F.lit(1)), F.countDistinct("comm")
+        ).first()
         mapping = (
             labels
             if mapping is None
@@ -441,12 +456,13 @@ def louvain_distributed(
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
         )
-        if (
-            driver_finish_edges is not None
-            and cur.count() <= driver_finish_edges
-        ):
+        if driver_finish_edges is None:
+            continue
+        # one bounded collect decides AND feeds the finish
+        rows = cur.limit(driver_finish_edges + 1).collect()
+        if len(rows) <= driver_finish_edges:
             fin = _louvain_driver_finish(
-                [(r["a"], r["b"], float(r["w"])) for r in cur.collect()]
+                [(r["a"], r["b"], float(r["w"])) for r in rows]
             )
             spark = edges.sparkSession
             fin_df = spark.createDataFrame(fin, ["_sn", "_rep"])
@@ -457,19 +473,21 @@ def louvain_distributed(
                     F.col("mp.node").alias("node"), F.col("fv._rep").alias("comm")
                 )
             )
+            n_comms = len({rep for _, rep in fin})
             break
-    return mapping.select("node", F.col("comm").alias("community"))
+    return mapping.select("node", F.col("comm").alias("community")), n_comms
 
 
 def louvain_distributed_df(edges: DataFrame) -> tuple[DataFrame, dict]:
     """Same contract as ``lpa_communities_df`` / the driver path:
     (communities, {modularity, n_communities}) — but via the true
     modularity-optimizing distributed Louvain."""
-    comms = louvain_distributed(edges)
+    comms, n = _louvain_levels(
+        edges, max_levels=3, max_sweeps=10, tol=1e-12, driver_finish_edges=200_000
+    )
     weight = "weight" if "weight" in edges.columns else None
     e = edges.withColumn(weight, F.abs(F.col(weight))) if weight else edges
     q = modularity(e, comms, weight=weight)
-    n = comms.select("community").distinct().count()
     return comms, {"modularity": q, "n_communities": n}
 
 

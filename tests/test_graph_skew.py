@@ -173,6 +173,16 @@ def test_lpa_modularity_planted_two_densities(spark):
     assert abs(lp["modularity"] - lv["modularity"]) < 0.05
 
 
+def _ring_of_cliques():
+    """6 cliques of 5 nodes joined in a ring by single-edge bridges."""
+    edges = []
+    for c in range(6):
+        ns = [c * 10 + i for i in range(5)]
+        edges += [(a, b, 1.0) for a in ns for b in ns if a < b]
+        edges.append((c * 10, ((c + 1) % 6) * 10 + 1, 1.0))
+    return edges
+
+
 def test_distributed_louvain_matches_networkx(spark):
     """The REAL distributed Louvain (modularity-optimizing local moves +
     contraction, pure DataFrame iterations) must match networkx Louvain's
@@ -196,14 +206,9 @@ def test_distributed_louvain_matches_networkx(spark):
         assert met["n_communities"] == len(nx_comms)
         assert abs(met["modularity"] - nx_q) < 1e-6
 
-    # ring of cliques — the classic Louvain benchmark (6 cliques of 5,
-    # single-edge ring bridges; contraction must NOT merge the ring)
-    edges = []
-    for c in range(6):
-        ns = [c * 10 + i for i in range(5)]
-        edges += [(a, b, 1.0) for a in ns for b in ns if a < b]
-        edges.append((c * 10, ((c + 1) % 6) * 10 + 1, 1.0))
-    check(edges)
+    # ring of cliques — the classic Louvain benchmark (contraction must
+    # NOT merge the ring)
+    check(_ring_of_cliques())
 
     # two disjoint 4-cliques with mixed-sign weights (|w| optimization)
     neg = [
@@ -211,6 +216,63 @@ def test_distributed_louvain_matches_networkx(spark):
         (1, 2, 0.5), (1, 3, 0.6), (2, 3, 0.7),
     ] + [(10 + a, 10 + b, 0.9) for a in range(4) for b in range(4) if a < b]
     check(neg)
+
+
+def test_louvain_sweep_job_budget(spark, monkeypatch):
+    """A local-move sweep is one checkpoint job graph of at most 6 Spark
+    jobs. Jobs are counted per checkpoint under a job group; the first
+    interval also builds the cached link table. The level loop's
+    partition of the ring of cliques is pinned."""
+    from financial_big_data_spark.ml import graph
+
+    edges = _ring_of_cliques()
+    e_df = spark.createDataFrame(edges, "src long, dst long, weight double")
+    cur = e_df.select(
+        F.col("src").alias("a"), F.col("dst").alias("b"), F.col("weight").alias("w")
+    )
+    sc = spark.sparkContext
+    group = "louvain_sweep_budget"
+    seen = []
+    ckpt = graph._ckpt
+
+    def counted_ckpt(df):
+        out = ckpt(df)
+        seen.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return out
+
+    monkeypatch.setattr(graph, "_ckpt", counted_ckpt)
+    sc.setJobGroup(group, group)
+    try:
+        graph._louvain_phase1(cur, float(len(edges)), 10, 1e-12)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.undo()
+    per_sweep = [b - a for a, b in zip(seen, seen[1:])]
+    assert len(per_sweep) >= 3, seen
+    assert per_sweep[0] <= 9 and max(per_sweep[1:]) <= 6, per_sweep
+
+    part = {r.node: r.community for r in graph.louvain_distributed(e_df).collect()}
+    reps = {0: 4, 10: 14, 20: 23, 30: 33, 40: 43, 50: 53}
+    assert part == {base + i: rep for base, rep in reps.items() for i in range(5)}
+
+
+def test_louvain_driver_finish_ignores_row_order():
+    """Seeded networkx Louvain depends on insertion order; the finish pass
+    must give the same partition however the contracted rows arrived."""
+    import random
+
+    from financial_big_data_spark.ml.graph import _louvain_driver_finish
+
+    rnd = random.Random(1)
+    rows = [
+        (a, b, 1.0) for a in range(30) for b in range(a + 1, 30) if rnd.random() < 0.15
+    ]
+    want = sorted(_louvain_driver_finish(rows))
+    for seed in range(3):
+        shuffled = rows[:]
+        random.Random(seed).shuffle(shuffled)
+        assert sorted(_louvain_driver_finish(shuffled)) == want
 
 
 def test_lpa_modularity_near_louvain(spark):
@@ -381,3 +443,15 @@ def test_ckpt_resets_plan_statistics(spark):
         f"iterated checkpoint stats grew to {size_bits(cur)} bits — "
         "_ckpt's statistics reset has regressed to plain localCheckpoint"
     )
+
+
+def test_ckpt_warns_on_private_api_drift(spark, monkeypatch):
+    """The plain-checkpoint fallback brings the stats growth back, so it
+    must not be silent."""
+    from financial_big_data_spark.ml.graph import _ckpt
+
+    df = spark.range(3)
+    plain = object()  # has no _jdf: the statistics reset cannot run
+    monkeypatch.setattr(type(df), "localCheckpoint", lambda self, eager=True: plain)
+    with pytest.warns(RuntimeWarning, match="statistics reset unavailable"):
+        assert _ckpt(df) is plain
