@@ -6,8 +6,9 @@ no MLlib implementation; the reference runs them on ≤100-node symbol graphs
 distributed (correlation matrix → edge list → ε-graph) and runs the tiny
 graph algorithms driver-side (networkx). When the node count outgrows the
 driver, the implemented scale path is ``ml.graph``: pure-DataFrame
-label_propagation (community detection) and connected_components (the
-ε-graph labelling step of distributed DBSCAN) over the same edge DataFrame.
+``louvain_distributed_df`` (community detection) and connected_components
+(the ε-graph labelling step of distributed DBSCAN) over the same edge
+DataFrame.
 """
 
 from __future__ import annotations
@@ -70,60 +71,70 @@ def pca_project(
     return out.withColumn("pc", vector_to_array("_pc")).drop("_features", "_pc")
 
 
-def correlation_matrix(
-    df: DataFrame,
-    key: str,
-    time: str,
-    value: str,
-    mode: str = "auto",
-    pivot_threshold: int = 200,
-    distributed_threshold: int = 5000,
-) -> DataFrame:
+# Route bounds on the key count k: the self-join up to the first, the Gram
+# matrix up to the second, distributed column similarities above it.
+_RELATIONAL_MAX_KEYS = 200
+_GRAM_MAX_KEYS = 5000
+
+
+def correlation_matrix(df: DataFrame, key: str, time: str, value: str) -> DataFrame:
     """A8/J6: key×key Pearson correlation, physically routed by key count.
 
     Input: long-form (key, time, value). Output: (key_a, key_b, corr, n)
-    for key_a < key_b. Three physical plans:
+    for key_a < key_b. The sorted non-null keys are collected once (k
+    names, bounded metadata) and pick one of three physical plans:
 
-    - **relational** (k ≤ pivot_threshold): self-join on ``time`` + one
-      hash aggregate per pair. Exact pairwise-complete semantics (each
-      pair correlates over the timestamps where BOTH keys have a value) —
-      but the join materializes k² rows *per timestamp* before the
-      aggregate, which dies at k ≥ ~1e4.
-    - **pivoted** (pivot_threshold < k ≤ distributed_threshold):
-      ``groupBy(time).pivot(key)`` → one vector per timestamp →
-      ``ml.stat.Correlation`` computes the full Gram matrix in ONE pass
-      over O(T·k) data — no self-join in the plan. Rows with any missing
-      key are dropped (listwise completion, the standard matrix-path
-      semantics); on a complete panel (the reference's aligned hourly
-      bars, market_analysis.py:89) both paths are identical. The k×k
-      matrix and its k(k-1)/2 output pairs materialize driver-side —
-      honest ceiling k ≈ 5e3 (≈200 MB matrix, ≈1.2e7 pairs).
-    - **distributed** (k > distributed_threshold): mean-center each
-      column, then ``RowMatrix.columnSimilarities()`` — cosine of
-      centered columns IS Pearson r, and the result is a DISTRIBUTED
-      entries matrix: nothing k²-sized ever touches the driver, removing
-      the ceiling entirely. Same listwise semantics. Exact (no DIMSUM
-      sampling). Caveats: pairs whose centered dot product is exactly 0
-      are absent from the sparse entries (reported corr would be 0) and
-      zero-variance series yield no entries (the other paths report
-      NULL) — both documented below, irrelevant on real panels.
+    - **relational** (k ≤ 200): self-join on ``time`` + one hash
+      aggregate per pair. Exact pairwise-complete semantics (each pair
+      correlates over the timestamps where BOTH keys have a value) — but
+      the join materializes k² rows *per timestamp* before the aggregate,
+      which dies at k ≥ ~1e4.
+    - **gram** (200 < k ≤ 5000): ``ml.stat.Correlation`` computes the
+      full Gram matrix in ONE pass over O(T·k) data — no self-join in the
+      plan. The k×k matrix and its k(k-1)/2 output pairs materialize
+      driver-side — honest ceiling k ≈ 5e3 (≈200 MB matrix, ≈1.2e7 pairs).
+    - **distributed** (k > 5000): centre each column by its mean, then
+      ``RowMatrix.columnSimilarities()`` — cosine of centred columns IS
+      Pearson r, and the result is a DISTRIBUTED entries matrix: nothing
+      k²-sized ever touches the driver. Exact (no DIMSUM sampling).
+      Caveats: pairs whose centred dot product is exactly 0 are absent
+      from the sparse entries (reported corr would be 0) and zero-variance
+      series yield no entries (the other routes report NULL) — irrelevant
+      on real panels.
+
+    The two matrix routes share one vector builder (``_complete_vectors``):
+    NULL values drop, duplicate (key, time) rows collapse to their mean,
+    and only timestamps where every key has a value survive (listwise
+    completion, the standard matrix-path semantics). On a complete panel
+    without duplicates (the reference's aligned hourly bars,
+    market_analysis.py:89) all three routes agree. The vectors are built
+    by a narrow per-timestamp ``collect_list``, never a k-column pivot,
+    so whole-stage codegen stays within its method-size limit at any k.
 
     Pearson r is normalization-invariant, so the relational population
     moments and MLlib's sample moments agree bit-for-bit up to float
     association order.
     """
-    if mode == "relational":
+    keys = sorted(r[0] for r in df.select(key).distinct().dropna().collect())
+    if len(keys) <= _RELATIONAL_MAX_KEYS:
         return _correlation_matrix_relational(df, key, time, value)
-    if mode == "pivoted":
-        return _correlation_matrix_pivoted(df, key, time, value)
-    if mode == "distributed":
-        return _correlation_matrix_distributed(df, key, time, value)
-    n_keys = df.select(key).distinct().count()
-    if n_keys <= pivot_threshold:
-        return _correlation_matrix_relational(df, key, time, value)
-    if n_keys <= distributed_threshold:
-        return _correlation_matrix_pivoted(df, key, time, value)
-    return _correlation_matrix_distributed(df, key, time, value)
+    if len(keys) <= _GRAM_MAX_KEYS:
+        return _correlation_matrix_gram(df, key, time, value, keys)
+    return _correlation_matrix_distributed(df, key, time, value, keys)
+
+
+def _pair_schema(df: DataFrame, key: str):
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    key_type = df.schema[key].dataType
+    return StructType(
+        [
+            StructField("key_a", key_type),
+            StructField("key_b", key_type),
+            StructField("corr", DoubleType()),
+            StructField("n", LongType()),
+        ]
+    )
 
 
 def _correlation_matrix_relational(df: DataFrame, key: str, time: str, value: str) -> DataFrame:
@@ -143,41 +154,55 @@ def _correlation_matrix_relational(df: DataFrame, key: str, time: str, value: st
     )
 
 
-def _correlation_matrix_pivoted(df: DataFrame, key: str, time: str, value: str) -> DataFrame:
+def _complete_vectors(
+    df: DataFrame, key: str, time: str, value: str, keys: list
+) -> tuple[DataFrame, DataFrame]:
+    """One ``_v`` vector per timestamp where all k ``keys`` have a value,
+    component i holding ``keys[i]``; returns (vectors, key index).
+
+    NULL values drop and duplicate (key, time) rows collapse to their mean
+    FIRST, so the ``size == k`` filter counts distinct keys. The key→index
+    map is the k sorted names (bounded metadata), broadcast.
+    """
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    idx = df.sparkSession.createDataFrame(
+        [(kk, i) for i, kk in enumerate(keys)],
+        StructType([StructField("_k", df.schema[key].dataType), StructField("_ki", IntegerType())]),
+    )
+    vecs = (
+        df.select(F.col(key).alias("_k"), F.col(time).alias("_t"), F.col(value).alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .groupBy("_k", "_t")
+        .agg(F.avg("_v").alias("_v"))
+        .join(F.broadcast(idx), on="_k")
+        .groupBy("_t")
+        .agg(F.array_sort(F.collect_list(F.struct("_ki", "_v"))).alias("_s"))
+        .where(F.size("_s") == len(keys))
+        .select(array_to_vector(F.transform("_s", lambda s: s["_v"])).alias("_v"))
+    )
+    return vecs, idx
+
+
+def _correlation_matrix_gram(
+    df: DataFrame, key: str, time: str, value: str, keys: list
+) -> DataFrame:
     """One-pass Gram-matrix correlation — no self-join anywhere in the plan."""
     import math
 
     from pyspark.ml.stat import Correlation
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     spark = df.sparkSession
-    keys = sorted(r[0] for r in df.select(key).distinct().collect())
-    k = len(keys)
-    key_type = df.schema[key].dataType
-    out_schema = StructType(
-        [
-            StructField("key_a", key_type),
-            StructField("key_b", key_type),
-            StructField("corr", DoubleType()),
-            StructField("n", LongType()),
-        ]
-    )
-    if k < 2:
-        return spark.createDataFrame([], out_schema)
-    # pivot to one row per timestamp; sanitized column names so arbitrary
-    # key values can't collide with DataFrame column syntax
-    cols = [f"_k{i}" for i in range(k)]
-    wide = (
-        df.groupBy(time).pivot(key, keys).agg(F.first(value)).toDF(time, *cols)
-    )
-    assembler = VectorAssembler(inputCols=cols, outputCol="_v", handleInvalid="skip")
-    vecs = assembler.transform(wide.dropna()).select("_v").cache()
+    schema = _pair_schema(df, key)
+    vecs = _complete_vectors(df, key, time, value, keys)[0].cache()
     n_complete = vecs.count()
     if n_complete == 0:
         vecs.unpersist()
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], schema)
     mat = Correlation.corr(vecs, "_v", "pearson").head()[0].toArray()
     vecs.unpersist()
+    k = len(keys)
     rows = [
         (
             keys[i],
@@ -188,90 +213,43 @@ def _correlation_matrix_pivoted(df: DataFrame, key: str, time: str, value: str) 
         for i in range(k)
         for j in range(i + 1, k)
     ]
-    return spark.createDataFrame(rows, out_schema)
+    return spark.createDataFrame(rows, schema)
 
 
 def _correlation_matrix_distributed(
-    df: DataFrame, key: str, time: str, value: str
+    df: DataFrame, key: str, time: str, value: str, keys: list
 ) -> DataFrame:
-    """Unbounded-k tier: Pearson via cosine of mean-centered columns.
+    """Unbounded-k tier: Pearson via cosine of mean-centred columns.
 
-    ``RowMatrix.columnSimilarities()`` (exact mode) computes the upper
-    triangle of the column-cosine matrix as a DISTRIBUTED CoordinateMatrix
-    — cos(a−ā, b−b̄) = Pearson r — so the k(k-1)/2 output pairs live in a
-    DataFrame, never on the driver. One shuffle builds the per-timestamp
-    vectors; the Gramian accumulates via treeAggregate-style map-side
-    combining inside MLlib.
+    ``Summarizer`` returns the k column means (bounded metadata, like the
+    k key names); each vector is centred as it enters the ``RowMatrix``.
+    ``columnSimilarities()`` (exact mode) computes the upper triangle of
+    the column-cosine matrix as a DISTRIBUTED CoordinateMatrix —
+    cos(a−ā, b−b̄) = Pearson r — so the k(k-1)/2 output pairs live in a
+    DataFrame, never on the driver. The returned frame is lazy over the
+    vectors, so they are ``tracked_persist``-ed, not unpersisted here.
     """
+    from pyspark.ml.stat import Summarizer
     from pyspark.mllib.linalg import Vectors
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    spark = df.sparkSession
-    key_type = df.schema[key].dataType
-    out_schema = StructType(
-        [
-            StructField("key_a", key_type),
-            StructField("key_b", key_type),
-            StructField("corr", DoubleType()),
-            StructField("n", LongType()),
-        ]
-    )
-    # the key→column-index map is k NAMES (bounded metadata, like the
-    # pivoted path's key list) — only the k² pair space must stay off the
-    # driver, and it does
-    keys = sorted(r[0] for r in df.select(key).distinct().collect())
-    k = len(keys)
-    if k < 2:
-        return spark.createDataFrame([], out_schema)
-    idx_df = spark.createDataFrame(
-        [(kk, i) for i, kk in enumerate(keys)],
-        StructType([StructField("_k", key_type), StructField("_ki", IntegerType())]),
-    )
-
-    clean = df.select(F.col(key).alias("_k"), F.col(time).alias("_t"), F.col(value).alias("_v")) \
-        .where(F.col("_v").isNotNull())
-    # duplicate (key, time) rows collapse to their mean FIRST — a plain
-    # count(*) completeness filter could pass a timestamp where one key
-    # appears twice and another is missing, mis-sizing the collect_list
-    # vectors and silently corrupting the RowMatrix (ADVICE r3); after the
-    # mean-collapse, count(*) per timestamp IS the distinct-key count
-    clean = clean.groupBy("_k", "_t").agg(F.avg("_v").alias("_v"))
-    # listwise completion: keep timestamps where every key has a value
-    complete = (
-        clean.groupBy("_t").agg(F.count(F.lit(1)).alias("_c")).where(F.col("_c") == k)
-        .select("_t")
-    )
-    panel = clean.join(complete, on="_t")
-    means = panel.groupBy("_k").agg(F.avg("_v").alias("_mu"))
-    centered = (
-        panel.join(means, on="_k")
-        .join(F.broadcast(idx_df), on="_k")
-        .select("_t", "_ki", (F.col("_v") - F.col("_mu")).alias("_cv"))
-    )
-    rows = centered.groupBy("_t").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_ki", "_cv"))), lambda s: s["_cv"]
-        ).alias("_vec")
-    )
-    n_complete = rows.count()
-    if n_complete == 0:
-        return spark.createDataFrame([], out_schema)
     from pyspark.mllib.linalg.distributed import RowMatrix
 
-    rm = RowMatrix(rows.select("_vec").rdd.map(lambda r: Vectors.dense(r._vec)))
+    from ..cache import tracked_persist
+
+    spark = df.sparkSession
+    vecs, idx = _complete_vectors(df, key, time, value, keys)
+    vecs = tracked_persist(vecs)
+    n_complete = vecs.count()
+    if n_complete == 0:  # Summarizer refuses an empty input
+        return spark.createDataFrame([], _pair_schema(df, key))
+    mu = vecs.select(Summarizer.mean(vecs["_v"])).head()[0].toArray()
+    rm = RowMatrix(vecs.rdd.map(lambda r: Vectors.dense(r._v.toArray() - mu)))
     sims = rm.columnSimilarities()  # exact; upper triangle (i < j)
     ent = spark.createDataFrame(
         sims.entries.map(lambda e: (int(e.i), int(e.j), float(e.value))),
         "i int, j int, corr double",
     )
-    ia = idx_df.select(F.col("_ki").alias("i"), F.col("_k").alias("key_a"))
-    ib = idx_df.select(F.col("_ki").alias("j"), F.col("_k").alias("key_b"))
+    ia = idx.select(F.col("_ki").alias("i"), F.col("_k").alias("key_a"))
+    ib = idx.select(F.col("_ki").alias("j"), F.col("_k").alias("key_b"))
     return (
         ent.join(F.broadcast(ia), on="i")
         .join(F.broadcast(ib), on="j")
@@ -294,8 +272,8 @@ def louvain_communities_df(
 
     The reference runs python-louvain on ≤100 nodes (market_analysis.py:321);
     the collected edge list here is the same size regardless of fact-data
-    scale (one node per series). Scale path for >1e5 nodes: GraphFrames LPA
-    on the ``edges`` DataFrame.
+    scale (one node per series). Scale path for >1e5 nodes:
+    ``ml.graph.louvain_distributed_df`` on the same ``edges`` DataFrame.
     Returns ((node, community) DataFrame, {modularity, n_communities}).
     """
     import networkx as nx

@@ -145,7 +145,8 @@ SELF_JOIN_JUSTIFIED: dict[str, str] = {
     ),
     "financial_big_data_spark/ml/clustering.py": (
         "_correlation_matrix_relational: size-routed — only taken when "
-        "n_keys ≤ pivot_threshold (bounded series count; k² intended)"
+        "n_keys ≤ _RELATIONAL_MAX_KEYS = 200 (bounded series count; k² "
+        "intended)"
     ),
     "financial_big_data_spark/streaming/ingest.py": (
         "within-batch LSH candidates: join keyed on (band, key) buckets "
