@@ -1505,19 +1505,18 @@ def main() -> None:
     # (local moves + contraction, 4 levels x 4 sweeps — affordable since
     # ml/graph._ckpt stopped iterated checkpoints from compounding plan
     # statistics into million-bit BigInts; deeper budgets used to blow
-    # past 10 minutes, now each level is roughly linear), LPA at the
-    # same sweep budget, and the driver networkx fallback on the same
-    # graph. r8 (VERDICT r7 #1): per-sweep re-drawn hash gating + hashed
-    # tie-breaks + desired-move termination in the sweeps, and a
-    # sequential driver finish once contraction shrinks the graph under
-    # the bounded-collect cap, close the quality gap — the scale path now
-    # recovers the planted partition (Q~0.79, 200 comms, measured 58.7s
-    # vs r7's Q 0.57/103 at 61s). Its value is capacity AND quality:
-    # level-0 sweeps are pure DataFrame joins (edge lists beyond driver
-    # memory), the finish runs on the supernode graph only.
+    # past 10 minutes, now each level is roughly linear), and the driver
+    # networkx fallback on the same graph. r8 (VERDICT r7 #1): per-sweep
+    # re-drawn hash gating + hashed tie-breaks + desired-move termination
+    # in the sweeps, and a sequential driver finish once contraction
+    # shrinks the graph under the bounded-collect cap, close the quality
+    # gap — the scale path now recovers the planted partition (Q~0.79,
+    # 200 comms, measured 58.7s vs r7's Q 0.57/103 at 61s). Its value is
+    # capacity AND quality: level-0 sweeps are pure DataFrame joins (edge
+    # lists beyond driver memory), the finish runs on the supernode graph
+    # only.
     from financial_big_data_spark.ml.clustering import louvain_communities_df
     from financial_big_data_spark.ml.graph import (
-        label_propagation,
         louvain_distributed,
         modularity as graph_modularity,
     )
@@ -1563,11 +1562,6 @@ def main() -> None:
     louvain_scale["louvain_modularity"] = round(graph_modularity(_ledges, _lcom), 4)
     louvain_scale["louvain_communities"] = _lcom.select("community").distinct().count()
     louvain_scale["louvain_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    _lpa = label_propagation(_ledges, max_iter=4)
-    louvain_scale["lpa_modularity"] = round(graph_modularity(_ledges, _lpa), 4)
-    louvain_scale["lpa_communities"] = _lpa.select("community").distinct().count()
-    louvain_scale["lpa_sec"] = round(time.time() - t0, 3)
     t0 = time.time()
     _, _dstats = louvain_communities_df(
         spark, _ledges.withColumn("weight", F.lit(1.0))

@@ -274,20 +274,20 @@ def louvain_communities_df(
     the collected edge list here is the same size regardless of fact-data
     scale (one node per series). Scale path for >1e5 nodes:
     ``ml.graph.louvain_distributed_df`` on the same ``edges`` DataFrame.
-    Returns ((node, community) DataFrame, {modularity, n_communities}).
+    Returns ((node, community) DataFrame, {modularity, n_communities});
+    the partition does not depend on the order the edge rows arrive in.
     """
-    import networkx as nx
     from networkx.algorithms import community as nxc
 
-    g = nx.Graph()
-    for r in edges.collect():
-        g.add_edge(r.src, r.dst, weight=abs(float(r.weight)))
-    if g.number_of_edges() == 0:
+    from .graph import _nx_louvain
+
+    edge_rows = [(r.src, r.dst, abs(float(r.weight))) for r in edges.collect()]
+    if not edge_rows:
         return spark.createDataFrame([], "node string, community int"), {
             "modularity": 0.0,
             "n_communities": 0,
         }
-    comms = nxc.louvain_communities(g, weight="weight", seed=seed)
+    g, comms = _nx_louvain(edge_rows, seed)
     mod = nxc.modularity(g, comms, weight="weight")
     rows = [(str(n), i) for i, c in enumerate(comms) for n in c]
     return (

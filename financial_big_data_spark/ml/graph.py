@@ -1,14 +1,9 @@
-"""Distributed graph operators: label propagation & connected components.
+"""Distributed graph operators: Louvain, connected components & PageRank.
 
 The driver-side Louvain/DBSCAN in ml.clustering is right for ≤1e4 nodes (one
 node per *series*, tiny by construction). These are the documented scale
 paths implemented as pure DataFrame iterations — no GraphFrames dependency:
 
-- **label_propagation**: synchronous LPA — each node adopts the most common
-  label among its neighbors; k rounds of (join edges ↔ labels → count →
-  argmax). Every round is two co-partitioned shuffles on node id; state is
-  one row per node. Community structure ≈ Louvain's for well-separated
-  graphs (modularity-optimal splits differ on ambiguous nodes).
 - **louvain_distributed**: the REAL Louvain — modularity-optimizing local
   moves (hash-gated synchronous sweeps) + graph contraction, entirely
   DataFrame joins/aggregates; matches networkx Louvain's partition quality
@@ -16,15 +11,23 @@ paths implemented as pure DataFrame iterations — no GraphFrames dependency:
   per node carries its community and that community's degree total, the
   candidate scores, stay score and argmax come from one join-aggregate and
   one window sort, and the convergence count is observed on the
-  checkpoint job itself (``_louvain_phase1``).
+  checkpoint job itself (``_louvain_phase1``). Small contracted graphs
+  finish in one seeded networkx Louvain on the driver (``_nx_louvain``,
+  shared with ml.clustering.louvain_communities_df).
 - **connected_components**: iterative min-label flooding (each node takes
   the min component id in its neighborhood) — the DBSCAN ε-graph labeller
   at scale. Converges in O(graph diameter) rounds.
+- **pagerank**: power iteration, optionally personalized, with an
+  optional L1 convergence test.
 
-All of them checkpoint state per round via ``_ckpt`` — localCheckpoint to
-cut the growing lineage PLUS a statistics reset (see ``_ckpt``: without
-it, iterated checkpoints compound plan statistics geometrically and the
-driver ends up multiplying million-bit BigInts per job).
+Every loop has one shape: a round ends with ONE ``_ckpt`` of the next
+state, and a loop that tests convergence reads its metric through an
+``Observation`` placed after the round's last exchange, so the metric
+arrives with the checkpoint job itself — no separate count job.
+``_ckpt`` is localCheckpoint to cut the growing lineage PLUS a statistics
+reset (without it, iterated checkpoints compound plan statistics
+geometrically and the driver ends up multiplying million-bit BigInts per
+job).
 """
 
 from __future__ import annotations
@@ -78,41 +81,6 @@ def _undirected(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).distinct()
 
 
-def label_propagation(edges: DataFrame, max_iter: int = 10) -> DataFrame:
-    """Synchronous LPA over an (src, dst[, weight]) edge DataFrame.
-
-    Returns (node, community). Deterministic: ties break on the smallest
-    label, and every node starts labeled by its own id.
-    """
-    adj = _undirected(edges).cache()
-    labels = adj.select(F.col("a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    for _ in range(max_iter):
-        neigh = (
-            adj.join(labels, adj.b == labels.node)
-            .groupBy(F.col("a").alias("node"), F.col("label"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        w = Window.partitionBy("node").orderBy(F.desc("n"), "label")
-        new_labels = (
-            neigh.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .select("node", "label")
-        )
-        changed = (
-            labels.alias("old")
-            .join(new_labels.alias("new"), on="node")
-            .where(F.col("old.label") != F.col("new.label"))
-            .count()
-        )
-        labels = _ckpt(new_labels)
-        if changed == 0:
-            break
-    adj.unpersist()
-    return labels.withColumnRenamed("label", "community")
-
-
 def modularity(
     edges: DataFrame, communities: DataFrame, weight: str | None = None
 ) -> float:
@@ -130,7 +98,7 @@ def modularity(
     the driver, nothing node- or edge-sized.
 
     ``edges``: (src, dst[, weight]) with each undirected edge listed once
-    and no self-loops; ``communities``: (node, community), e.g. LPA output.
+    and no self-loops; ``communities``: (node, community), e.g. Louvain output.
     Edges with an endpoint missing from ``communities`` are excluded
     consistently from both m and the degree sums.
     """
@@ -165,29 +133,6 @@ def modularity(
         return 0.0
     m = tot.s / 2.0
     return float(tot.w_in / m - tot.s2 / (4.0 * m * m))
-
-
-def lpa_communities_df(edges: DataFrame, max_iter: int = 10) -> tuple[DataFrame, dict]:
-    """M2 scale path with the driver path's exact contract: LPA communities
-    plus {modularity, n_communities} — so callers get the reference's
-    headline metric whether the graph fits on the driver (networkx Louvain,
-    ml/clustering.louvain_communities_df) or not (this path; everything is
-    DataFrame joins/aggregates).
-
-    ``edges``: (src, dst[, weight]); weight is used by the modularity
-    metric (LPA itself is unweighted here).
-    """
-    comms = label_propagation(edges, max_iter=max_iter)
-    weight = "weight" if "weight" in edges.columns else None
-    # |weight|, matching the driver path (clustering.louvain_communities_df
-    # feeds networkx abs(weight)): corr_edges keeps |corr| > θ, so strongly
-    # NEGATIVE correlations are legitimate edges — signed weights would
-    # shrink m (and can flip Q's sign) for anti-correlated communities
-    # (ADVICE r3 medium).
-    e = edges.withColumn(weight, F.abs(F.col(weight))) if weight else edges
-    q = modularity(e, comms, weight=weight)
-    n = comms.select("community").distinct().count()
-    return comms, {"modularity": q, "n_communities": n}
 
 
 def _louvain_phase1(
@@ -330,6 +275,27 @@ def _louvain_phase1(
     return labels.select("node", "comm")
 
 
+def _nx_louvain(edge_rows: list, seed: int = 42) -> tuple:
+    """Seeded networkx Louvain over collected (a, b, w) rows — the one
+    driver-side Louvain, used by ml/clustering.louvain_communities_df and
+    by the distributed path's finish (``_louvain_driver_finish``).
+
+    Seeded networkx Louvain depends on node/edge insertion order, so the
+    rows are sorted first: the partition does not depend on the order
+    they were collected in. Duplicate (a, b) rows sum their weights.
+    Returns (graph, communities)."""
+    import networkx as nx
+    from networkx.algorithms import community as nxc
+
+    g = nx.Graph()
+    for a, b, w in sorted(edge_rows):
+        if g.has_edge(a, b):
+            g[a][b]["weight"] += w
+        else:
+            g.add_edge(a, b, weight=w)
+    return g, nxc.louvain_communities(g, weight="weight", seed=seed)
+
+
 def _louvain_driver_finish(edge_rows: list, seed: int = 42) -> list:
     """Sequential Louvain (networkx) on a COLLECTED contracted graph —
     the finish pass for supernode graphs small enough to fit the driver.
@@ -351,18 +317,7 @@ def _louvain_driver_finish(edge_rows: list, seed: int = 42) -> list:
     Returns [(supernode, representative)] with representative = the
     smallest member id, preserving the "community = an original node id"
     contract."""
-    import networkx as nx
-    from networkx.algorithms import community as nxc
-
-    # seeded networkx Louvain depends on node/edge insertion order: sort,
-    # so the partition does not depend on the order rows were collected in
-    g = nx.Graph()
-    for a, b, w in sorted(edge_rows):
-        if g.has_edge(a, b):
-            g[a][b]["weight"] += w
-        else:
-            g.add_edge(a, b, weight=w)
-    comms = nxc.louvain_communities(g, weight="weight", seed=seed)
+    _, comms = _nx_louvain(edge_rows, seed)
     out = []
     for c in comms:
         rep = min(c)
@@ -479,9 +434,9 @@ def _louvain_levels(
 
 
 def louvain_distributed_df(edges: DataFrame) -> tuple[DataFrame, dict]:
-    """Same contract as ``lpa_communities_df`` / the driver path:
-    (communities, {modularity, n_communities}) — but via the true
-    modularity-optimizing distributed Louvain."""
+    """Same contract as the driver path (ml/clustering.louvain_communities_df):
+    (communities, {modularity, n_communities}), via distributed Louvain;
+    Q is computed over |weight|, as the driver path does."""
     comms, n = _louvain_levels(
         edges, max_levels=3, max_sweeps=10, tol=1e-12, driver_finish_edges=200_000
     )
@@ -507,11 +462,15 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("neigh_component"))
         )
-        # checkpoint BEFORE the convergence count: the count then joins two
-        # materialized frames instead of re-executing the whole
-        # join+groupBy lineage a second time per iteration
-        new_comp = _ckpt(
+        # a node changes exactly when a neighbor's component is smaller;
+        # the count is observed on the checkpoint job itself
+        changed = Observation()
+        comp = _ckpt(
             comp.join(neigh_min, on="node", how="left")
+            .observe(
+                changed,
+                F.sum((F.col("neigh_component") < F.col("component")).cast("int")).alias("n"),
+            )
             .select(
                 "node",
                 F.least(
@@ -519,14 +478,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
                 ).alias("component"),
             )
         )
-        changed = (
-            comp.alias("old")
-            .join(new_comp.alias("new"), on="node")
-            .where(F.col("old.component") != F.col("new.component"))
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
+        if not changed.get["n"]:
             break
     adj.unpersist()
     return comp
@@ -629,8 +581,8 @@ def pagerank(
     distribution.
 
     ``tol`` adds a convergence early-exit: the L1 rank delta between the
-    two most recent rounds (computed INSIDE the job that materializes the
-    state — no extra join job, no node data on the driver) stops the loop
+    two most recent rounds (observed on the job that checkpoints the
+    state — no extra job, no node data on the driver) stops the loop
     once it drops below ``tol``, capped at ``n_iter`` rounds. At scale a
     converged graph stops paying for dead iterations; ``tol=None``
     (default) keeps the fixed-iteration mode the unrolled-CTE oracles
@@ -647,9 +599,7 @@ def pagerank(
     every k-th round — so with k>1 the loop can overshoot convergence by
     at most k-1 rounds (extra converged rounds only tighten the result;
     the exit criterion itself, L1(rank_t − rank_{t−1}) < tol, is
-    unchanged). The round-12 form paid one job per round purely to read
-    the delta; fusing the test into the interval halves the tol path's
-    job count at interval 2 (optimization guide §2.4).
+    unchanged).
     """
     if checkpoint_interval < 1:
         raise ValueError("checkpoint_interval must be >= 1")
@@ -849,36 +799,23 @@ def pagerank(
                         + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
                     ).alias("rank"),
                 )
-        prev = ranks
         at_ckpt = (_it + 1) % checkpoint_interval == 0 or _it == n_iter - 1
-        if tol is not None and at_ckpt:
-            # fuse the L1 delta INTO the checkpointed state: the prev-join
-            # (prev = the previous ROUND's frame — un-checkpointed inside
-            # an interval, so its lineage re-evaluates within this same
-            # job, never as a separate one) runs inside the job that
-            # materializes the new ranks, and the convergence test is a
-            # trivial aggregate over already-checkpointed rows. The
-            # round-11 form joined two checkpointed frames in a SECOND
-            # full job per round (2 exchanges + agg) purely to read the
-            # delta; the round-12 form still checkpointed every round —
-            # fusing the test to the interval halves the tol path's job
-            # count at interval 2 (guide §2.4). Rank values are
-            # untouched: `_d` is a carried column, dropped before the
-            # state feeds the next round.
-            with_d = new.join(
-                prev.select("node", F.col("rank").alias("_prev")), "node"
-            ).select(
-                "node", "rank", F.abs(F.col("rank") - F.col("_prev")).alias("_d")
-            )
-            ck = _ckpt(with_d)
-            delta = ck.agg(F.sum("_d").alias("d")).first()["d"]
-            ranks = ck.drop("_d")
-            if delta is not None and delta < tol:
-                break
-        elif at_ckpt:
+        if not at_ckpt:
+            ranks = new
+        elif tol is None:
             ranks = _ckpt(new)
         else:
-            ranks = new
+            # the L1 delta against the previous round is observed on the
+            # checkpoint job itself, after the join's exchange
+            delta = Observation()
+            ranks = _ckpt(
+                new.join(ranks.select("node", F.col("rank").alias("_prev")), "node")
+                .observe(delta, F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("d"))
+                .select("node", "rank")
+            )
+            d = delta.get["d"]
+            if d is not None and d < tol:
+                break
     if iter_edges is not norm:
         iter_edges.unpersist()
     norm.unpersist()

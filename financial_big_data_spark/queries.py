@@ -3100,13 +3100,14 @@ def q_emb_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ev_user_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2 scale path in the gate: LPA communities over the user correlation
-    graph + Newman modularity computed as DataFrame aggregates (ml/graph.py)
-    — the distributed mirror of q_ev_user_communities' driver-side Louvain,
-    reporting the reference's headline metric (market_analysis.py:321).
-    Rows-only: iterative LPA has no SQL equivalent."""
+    """M2 scale path in the gate: distributed Louvain communities over the
+    user correlation graph + Newman modularity computed as DataFrame
+    aggregates (ml/graph.py) — the distributed mirror of
+    q_ev_user_communities' driver-side Louvain, reporting the reference's
+    headline metric (market_analysis.py:321). Rows-only: iterative Louvain
+    has no SQL equivalent."""
     from .ml.clustering import corr_edges, correlation_matrix
-    from .ml.graph import lpa_communities_df
+    from .ml.graph import louvain_distributed_df
 
     ev = _events(spark, sf_dir).where(F.col("user_id") < 300)
     hourly = ev.groupBy(
@@ -3115,7 +3116,7 @@ def q_ev_user_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.avg("value").alias("v"))
     corr = correlation_matrix(hourly, key="uid", time="hr", value="v")
     edges = corr_edges(corr, threshold=0.1)
-    _comms, metrics = lpa_communities_df(edges)
+    _comms, metrics = louvain_distributed_df(edges)
     return spark.createDataFrame(
         [(float(metrics["modularity"]), int(metrics["n_communities"]))],
         "modularity double, n_communities int",
@@ -5952,7 +5953,7 @@ def q_ev_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ev_type_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity, per community, of a DETERMINISTIC partition —
     each user's favorite event type (count desc, type asc) — over the
-    co-occurrence graph. ev_user_modularity reports Q for iterative LPA
+    co-occurrence graph. ev_user_modularity reports Q for iterative Louvain
     partitions (rows-only by necessity); this query hash-checks the
     modularity ARITHMETIC itself cross-engine on a partition both engines
     can derive: w_in, degree sums, and per-community contributions
@@ -6094,9 +6095,9 @@ def q_ev_user_cc_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pairwise-complete hourly-series Pearson, ≥4 co-present hours,
     r ≥ 0.35) → connected components → canonical min-id labels, via the
     same size-routed pair_clusters the dedup paths use. This oracle-backs
-    the GRAPH BUILD + LABELING of the community pipeline; the Louvain /
-    LPA optimizers on top remain rows-only (`ev_user_communities`,
-    `ev_user_modularity`) as genuinely iterative."""
+    the GRAPH BUILD + LABELING of the community pipeline; the driver and
+    distributed Louvain optimizers on top remain rows-only
+    (`ev_user_communities`, `ev_user_modularity`) as genuinely iterative."""
     from .operators.dedup import pair_clusters
 
     ev = _events(spark, sf_dir).where(F.col("user_id") < 200)

@@ -65,6 +65,42 @@ def bars_df(spark, bars_pdf):
     return spark.createDataFrame(bars_pdf)
 
 
+@pytest.fixture
+def ckpt_jobs(spark, monkeypatch):
+    """``run(fn, group)`` calls ``fn`` under a Spark job group and returns,
+    for every ``ml.graph._ckpt`` it makes, the group's job count just
+    before and just after that checkpoint: the job budget of each round
+    of an iterative graph loop, and the jobs it spends outside them."""
+    from financial_big_data_spark.ml import graph
+
+    sc = spark.sparkContext
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run(fn, group):
+        marks = []
+        ckpt = graph._ckpt
+
+        def counted_ckpt(df):
+            before = jobs(group)
+            out = ckpt(df)
+            marks.append((before, jobs(group)))
+            return out
+
+        with monkeypatch.context() as mp:
+            mp.setattr(graph, "_ckpt", counted_ckpt)
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        return marks
+
+    return run
+
+
 def assert_series_close(spark_vals, pandas_vals, atol=1e-9, name=""):
     a = np.asarray(spark_vals, dtype=float)
     b = np.asarray(pandas_vals, dtype=float)
@@ -151,8 +187,8 @@ SLOW_TESTS: dict[str, set[str]] = {
     "test_graph_skew": {
         "test_connected_components_chain",
         "test_distributed_louvain_matches_networkx",
-        "test_lpa_modularity_near_louvain",
-        "test_lpa_modularity_uses_abs_weights",
+        "test_distributed_modularity_near_driver_louvain",
+        "test_distributed_modularity_uses_abs_weights",
     },
     "test_hard_fixture": {
         "test_lstm_beats_persistence_by_margin",
@@ -217,6 +253,9 @@ SLOW_TESTS: dict[str, set[str]] = {
     },
     "test_rangejoin": {
         "test_range_join_property_matches_theta",
+    },
+    "test_registry_contract": {
+        "test_user_modularity_finds_communities",
     },
     "test_stats_dedup": {
         "test_cap_truncation_signal_fires_on_hot_bucket",

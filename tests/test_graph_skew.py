@@ -1,11 +1,12 @@
-"""Distributed LPA / connected components + skew-mitigation operators."""
+"""Distributed Louvain / connected components / modularity, the loop job
+budgets, and the skew-mitigation operators."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from financial_big_data_spark.ml.graph import connected_components, label_propagation
+from financial_big_data_spark.ml.graph import connected_components
 from financial_big_data_spark.operators.skew import salted_agg, salted_count, salted_join
 
 
@@ -24,18 +25,27 @@ def test_connected_components_two_cliques(spark):
     assert {comp[10 + i] for i in range(4)} == {10}
 
 
-def test_label_propagation_two_cliques(spark):
-    lab = {r.node: r.community for r in label_propagation(_two_cliques(spark)).collect()}
-    assert len({lab[i] for i in range(4)}) == 1
-    assert len({lab[10 + i] for i in range(4)}) == 1
-    assert lab[0] != lab[10]
-
-
 def test_connected_components_chain(spark):
     # a path graph: one component, diameter > 1 iteration
     edges = spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
     comp = connected_components(edges)
     assert comp.select("component").distinct().count() == 1
+
+
+def test_connected_components_round_job_budget(spark, ckpt_jobs):
+    """Each flooding round is one checkpoint job graph and nothing else:
+    the convergence count is observed on the checkpoint job, so no job
+    runs between two checkpoints. The 13-node chain needs 12 moving
+    rounds plus the round that observes no change."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
+    marks = ckpt_jobs(
+        lambda: connected_components(edges).collect(), "cc_round_budget"
+    )
+    assert len(marks) == 13, marks
+    between = [b0 - a1 for (_, a1), (b0, _) in zip(marks, marks[1:])]
+    assert between == [0] * 12, marks
+    per_round = [b - a for (_, a), (_, b) in zip(marks, marks[1:])]
+    assert max(per_round) <= 7, per_round
 
 
 @pytest.fixture(scope="module")
@@ -116,14 +126,14 @@ def test_modularity_matches_networkx(spark):
     assert abs(modularity(e_df, c_df) - expected_u) < 1e-9
 
 
-def test_lpa_modularity_uses_abs_weights(spark):
+def test_distributed_modularity_uses_abs_weights(spark):
     """corr_edges keeps |corr| > θ, so strongly NEGATIVE weights are routine
-    edges; the LPA path must report Q over |w| exactly like the driver path
-    (ADVICE r3 medium: signed weights shrink m — the `if not m` guard only
-    catches 0 — and can distort or sign-flip Q)."""
-    from financial_big_data_spark.ml.graph import lpa_communities_df, modularity
+    edges; the distributed path must report Q over |w| exactly like the
+    driver path (ADVICE r3 medium: signed weights shrink m — the `if not m`
+    guard only catches 0 — and can distort or sign-flip Q)."""
+    from financial_big_data_spark.ml.graph import louvain_distributed_df, modularity
 
-    # two disjoint 4-cliques → LPA finds 2 communities; clique A is mostly
+    # two disjoint 4-cliques → 2 communities; clique A is mostly
     # anti-correlated (negative weights), clique B positive, so the signed
     # and |w| computations diverge on a nontrivial partition
     neg_w = [-0.9, -0.8, -0.95, 0.5, 0.6, 0.7]
@@ -133,7 +143,7 @@ def test_lpa_modularity_uses_abs_weights(spark):
         (a, b, 0.9) for a, b in pairs_b
     ]
     e_df = spark.createDataFrame(edges, "src long, dst long, weight double")
-    comms, metrics = lpa_communities_df(e_df)
+    comms, metrics = louvain_distributed_df(e_df)
     assert metrics["n_communities"] == 2
     abs_df = e_df.withColumn("weight", F.abs("weight"))
     expected = modularity(abs_df, comms, weight="weight")
@@ -144,16 +154,16 @@ def test_lpa_modularity_uses_abs_weights(spark):
     assert abs(signed - expected) > 0.05
 
 
-def test_lpa_modularity_planted_two_densities(spark):
+def test_distributed_modularity_planted_two_densities(spark):
     """BASELINE.md quality bar (±0.05): two planted communities at DIFFERENT
-    edge densities (0.9 vs 0.5) joined by two bridges — LPA's modularity
-    must land within ±0.05 of networkx Louvain's on the same graph
+    edge densities (0.9 vs 0.5) joined by two bridges — distributed
+    Louvain's modularity must land within ±0.05 of the driver path's
     (VERDICT r3 next #6; the first fixture only covered near-clique
     communities from near-perfect correlations)."""
     import numpy as np
 
     from financial_big_data_spark.ml.clustering import louvain_communities_df
-    from financial_big_data_spark.ml.graph import lpa_communities_df
+    from financial_big_data_spark.ml.graph import louvain_distributed_df
 
     rng = np.random.default_rng(13)
     edges = []
@@ -167,10 +177,10 @@ def test_lpa_modularity_planted_two_densities(spark):
     edges += [(0, 100, 1.0), (5, 110, 1.0)]  # sparse inter-community bridges
     e_df = spark.createDataFrame(edges, "src long, dst long, weight double")
     _, lv = louvain_communities_df(spark, e_df)
-    _, lp = lpa_communities_df(e_df)
+    _, dist = louvain_distributed_df(e_df)
     assert lv["n_communities"] == 2
-    assert lp["n_communities"] == 2
-    assert abs(lp["modularity"] - lv["modularity"]) < 0.05
+    assert dist["n_communities"] == 2
+    assert abs(dist["modularity"] - lv["modularity"]) < 0.05
 
 
 def _ring_of_cliques():
@@ -218,7 +228,7 @@ def test_distributed_louvain_matches_networkx(spark):
     check(neg)
 
 
-def test_louvain_sweep_job_budget(spark, monkeypatch):
+def test_louvain_sweep_job_budget(spark, ckpt_jobs):
     """A local-move sweep is one checkpoint job graph of at most 6 Spark
     jobs. Jobs are counted per checkpoint under a job group; the first
     interval also builds the cached link table. The level loop's
@@ -230,24 +240,11 @@ def test_louvain_sweep_job_budget(spark, monkeypatch):
     cur = e_df.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("weight").alias("w")
     )
-    sc = spark.sparkContext
-    group = "louvain_sweep_budget"
-    seen = []
-    ckpt = graph._ckpt
-
-    def counted_ckpt(df):
-        out = ckpt(df)
-        seen.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        return out
-
-    monkeypatch.setattr(graph, "_ckpt", counted_ckpt)
-    sc.setJobGroup(group, group)
-    try:
-        graph._louvain_phase1(cur, float(len(edges)), 10, 1e-12)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    monkeypatch.undo()
+    marks = ckpt_jobs(
+        lambda: graph._louvain_phase1(cur, float(len(edges)), 10, 1e-12),
+        "louvain_sweep_budget",
+    )
+    seen = [after for _, after in marks]
     per_sweep = [b - a for a, b in zip(seen, seen[1:])]
     assert len(per_sweep) >= 3, seen
     assert per_sweep[0] <= 9 and max(per_sweep[1:]) <= 6, per_sweep
@@ -275,10 +272,35 @@ def test_louvain_driver_finish_ignores_row_order():
         assert sorted(_louvain_driver_finish(shuffled)) == want
 
 
-def test_lpa_modularity_near_louvain(spark):
-    """VERDICT r2 next #8: the LPA scale path must report the reference's
-    headline metric — its modularity lands within ±0.1 of networkx Louvain
-    on the corr-graph-shaped fixture."""
+def test_driver_louvain_ignores_row_order(spark):
+    """The driver path shares the finish pass's networkx Louvain, so the
+    partition must not depend on the order the edge rows reach the driver
+    either (``coalesce(1)`` keeps each row order through the collect)."""
+    import random
+
+    from financial_big_data_spark.ml.clustering import louvain_communities_df
+
+    rnd = random.Random(1)
+    rows = [
+        (a, b, 1.0) for a in range(30) for b in range(a + 1, 30) if rnd.random() < 0.15
+    ]
+    parts = set()
+    for seed in range(4):
+        shuffled = rows[:]
+        random.Random(seed).shuffle(shuffled)
+        e_df = spark.createDataFrame(shuffled, "src long, dst long, weight double")
+        comms, _ = louvain_communities_df(spark, e_df.coalesce(1))
+        by_comm = {}
+        for r in comms.collect():
+            by_comm.setdefault(r.community, set()).add(r.node)
+        parts.add(frozenset(frozenset(c) for c in by_comm.values()))
+    assert len(parts) == 1
+
+
+def test_distributed_modularity_near_driver_louvain(spark):
+    """VERDICT r2 next #8: the distributed scale path must report the
+    reference's headline metric — its modularity lands within ±0.1 of the
+    driver path's networkx Louvain on the corr-graph-shaped fixture."""
     import numpy as np
 
     from financial_big_data_spark.ml.clustering import (
@@ -286,7 +308,7 @@ def test_lpa_modularity_near_louvain(spark):
         correlation_matrix,
         louvain_communities_df,
     )
-    from financial_big_data_spark.ml.graph import lpa_communities_df
+    from financial_big_data_spark.ml.graph import louvain_distributed_df
 
     rng = np.random.default_rng(7)
     base_a = rng.normal(0, 1, 200).cumsum()
@@ -301,9 +323,10 @@ def test_lpa_modularity_near_louvain(spark):
         correlation_matrix(df, key="key", time="t", value="value"), threshold=0.9
     )
     _, louvain_metrics = louvain_communities_df(spark, edges)
-    lpa_comms, lpa_metrics = lpa_communities_df(edges)
-    assert lpa_metrics["n_communities"] == 2
-    assert abs(lpa_metrics["modularity"] - louvain_metrics["modularity"]) < 0.1
+    _, dist_metrics = louvain_distributed_df(edges)
+    assert dist_metrics["n_communities"] == 2
+    assert abs(dist_metrics["modularity"] - louvain_metrics["modularity"]) < 0.1
+
 
 
 def test_triangle_count_matches_brute_force(spark):

@@ -219,6 +219,22 @@ def test_pagerank_tol_with_interval_matches_converged_fixed(spark):
         assert strided[n] == pytest.approx(fixed[n], abs=1e-9)
 
 
+def test_pagerank_tol_checkpoint_job_budget(spark, ckpt_jobs):
+    """With ``tol`` set, each checkpoint is one job graph and nothing
+    else: the L1 delta is observed on the checkpoint job, so no job runs
+    between two checkpoints, and the loop still exits early."""
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (1, 4)]
+    df = _edges_df(spark, edges)
+    marks = ckpt_jobs(
+        lambda: pagerank(df, n_iter=50, tol=1e-3).collect(), "pagerank_tol_budget"
+    )
+    assert 2 <= len(marks) < 50, marks
+    between = [b0 - a1 for (_, a1), (b0, _) in zip(marks, marks[1:])]
+    assert between == [0] * (len(marks) - 1), marks
+    per_ckpt = [b - a for (_, a), (_, b) in zip(marks, marks[1:])]
+    assert max(per_ckpt) <= 9, per_ckpt
+
+
 def test_pagerank_checkpoint_interval_is_bit_identical(spark):
     # Checkpointing cuts lineage; it must never change the arithmetic.
     # interval=3 with n_iter=7 exercises both a mid-stride checkpoint and
@@ -238,8 +254,8 @@ def test_pagerank_checkpoint_interval_is_bit_identical(spark):
 def test_type_modularity_query_sums_to_modularity_helper(spark, tmp_path):
     """The per-community q_contrib rows of ev_type_modularity must sum to
     exactly what ml.graph.modularity computes for the same partition —
-    tying the oracle-backed relational form to the operator the LPA/
-    Louvain paths report."""
+    tying the oracle-backed relational form to the operator the driver
+    and distributed Louvain paths report."""
     import pyspark.sql.functions as F
 
     from financial_big_data_spark.ml.graph import cooccurrence_pairs, modularity

@@ -28,6 +28,15 @@ def test_registry_query_executes(spark, name):
         assert "SELECT" in sql.upper()
 
 
+def test_user_modularity_finds_communities(spark):
+    """ev_user_modularity runs distributed Louvain over the user
+    correlation graph: at sf0.001 it finds at least two communities with
+    positive modularity."""
+    row = REGISTRY["ev_user_modularity"][0](spark, SF).collect()[0]
+    assert row.n_communities >= 2
+    assert row.modularity > 0
+
+
 def test_registry_ordering_contract():
     """The driver's 50-entry evaluation window must be FULLY used: the
     first 50 registry entries all carry oracle SQL. Entries past the
