@@ -17,6 +17,7 @@ between runs is a superset of this.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -35,9 +36,9 @@ def tracked_persist(
 def release_tracked(blocking: bool = False) -> int:
     """Unpersist every tracked frame; returns how many were released.
 
-    Safe to call repeatedly and with frames from stopped sessions
-    (unpersist failures are swallowed — the JVM ContextCleaner would
-    reclaim those anyway).
+    Safe to call repeatedly and with frames from stopped sessions: their
+    ``Py4JError`` is swallowed, uncounted (the JVM ContextCleaner would
+    reclaim those anyway); any other error propagates.
     """
     n = 0
     while _TRACKED:
@@ -45,6 +46,6 @@ def release_tracked(blocking: bool = False) -> int:
         try:
             df.unpersist(blocking)
             n += 1
-        except Exception:
+        except Py4JError:
             pass
     return n

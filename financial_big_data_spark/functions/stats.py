@@ -191,10 +191,8 @@ def _frozen_range_bounds(df, order_col: str, n_parts: int) -> list:
         step = len(sample) / n_parts
         return sorted({sample[int(i * step)] for i in range(1, n_parts)})
     probs = [i / n_parts for i in range(1, n_parts)]
-    try:
-        return sorted(set(kdf.stat.approxQuantile("_k", probs, 0.001)))
-    except Exception:  # empty input
-        return []
+    # approxQuantile returns [] for an empty input: one unbounded bucket
+    return sorted(set(kdf.stat.approxQuantile("_k", probs, 0.001)))
 
 
 def global_running_sum(

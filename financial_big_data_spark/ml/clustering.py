@@ -4,11 +4,13 @@ MLlib carries K-Means, PCA and silhouette natively. Louvain and DBSCAN have
 no MLlib implementation; the reference runs them on ≤100-node symbol graphs
 (reference market_analysis.py:310-374), so the engine computes the *inputs*
 distributed (correlation matrix → edge list → ε-graph) and runs the tiny
-graph algorithms driver-side (networkx). When the node count outgrows the
-driver, the implemented scale path is ``ml.graph``: pure-DataFrame
-``louvain_distributed_df`` (community detection) and connected_components
-(the ε-graph labelling step of distributed DBSCAN) over the same edge
-DataFrame.
+graph algorithms driver-side (networkx). The correlation matrix is
+pairwise-complete like the reference's pandas ``.corr()``: masked moments
+summed on the executors, or, above 2500 series, listwise distributed column
+similarities. When the node count outgrows the driver, the implemented
+scale path is ``ml.graph``: pure-DataFrame ``louvain_distributed_df``
+(community detection) and connected_components (the ε-graph labelling step
+of distributed DBSCAN) over the same edge DataFrame.
 """
 
 from __future__ import annotations
@@ -71,56 +73,103 @@ def pca_project(
     return out.withColumn("pc", vector_to_array("_pc")).drop("_features", "_pc")
 
 
-# Route bounds on the key count k: the self-join up to the first, the Gram
-# matrix up to the second, distributed column similarities above it.
-_RELATIONAL_MAX_KEYS = 200
-_GRAM_MAX_KEYS = 5000
+# The moments route sums one k×4k float64 matrix on the driver:
+# 4·k²·8 B ≈ 200 MB at k = 2500, the driver budget for bounded metadata.
+# Above it, the distributed tier keeps every k²-sized result in a DataFrame.
+_MOMENTS_MAX_KEYS = 2500
 
 
 def correlation_matrix(df: DataFrame, key: str, time: str, value: str) -> DataFrame:
-    """A8/J6: key×key Pearson correlation, physically routed by key count.
+    """A8/J6: key×key Pearson correlation, pairwise-complete (pandas ``.corr()``).
 
     Input: long-form (key, time, value). Output: (key_a, key_b, corr, n)
-    for key_a < key_b. The sorted non-null keys are collected once (k
-    names, bounded metadata) and pick one of three physical plans:
+    for key_a < key_b, where n counts the timestamps at which BOTH keys
+    have a value and corr is Pearson r over those timestamps — the
+    semantics of the reference's ``.corr()`` (market_analysis.py:89,310,
+    clustering.py:68). NULL values drop, duplicate (key, time) rows
+    collapse to their mean, pairs with n = 0 are omitted, and a zero
+    variance over a pair's overlap gives NULL corr.
 
-    - **relational** (k ≤ 200): self-join on ``time`` + one hash
-      aggregate per pair. Exact pairwise-complete semantics (each pair
-      correlates over the timestamps where BOTH keys have a value) — but
-      the join materializes k² rows *per timestamp* before the aggregate,
-      which dies at k ≥ ~1e4.
-    - **gram** (200 < k ≤ 5000): ``ml.stat.Correlation`` computes the
-      full Gram matrix in ONE pass over O(T·k) data — no self-join in the
-      plan. The k×k matrix and its k(k-1)/2 output pairs materialize
-      driver-side — honest ceiling k ≈ 5e3 (≈200 MB matrix, ≈1.2e7 pairs).
-    - **distributed** (k > 5000): centre each column by its mean, then
-      ``RowMatrix.columnSimilarities()`` — cosine of centred columns IS
-      Pearson r, and the result is a DISTRIBUTED entries matrix: nothing
-      k²-sized ever touches the driver. Exact (no DIMSUM sampling).
-      Caveats: pairs whose centred dot product is exactly 0 are absent
-      from the sparse entries (reported corr would be 0) and zero-variance
-      series yield no entries (the other routes report NULL) — irrelevant
-      on real panels.
+    One ``groupBy(key).agg(avg)`` collect returns the sorted keys and a
+    per-key shift (its mean), then masked moments, all public API:
 
-    The two matrix routes share one vector builder (``_complete_vectors``):
-    NULL values drop, duplicate (key, time) rows collapse to their mean,
-    and only timestamps where every key has a value survive (listwise
-    completion, the standard matrix-path semantics). On a complete panel
-    without duplicates (the reference's aligned hourly bars,
-    market_analysis.py:89) all three routes agree. The vectors are built
-    by a narrow per-timestamp ``collect_list``, never a k-column pivot,
-    so whole-stage codegen stays within its method-size limit at any k.
+    - ``repartition(time)`` → ``mapInPandas``: each partition pivots its
+      timestamps into X (value − shift, 0 where missing) and the presence
+      mask M, and emits row i of ``[XᵀX | XᵀM | (X∘X)ᵀM | MᵀM]`` per key i.
+    - ``groupBy(i)`` + ``Summarizer.sum`` adds the partials on the
+      executors; the driver receives one k×4k sum.
+    - The driver derives every pair's r and n from the sums. They are
+      uncentred, so r carries an error of about ε·(s_key / s_pair)², where
+      s_pair is a key's spread over the pair's overlap and s_key its spread
+      around the shift: ~1e-9 on the 300-user hourly panel, but larger for
+      a two- or three-point overlap whose values nearly coincide.
 
-    Pearson r is normalization-invariant, so the relational population
-    moments and MLlib's sample moments agree bit-for-bit up to float
-    association order.
+    Above ``_MOMENTS_MAX_KEYS`` keys the k×4k sum no longer fits the
+    driver and ``_correlation_matrix_distributed`` (listwise, see there)
+    takes over.
     """
-    keys = sorted(r[0] for r in df.select(key).distinct().dropna().collect())
-    if len(keys) <= _RELATIONAL_MAX_KEYS:
-        return _correlation_matrix_relational(df, key, time, value)
-    if len(keys) <= _GRAM_MAX_KEYS:
-        return _correlation_matrix_gram(df, key, time, value, keys)
-    return _correlation_matrix_distributed(df, key, time, value, keys)
+    import math
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.ml.stat import Summarizer
+
+    spark, v = df.sparkSession, F.col(value).cast("double")
+    present = F.col(key).isNotNull() & v.isNotNull()
+    stats = sorted(df.where(present).groupBy(key).agg(F.avg(v)).collect())
+    keys, k = [r[0] for r in stats], len(stats)
+    if k > _MOMENTS_MAX_KEYS:
+        return _correlation_matrix_distributed(df, key, time, value, keys)
+    pos, shift = pd.Index(keys), np.array([r[1] for r in stats])
+
+    # partials closes over the k keys and shifts: no key-index frame to
+    # join, so no broadcast job
+    def partials(batches):
+        frames = list(batches)
+        if frames:
+            pdf = pd.concat(frames)
+            ki = pos.get_indexer(pdf["_k"])
+            cells = (
+                pdf.assign(_ki=ki, _x=pdf["_v"] - shift[ki])[ki >= 0]
+                .groupby(["_t", "_ki"])["_x"]
+                .mean()
+            )
+            rows, _ = pd.factorize(cells.index.get_level_values(0))
+            cols = cells.index.get_level_values(1)
+            x, m = np.zeros((2, rows.max() + 1, k))
+            x[rows, cols], m[rows, cols] = cells.to_numpy(), 1.0
+            sums = np.hstack([x.T @ x, x.T @ m, (x * x).T @ m, m.T @ m])
+            yield pd.DataFrame({"_i": np.arange(k, dtype=np.int32), "_m": list(sums)})
+
+    summed = (
+        df.where(present & F.col(time).isNotNull())
+        .select(F.col(key).alias("_k"), F.col(time).alias("_t"), v.alias("_v"))
+        .repartition("_t")
+        .mapInPandas(partials, "_i int, _m array<double>")
+        .groupBy("_i")
+        .agg(Summarizer.sum(array_to_vector("_m")).alias("_s"))
+        .collect()
+    )
+    s = np.zeros((k, 4 * k))
+    for r in summed:
+        s[r["_i"]] = r["_s"].toArray()
+    xy, x1, x2, n = (s[:, q * k : (q + 1) * k] for q in range(4))
+    i, j = np.triu_indices(k, 1)
+    n, sx, sy, sxx, syy = n[i, j], x1[i, j], x1[j, i], x2[i, j], x2[j, i]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        vx, vy = sxx - sx * sx / n, syy - sy * sy / n
+        corr = (xy[i, j] - sx * sy / n) / np.sqrt(vx * vy)
+    # a variance within the sums' float rounding of zero (about n·ε·Σx²)
+    # is a series constant over this overlap: NULL, as pandas gives NaN
+    tol = 4 * np.finfo(float).eps * n
+    corr[(vx <= tol * sxx) | (vy <= tol * syy)] = np.nan
+    keep = n > 0
+    pairs = zip(i[keep].tolist(), j[keep].tolist(), corr[keep].tolist(), n[keep].tolist())
+    return spark.createDataFrame(
+        [(keys[a], keys[b], None if math.isnan(c) else c, int(c_n)) for a, b, c, c_n in pairs],
+        _pair_schema(df, key),
+    )
 
 
 def _pair_schema(df: DataFrame, key: str):
@@ -137,41 +186,42 @@ def _pair_schema(df: DataFrame, key: str):
     )
 
 
-def _correlation_matrix_relational(df: DataFrame, key: str, time: str, value: str) -> DataFrame:
-    a, b = df.alias("a"), df.alias("b")
-    # moments-based Pearson: F.corr THROWS DIVIDE_BY_ZERO under ANSI when a
-    # joined pair's series is constant; try_divide yields NULL instead
-    # (pandas NaN semantics for zero-variance series)
-    va, vb = F.col(f"a.{value}"), F.col(f"b.{value}")
-    safe_corr = F.try_divide(
-        F.covar_pop(va, vb), F.stddev_pop(va) * F.stddev_pop(vb)
-    )
-    return (
-        a.join(b, on=time)
-        .where(F.col(f"a.{key}") < F.col(f"b.{key}"))
-        .groupBy(F.col(f"a.{key}").alias("key_a"), F.col(f"b.{key}").alias("key_b"))
-        .agg(safe_corr.alias("corr"), F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _complete_vectors(
+def _correlation_matrix_distributed(
     df: DataFrame, key: str, time: str, value: str, keys: list
-) -> tuple[DataFrame, DataFrame]:
-    """One ``_v`` vector per timestamp where all k ``keys`` have a value,
-    component i holding ``keys[i]``; returns (vectors, key index).
+) -> DataFrame:
+    """Unbounded-k tier: Pearson via cosine of mean-centred columns.
 
-    NULL values drop and duplicate (key, time) rows collapse to their mean
-    FIRST, so the ``size == k`` filter counts distinct keys. The key→index
-    map is the k sorted names (bounded metadata), broadcast.
+    Listwise, unlike the moments route: NULL values drop and duplicate
+    (key, time) rows collapse to their mean, then only timestamps where
+    all k ``keys`` have a value survive, so every pair's n is the same
+    count of complete timestamps. The vectors come from a narrow
+    per-timestamp ``collect_list``, never a k-column pivot, so generated
+    code stays within its method-size limit at any k.
+
+    ``Summarizer`` returns the k column means (bounded metadata, like the
+    k key names); each vector is centred as it enters the ``RowMatrix``.
+    ``columnSimilarities()`` (exact mode) computes the upper triangle of
+    the column-cosine matrix as a DISTRIBUTED CoordinateMatrix —
+    cos(a−ā, b−b̄) = Pearson r — so the k(k-1)/2 output pairs live in a
+    DataFrame, never on the driver. Pairs whose centred dot product is
+    exactly 0 are absent from the sparse entries, and a zero-variance
+    series yields no entries. The returned frame is lazy over the
+    vectors, so they are ``tracked_persist``-ed, not unpersisted here.
     """
     from pyspark.ml.functions import array_to_vector
+    from pyspark.ml.stat import Summarizer
+    from pyspark.mllib.linalg import Vectors
+    from pyspark.mllib.linalg.distributed import RowMatrix
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    idx = df.sparkSession.createDataFrame(
+    from ..cache import tracked_persist
+
+    spark = df.sparkSession
+    idx = spark.createDataFrame(
         [(kk, i) for i, kk in enumerate(keys)],
         StructType([StructField("_k", df.schema[key].dataType), StructField("_ki", IntegerType())]),
     )
-    vecs = (
+    vecs = tracked_persist(
         df.select(F.col(key).alias("_k"), F.col(time).alias("_t"), F.col(value).alias("_v"))
         .where(F.col("_v").isNotNull())
         .groupBy("_k", "_t")
@@ -182,62 +232,6 @@ def _complete_vectors(
         .where(F.size("_s") == len(keys))
         .select(array_to_vector(F.transform("_s", lambda s: s["_v"])).alias("_v"))
     )
-    return vecs, idx
-
-
-def _correlation_matrix_gram(
-    df: DataFrame, key: str, time: str, value: str, keys: list
-) -> DataFrame:
-    """One-pass Gram-matrix correlation — no self-join anywhere in the plan."""
-    import math
-
-    from pyspark.ml.stat import Correlation
-
-    spark = df.sparkSession
-    schema = _pair_schema(df, key)
-    vecs = _complete_vectors(df, key, time, value, keys)[0].cache()
-    n_complete = vecs.count()
-    if n_complete == 0:
-        vecs.unpersist()
-        return spark.createDataFrame([], schema)
-    mat = Correlation.corr(vecs, "_v", "pearson").head()[0].toArray()
-    vecs.unpersist()
-    k = len(keys)
-    rows = [
-        (
-            keys[i],
-            keys[j],
-            None if math.isnan(mat[i, j]) else float(mat[i, j]),
-            n_complete,
-        )
-        for i in range(k)
-        for j in range(i + 1, k)
-    ]
-    return spark.createDataFrame(rows, schema)
-
-
-def _correlation_matrix_distributed(
-    df: DataFrame, key: str, time: str, value: str, keys: list
-) -> DataFrame:
-    """Unbounded-k tier: Pearson via cosine of mean-centred columns.
-
-    ``Summarizer`` returns the k column means (bounded metadata, like the
-    k key names); each vector is centred as it enters the ``RowMatrix``.
-    ``columnSimilarities()`` (exact mode) computes the upper triangle of
-    the column-cosine matrix as a DISTRIBUTED CoordinateMatrix —
-    cos(a−ā, b−b̄) = Pearson r — so the k(k-1)/2 output pairs live in a
-    DataFrame, never on the driver. The returned frame is lazy over the
-    vectors, so they are ``tracked_persist``-ed, not unpersisted here.
-    """
-    from pyspark.ml.stat import Summarizer
-    from pyspark.mllib.linalg import Vectors
-    from pyspark.mllib.linalg.distributed import RowMatrix
-
-    from ..cache import tracked_persist
-
-    spark = df.sparkSession
-    vecs, idx = _complete_vectors(df, key, time, value, keys)
-    vecs = tracked_persist(vecs)
     n_complete = vecs.count()
     if n_complete == 0:  # Summarizer refuses an empty input
         return spark.createDataFrame([], _pair_schema(df, key))

@@ -255,6 +255,7 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_range_join_property_matches_theta",
     },
     "test_registry_contract": {
+        "test_user_communities_found_on_ragged_panel",
         "test_user_modularity_finds_communities",
     },
     "test_stats_dedup": {

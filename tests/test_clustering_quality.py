@@ -237,21 +237,47 @@ def test_dbscan_auto_eps_kneedle(spark, blobs_df):
         assert owner.setdefault(c, blob) == blob  # one cluster never spans blobs
 
 
-def _route_pairs(route: str, df) -> dict:
-    """Pin one correlation route: {(key_a, key_b): (corr, n)}."""
-    import financial_big_data_spark.ml.clustering as mc
-
-    args = (df, "key", "t", "value")
-    if route != "relational":
-        args += (sorted(r.key for r in df.select("key").distinct().collect()),)
-    out = getattr(mc, f"_correlation_matrix_{route}")(*args)
+def _corr_pairs(df) -> dict:
+    """correlation_matrix as {(key_a, key_b): (corr, n)}."""
+    out = correlation_matrix(df, "key", "t", "value")
     return {(r.key_a, r.key_b): (r.corr, r.n) for r in out.collect()}
 
 
+def _pandas_pairs(rows) -> dict:
+    """pandas ``.corr()`` reference, pairwise-complete: {(a, b): (r, n)}
+    for every pair with n ≥ 1 overlapping timestamps, r None where pandas
+    gives NaN. Duplicate (key, t) rows average, NULL values drop."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=["key", "t", "value"]).astype({"value": float})
+    wide = pdf.pivot_table(index="t", columns="key", values="value", aggfunc="mean")
+    r = wide.corr().to_numpy()
+    m = wide.notna().to_numpy(dtype=float)
+    n = m.T @ m
+    keys = list(wide.columns)
+    return {
+        (keys[a], keys[b]): (None if np.isnan(r[a, b]) else float(r[a, b]), int(n[a, b]))
+        for a in range(len(keys))
+        for b in range(a + 1, len(keys))
+        if n[a, b] > 0
+    }
+
+
+def _assert_matches_pandas(got: dict, ref: dict, tol: float) -> None:
+    assert set(got) == set(ref)
+    for pair, (c_ref, n_ref) in ref.items():
+        c, n = got[pair]
+        assert n == n_ref, pair
+        if c_ref is None:
+            assert c is None, pair
+        else:
+            assert c is not None and abs(c - c_ref) < tol, pair
+
+
 def test_correlation_matrix_routed_parity(spark):
-    """The Gram-matrix path must match the relational self-join path on a
-    complete panel at ≥1e3 keys — the scale class where the
-    k²-per-timestamp join dies (VERDICT r2 wrong #1)."""
+    """The moments route must match pandas ``.corr()`` on a complete
+    panel at ≥1e3 keys — the scale class where a k²-per-timestamp
+    self-join dies (VERDICT r2 wrong #1)."""
     import math
 
     rows = [
@@ -260,23 +286,17 @@ def test_correlation_matrix_routed_parity(spark):
         for t in range(12)
     ]
     df = spark.createDataFrame(rows, "key string, t int, value double")
-    rel = _route_pairs("relational", df)
-    piv = _route_pairs("gram", df)
-    assert set(rel) == set(piv) and len(rel) == 1000 * 999 // 2
-    for pair, (c_rel, n_rel) in rel.items():
-        c_piv, n_piv = piv[pair]
-        assert n_rel == n_piv == 12
-        if c_rel is None:
-            assert c_piv is None
-        else:
-            assert abs(c_rel - c_piv) < 1e-6, pair
+    got = _corr_pairs(df)
+    ref = _pandas_pairs(rows)
+    assert len(ref) == 1000 * 999 // 2 and {n for _c, n in ref.values()} == {12}
+    _assert_matches_pandas(got, ref, 1e-6)
 
 
 def test_correlation_matrix_gram_compiles_wide_panel(spark):
-    """250 keys: the Gram route's vectors must come from generated code
-    that compiles — with codegen fallback off, a k-column pivot fails
-    with Janino's 64 KB method limit instead of silently running
-    interpreted — and still match the relational route."""
+    """250 keys: every stage of correlation_matrix must come from
+    generated code that compiles — with codegen fallback off, a k-column
+    pivot fails with Janino's 64 KB method limit instead of silently
+    running interpreted — and still match pandas ``.corr()``."""
     import math
 
     rows = [
@@ -288,23 +308,24 @@ def test_correlation_matrix_gram_compiles_wide_panel(spark):
     prior = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
-        gram = _route_pairs("gram", df)
+        got = _corr_pairs(df)
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prior)
-    rel = _route_pairs("relational", df)
-    assert set(gram) == set(rel) and len(gram) == 250 * 249 // 2
-    for pair, (c_rel, n_rel) in rel.items():
-        c_g, n_g = gram[pair]
-        assert n_rel == n_g == 30
-        assert abs(c_rel - c_g) < 1e-9, pair
+    ref = _pandas_pairs(rows)
+    assert len(ref) == 250 * 249 // 2
+    _assert_matches_pandas(got, ref, 1e-9)
 
 
-def test_correlation_matrix_duplicates_and_nulls(spark):
-    """Both matrix routes mean-collapse a duplicated (key, time) row and
-    drop a NULL value (its timestamp is then incomplete). One panel holds
-    a dirty copy ``d*`` of four series and a copy ``c*`` cleaned that way
-    by hand: every d-pair must equal its c-pair, route by route."""
+def test_correlation_matrix_duplicates_and_nulls(spark, monkeypatch):
+    """Both routes mean-collapse a duplicated (key, time) row and drop a
+    NULL value. One panel holds a dirty copy ``d*`` of four series and a
+    copy ``c*`` cleaned that way by hand: every d-pair must equal its
+    c-pair, route by route. The moments route is pairwise-complete (only
+    pairs with key 3 lose the NULL's timestamp); the distributed route
+    is listwise (every pair loses it)."""
     import math
+
+    import financial_big_data_spark.ml.clustering as mc
 
     rows = {
         (i, t): math.sin((i + 1) * 0.7 * t) + 0.1 * i for i in range(4) for t in range(10)
@@ -317,20 +338,23 @@ def test_correlation_matrix_duplicates_and_nulls(spark):
         if (i, t) != (3, 8)
     ]
     df = spark.createDataFrame(dirty + clean, "key string, t int, value double")
-    for route in ("gram", "distributed"):
-        got = _route_pairs(route, df)
+    for route, max_keys in (("moments", mc._MOMENTS_MAX_KEYS), ("distributed", 0)):
+        monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", max_keys)
+        got = _corr_pairs(df)
         assert len(got) == 8 * 7 // 2, route
         for i in range(4):
             for j in range(i + 1, 4):
                 c_d, n_d = got[(f"d{i}", f"d{j}")]
                 c_c, n_c = got[(f"c{i}", f"c{j}")]
-                assert n_d == n_c == 9, (route, i, j)
+                want_n = 10 if route == "moments" and j != 3 else 9
+                assert n_d == n_c == want_n, (route, i, j)
                 assert abs(c_d - c_c) < 1e-12, (route, i, j)
 
 
 def test_correlation_matrix_auto_routes_by_key_count(spark, monkeypatch):
-    """correlation_matrix must pick the Gram path above 200 keys (so no
-    self-join exists anywhere in the high-k plan) and relational below."""
+    """``_MOMENTS_MAX_KEYS`` alone splits the routes: up to it the
+    moments route answers (no call into the distributed tier), above it
+    the distributed tier does."""
     import financial_big_data_spark.ml.clustering as mc
 
     small = spark.createDataFrame(
@@ -341,15 +365,55 @@ def test_correlation_matrix_auto_routes_by_key_count(spark, monkeypatch):
         [(f"k{i:03d}", t, float((i % 7 + 1) * t + i)) for i in range(250) for t in range(5)],
         "key string, t int, value double",
     )
-
-    def boom(*a, **k):
-        raise AssertionError("wrong physical path for this key count")
-
-    monkeypatch.setattr(mc, "_correlation_matrix_gram", boom)
+    calls = []  # the key count of each call into the distributed tier
+    monkeypatch.setattr(
+        mc, "_correlation_matrix_distributed", lambda *a: calls.append(len(a[-1]))
+    )
+    monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", 250)
     assert mc.correlation_matrix(small, "key", "t", "value").count() == 3
-    monkeypatch.undo()
-    monkeypatch.setattr(mc, "_correlation_matrix_relational", boom)
     assert mc.correlation_matrix(big, "key", "t", "value").count() == 250 * 249 // 2
+    assert calls == []
+    monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", 249)
+    assert mc.correlation_matrix(big, "key", "t", "value") is None
+    assert calls == [250]
+
+
+def test_correlation_matrix_ragged_panel(spark):
+    """A ragged panel — 250 keys, each present at about 10 % of 720
+    hours, like the 300-user hourly panel of ev_user_communities — must
+    match pandas ``.corr()`` pairwise: r to 1e-6 and n exactly. A
+    listwise route finds no complete hour here and returns no pairs."""
+    rng = np.random.default_rng(42)
+    hours = 720
+    factors = rng.normal(0, 1, (5, hours))
+    rows = []
+    for i in range(250):
+        series = 10 + i % 7 + factors[i % 5] + rng.normal(0, 1, hours)
+        rows += [
+            (f"k{i:03d}", int(t), float(series[t]))
+            for t in np.flatnonzero(rng.random(hours) < 0.1)
+        ]
+    df = spark.createDataFrame(rows, "key string, t int, value double")
+    ref = _pandas_pairs(rows)
+    assert len(ref) > 0.9 * 250 * 249 // 2
+    _assert_matches_pandas(_corr_pairs(df), ref, 1e-6)
+
+
+def test_correlation_matrix_constant_series_null(spark):
+    """A series constant overall, or constant over one pair's overlap,
+    has zero variance there: that pair's corr is NULL (pandas NaN), every
+    other pair keeps its r."""
+    rows = [("a", t, 0.1) for t in range(10)]
+    rows += [("b", t, float(t * t % 7)) for t in range(10)]
+    rows += [("c", t, 0.3 if t < 5 else 0.1 * t) for t in range(10)]
+    rows += [("d", t, float(t)) for t in range(5)]
+    df = spark.createDataFrame(rows, "key string, t int, value double")
+    got = _corr_pairs(df)
+    ref = _pandas_pairs(rows)
+    assert {p for p, (c, _n) in ref.items() if c is None} == {
+        ("a", "b"), ("a", "c"), ("a", "d"), ("c", "d")
+    }
+    _assert_matches_pandas(got, ref, 1e-12)
 
 
 def test_dbscan_auto_eps_layout_invariant(spark, blobs_df):
@@ -365,11 +429,14 @@ def test_dbscan_auto_eps_layout_invariant(spark, blobs_df):
     assert len(eps_seen) == 1
 
 
-def test_correlation_matrix_distributed_parity(spark):
+def test_correlation_matrix_distributed_parity(spark, monkeypatch):
     """The unbounded-k tier (columnSimilarities on centered columns) must
-    match the Gram path pair-for-pair — nothing k²-sized touches the
-    driver in this mode."""
+    match pandas ``.corr()`` pair-for-pair on a complete panel, where
+    its listwise semantics and pandas' pairwise ones agree — nothing
+    k²-sized touches the driver in this mode."""
     import math
+
+    import financial_big_data_spark.ml.clustering as mc
 
     rows = [
         (f"k{i:03d}", t, math.sin((i % 13 + 1) * 0.29 * t) + 0.002 * i * t)
@@ -377,15 +444,11 @@ def test_correlation_matrix_distributed_parity(spark):
         for t in range(15)
     ]
     df = spark.createDataFrame(rows, "key string, t int, value double")
-    piv = _route_pairs("gram", df)
-    dist = _route_pairs("distributed", df)
-    assert len(piv) == 300 * 299 // 2
+    monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", 0)
+    ref = _pandas_pairs(rows)
+    assert len(ref) == 300 * 299 // 2
     # sparse entries may omit exact-zero correlations; none exist here
-    assert set(dist) == set(piv)
-    for pair, (c_p, n_p) in piv.items():
-        c_d, n_d = dist[pair]
-        assert n_p == n_d == 15
-        assert c_p is not None and abs(c_p - c_d) < 1e-9, pair
+    _assert_matches_pandas(_corr_pairs(df), ref, 1e-9)
 
 
 # ---------------------------------------------------------------------------

@@ -80,6 +80,16 @@ def test_global_running_sum_string_key(spark):
         assert cum == acc
 
 
+def test_frozen_range_bounds_empty_input(spark):
+    """An empty numeric or timestamp key gives no boundaries (one
+    unbounded bucket): approxQuantile returns [] on it, no exception."""
+    from financial_big_data_spark.functions.stats import _frozen_range_bounds
+
+    empty = spark.createDataFrame([], "k long, ts timestamp")
+    assert _frozen_range_bounds(empty, "k", 8) == []
+    assert _frozen_range_bounds(empty, "ts", 8) == []
+
+
 def test_curate_corpus_stages(spark, corpus_df):
     res = curate_corpus(
         corpus_df,

@@ -177,6 +177,29 @@ def test_plan_caches_released_on_unpersist(spark, bars_df):
     assert not any(pinned(df) for df in tracked)
 
 
+def test_release_tracked_swallows_only_py4j_errors(monkeypatch):
+    """A frame whose unpersist raises Py4JError (its session is stopped)
+    is dropped and not counted; any other error propagates."""
+    from py4j.protocol import Py4JError
+
+    from financial_big_data_spark import cache as fbs_cache
+
+    class Frame:
+        def __init__(self, exc=None):
+            self.exc = exc
+
+        def unpersist(self, blocking=False):
+            if self.exc is not None:
+                raise self.exc
+
+    monkeypatch.setattr(fbs_cache, "_TRACKED", [Frame(), Frame(Py4JError("stopped")), Frame()])
+    assert fbs_cache.release_tracked() == 2
+    assert fbs_cache._TRACKED == []
+    fbs_cache._TRACKED.append(Frame(RuntimeError("bug")))
+    with pytest.raises(RuntimeError):
+        fbs_cache.release_tracked()
+
+
 def test_q18_shape_aggregate_before_join_topk_merge(spark):
     """large_order_customers: the lineitem aggregate runs BEFORE any join
     (only qualifying orders reach the join), customer broadcasts, and the

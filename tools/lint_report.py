@@ -143,11 +143,6 @@ SELF_JOIN_JUSTIFIED: dict[str, str] = {
         "cooccurrence_pairs: per-slot expansion capped at slot_cap "
         "min-xxhash members (≤ cap² per key); the one sanctioned builder"
     ),
-    "financial_big_data_spark/ml/clustering.py": (
-        "_correlation_matrix_relational: size-routed — only taken when "
-        "n_keys ≤ _RELATIONAL_MAX_KEYS = 200 (bounded series count; k² "
-        "intended)"
-    ),
     "financial_big_data_spark/streaming/ingest.py": (
         "within-batch LSH candidates: join keyed on (band, key) buckets "
         "of the micro-batch — group size bounded by band collisions of "
