@@ -3,14 +3,15 @@
 MLlib carries K-Means, PCA and silhouette natively. Louvain and DBSCAN have
 no MLlib implementation; the reference runs them on ≤100-node symbol graphs
 (reference market_analysis.py:310-374), so the engine computes the *inputs*
-distributed (correlation matrix → edge list → ε-graph) and runs the tiny
-graph algorithms driver-side (networkx). The correlation matrix is
-pairwise-complete like the reference's pandas ``.corr()``: masked moments
-summed on the executors, or, above 2500 series, listwise distributed column
-similarities. When the node count outgrows the driver, the implemented
-scale path is ``ml.graph``: pure-DataFrame ``louvain_distributed_df``
-(community detection) and connected_components (the ε-graph labelling step
-of distributed DBSCAN) over the same edge DataFrame.
+distributed (correlation matrix → edge list → ε-graph). The correlation
+matrix is pairwise-complete like the reference's pandas ``.corr()``: masked
+moments summed on the executors, or, above 2500 series, listwise
+distributed column similarities. Louvain is ``ml.graph``'s one entry point
+(``louvain_communities_df`` delegates to ``louvain_distributed_df``), which
+routes by graph size: a graph under its edge cap runs on the driver, a
+larger one sweeps distributed. DBSCAN routes by node count the same way:
+driver components, or ``ml.graph.connected_components`` (the ε-graph
+labelling step of distributed DBSCAN) over the same edge DataFrame.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.evaluation import ClusteringEvaluator
 from pyspark.ml.feature import PCA, StandardScaler, VectorAssembler
+
+from .graph import louvain_distributed_df
 
 
 def _assemble(df: DataFrame, feature_cols: list[str], standardize: bool) -> DataFrame:
@@ -259,35 +262,15 @@ def corr_edges(corr: DataFrame, threshold: float = 0.3) -> DataFrame:
     )
 
 
-def louvain_communities_df(
-    spark: SparkSession, edges: DataFrame, seed: int = 42
-) -> tuple[DataFrame, dict]:
-    """M2: Louvain on the collected edge list (driver-side networkx).
-
-    The reference runs python-louvain on ≤100 nodes (market_analysis.py:321);
-    the collected edge list here is the same size regardless of fact-data
-    scale (one node per series). Scale path for >1e5 nodes:
-    ``ml.graph.louvain_distributed_df`` on the same ``edges`` DataFrame.
-    Returns ((node, community) DataFrame, {modularity, n_communities});
-    the partition does not depend on the order the edge rows arrive in.
-    """
-    from networkx.algorithms import community as nxc
-
-    from .graph import _nx_louvain
-
-    edge_rows = [(r.src, r.dst, abs(float(r.weight))) for r in edges.collect()]
-    if not edge_rows:
-        return spark.createDataFrame([], "node string, community int"), {
-            "modularity": 0.0,
-            "n_communities": 0,
-        }
-    g, comms = _nx_louvain(edge_rows, seed)
-    mod = nxc.modularity(g, comms, weight="weight")
-    rows = [(str(n), i) for i, c in enumerate(comms) for n in c]
-    return (
-        spark.createDataFrame(rows, "node string, community int"),
-        {"modularity": float(mod), "n_communities": len(comms)},
-    )
+def louvain_communities_df(spark: SparkSession, edges: DataFrame) -> tuple[DataFrame, dict]:
+    """M2: Louvain communities of the correlation graph (reference
+    market_analysis.py:321) — ``ml.graph.louvain_distributed_df``, the one
+    Louvain entry point: a graph under its 200k-edge cap runs as one seeded
+    networkx Louvain on the driver, a larger one sweeps distributed.
+    ``edges``: (src, dst[, weight]); returns ((node, community),
+    {modularity, n_communities}), on the driver route with community = the
+    smallest member id."""
+    return louvain_distributed_df(edges)
 
 
 def kneedle_elbow(y, s: float = 1.0) -> int | None:

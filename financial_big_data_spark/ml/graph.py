@@ -1,19 +1,21 @@
-"""Distributed graph operators: Louvain, connected components & PageRank.
+"""Graph operators: Louvain, connected components & PageRank.
 
-The driver-side Louvain/DBSCAN in ml.clustering is right for ≤1e4 nodes (one
-node per *series*, tiny by construction). These are the documented scale
-paths implemented as pure DataFrame iterations — no GraphFrames dependency:
+Pure DataFrame iterations — no GraphFrames dependency:
 
-- **louvain_distributed**: the REAL Louvain — modularity-optimizing local
-  moves (hash-gated synchronous sweeps) + graph contraction, entirely
-  DataFrame joins/aggregates; matches networkx Louvain's partition quality
-  on the classic fixtures (tests). A sweep is one checkpoint: the state row
+- **Louvain** (``louvain_distributed_df``, the one entry point; the
+  clustering module's ``louvain_communities_df`` delegates to it): one
+  level loop that routes by graph size before every level. One bounded
+  collect of the current graph decides: at most ``driver_finish_edges``
+  edges and the rest runs as one seeded networkx Louvain on the driver
+  (``_nx_louvain``, the only driver Louvain) — at level 0 that is the
+  route every one-node-per-series correlation graph takes; above the cap
+  the level runs the REAL distributed algorithm, modularity-optimizing
+  local moves (hash-gated synchronous sweeps) then graph contraction, as
+  DataFrame joins/aggregates. A sweep is one checkpoint: the state row
   per node carries its community and that community's degree total, the
-  candidate scores, stay score and argmax come from one join-aggregate and
-  one window sort, and the convergence count is observed on the
-  checkpoint job itself (``_louvain_phase1``). Small contracted graphs
-  finish in one seeded networkx Louvain on the driver (``_nx_louvain``,
-  shared with ml.clustering.louvain_communities_df).
+  candidate scores, stay score and argmax come from one join-aggregate
+  and one window sort, and the convergence count is observed on the
+  checkpoint job itself (``_louvain_phase1``).
 - **connected_components**: iterative min-label flooding (each node takes
   the min component id in its neighborhood) — the DBSCAN ε-graph labeller
   at scale. Converges in O(graph diameter) rounds.
@@ -37,6 +39,7 @@ import warnings
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -275,15 +278,17 @@ def _louvain_phase1(
     return labels.select("node", "comm")
 
 
-def _nx_louvain(edge_rows: list, seed: int = 42) -> tuple:
+def _nx_louvain(edge_rows: list, seed: int = 42) -> tuple[list, float]:
     """Seeded networkx Louvain over collected (a, b, w) rows — the one
-    driver-side Louvain, used by ml/clustering.louvain_communities_df and
-    by the distributed path's finish (``_louvain_driver_finish``).
+    driver-side Louvain, the finish of the level loop in
+    ``_louvain_levels``.
 
     Seeded networkx Louvain depends on node/edge insertion order, so the
     rows are sorted first: the partition does not depend on the order
-    they were collected in. Duplicate (a, b) rows sum their weights.
-    Returns (graph, communities)."""
+    they were collected in. Duplicate (a, b) rows sum their weights, and
+    self-loops (contracted intra-community mass) count in networkx's
+    modularity exactly as the sweep's degree terms count them. Returns
+    (communities as sets of node ids, their modularity over ``w``)."""
     import networkx as nx
     from networkx.algorithms import community as nxc
 
@@ -293,36 +298,8 @@ def _nx_louvain(edge_rows: list, seed: int = 42) -> tuple:
             g[a][b]["weight"] += w
         else:
             g.add_edge(a, b, weight=w)
-    return g, nxc.louvain_communities(g, weight="weight", seed=seed)
-
-
-def _louvain_driver_finish(edge_rows: list, seed: int = 42) -> list:
-    """Sequential Louvain (networkx) on a COLLECTED contracted graph —
-    the finish pass for supernode graphs small enough to fit the driver.
-
-    Synchronous distributed sweeps are the right tool while the graph is
-    large (weak coupling between any two nodes' moves), but on a small
-    contracted graph every supernode carries thousands of original nodes'
-    degree mass, and simultaneous moves — each scored against FROZEN
-    community totals — cascade: dozens of supernodes pile into one
-    community in a single sweep and modularity collapses (measured on the
-    planted-partition bench: level-1 sweeps over a 373-supernode graph
-    merged 373 → 36 communities and dropped overall Q 0.744 → 0.391).
-    Sequential moves re-read the totals after every single move, so the
-    cascade cannot happen — and by the time the graph is this small,
-    sequential IS the scale-correct choice. Self-loop weights (contracted
-    intra-community mass) participate in networkx's modularity exactly as
-    the distributed score's degree terms count them.
-
-    Returns [(supernode, representative)] with representative = the
-    smallest member id, preserving the "community = an original node id"
-    contract."""
-    _, comms = _nx_louvain(edge_rows, seed)
-    out = []
-    for c in comms:
-        rep = min(c)
-        out.extend((n, rep) for n in c)
-    return out
+    comms = nxc.louvain_communities(g, weight="weight", seed=seed)
+    return comms, float(nxc.modularity(g, comms, weight="weight"))
 
 
 def louvain_distributed(
@@ -332,30 +309,33 @@ def louvain_distributed(
     tol: float = 1e-12,
     driver_finish_edges: int | None = 200_000,
 ) -> DataFrame:
-    """M2 scale path, the REAL algorithm: distributed Louvain — modularity-
-    optimizing local moves + graph contraction, entirely DataFrame
-    joins/aggregates (no GraphFrames, nothing node- or edge-sized on the
-    driver; reference runs python-louvain on ≤100 driver-side nodes,
-    market_analysis.py:321).
+    """M2: Louvain — modularity-optimizing local moves + graph contraction,
+    routed by graph size (reference runs python-louvain on ≤100
+    driver-side nodes, market_analysis.py:321).
 
     ``edges``: (src, dst[, weight]) with each undirected edge once, no
-    self-loops; NEGATIVE weights are taken by magnitude (matching the
-    driver path, which feeds networkx abs(weight)). Returns
-    (node, community) with community = a representative original node id.
+    self-loops; NEGATIVE weights are taken by magnitude. Returns (node,
+    community), both of the edge id type; community is an original node id.
 
-    Levels: phase-1 local moves converge → communities contract into
-    supernodes (intra-weight becomes a self-loop, preserving Q exactly) →
-    phase 1 reruns on the contracted graph; stops when a level no longer
-    merges anything or ``max_levels`` is hit.
+    Every level starts with ONE bounded collect of the current graph. With
+    at most ``driver_finish_edges`` edges, the rest runs as one seeded
+    sequential Louvain on the driver (``_nx_louvain``) and the loop ends:
+    at level 0 this is the entry route (a graph under the cap never
+    sweeps, and each community is labelled by its smallest member id), at
+    later levels the finish on the contracted graph (labelled by its
+    smallest supernode). Otherwise phase-1 local-move sweeps
+    (``_louvain_phase1``) converge and communities contract into
+    supernodes (intra-weight becomes a self-loop, so Q is kept exactly).
+    The loop stops when a level merges nothing or after ``max_levels``
+    levels of sweeps; the last contraction still gets its check.
+    ``driver_finish_edges=None`` sweeps at every level.
 
-    ``driver_finish_edges``: once a CONTRACTED graph has at most this
-    many edges, the remaining levels run as ONE sequential Louvain on the
-    collected supernode graph (``_louvain_driver_finish``) instead of
-    more synchronous sweeps — a bounded collect by construction (the cap
-    is explicit, and contraction already shrank the graph), and the fix
-    for the small-graph move cascade that made the scale path a quality
-    downgrade (VERDICT r7 #1). ``None`` disables the finish (pure
-    distributed sweeps at every level).
+    Why route by size: on a small graph every (super)node carries a large
+    share of the degree mass, and synchronous moves scored against FROZEN
+    community totals cascade — level-1 sweeps over a 373-supernode
+    planted-partition graph merged 373 → 36 communities and dropped Q
+    0.744 → 0.391. Sequential moves re-read the totals after every move,
+    and at that size they are also the cheaper plan.
     """
     return _louvain_levels(edges, max_levels, max_sweeps, tol, driver_finish_edges)[0]
 
@@ -366,21 +346,35 @@ def _louvain_levels(
     max_sweeps: int,
     tol: float,
     driver_finish_edges: int | None,
-) -> tuple[DataFrame, int]:
-    """``louvain_distributed`` plus its community count, which the level
-    loop already knows on the driver (no extra job to count it)."""
+) -> tuple[DataFrame, int, float | None]:
+    """``louvain_distributed`` plus its community count, which the loop
+    already knows on the driver, and, when the loop ends in the driver
+    finish, networkx's modularity of the partition (``None`` when it ends
+    in the sweeps)."""
     w = (
         F.abs(F.col("weight").cast("double"))
         if "weight" in edges.columns
         else F.lit(1.0)
     )
     cur = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"), w.alias("w"))
-    m = cur.agg(F.sum("w")).collect()[0][0]
-    if not m:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, community string"), 0
-    mapping: DataFrame | None = None
-    for _level in range(max_levels):
+    id_type = edges.schema["src"].dataType
+    schema = StructType([StructField("node", id_type), StructField("community", id_type)])
+    m = mapping = rows = None
+    for level in range(max_levels + 1):
+        if driver_finish_edges is not None:
+            # one bounded collect decides the route AND feeds the finish.
+            # coalesce(1) first keeps it one job: a limit over a checkpointed
+            # or large multi-partition frame otherwise takes two (measured)
+            rows = cur.coalesce(1).limit(driver_finish_edges + 1).collect()
+            if len(rows) <= driver_finish_edges:
+                break
+            rows = None
+        if level == max_levels:
+            break
+        if m is None:
+            m = cur.agg(F.sum("w")).first()[0]
+            if not m:
+                return edges.sparkSession.createDataFrame([], schema), 0, 0.0
         labels = _louvain_phase1(cur, float(m), max_sweeps, tol)
         n_nodes, n_comms = labels.agg(
             F.count(F.lit(1)), F.countDistinct("comm")
@@ -411,38 +405,39 @@ def _louvain_levels(
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
         )
-        if driver_finish_edges is None:
-            continue
-        # one bounded collect decides AND feeds the finish
-        rows = cur.limit(driver_finish_edges + 1).collect()
-        if len(rows) <= driver_finish_edges:
-            fin = _louvain_driver_finish(
-                [(r["a"], r["b"], float(r["w"])) for r in rows]
-            )
-            spark = edges.sparkSession
-            fin_df = spark.createDataFrame(fin, ["_sn", "_rep"])
-            mapping = _ckpt(
-                mapping.alias("mp")
-                .join(fin_df.alias("fv"), F.col("mp.comm") == F.col("fv._sn"))
-                .select(
-                    F.col("mp.node").alias("node"), F.col("fv._rep").alias("comm")
-                )
-            )
-            n_comms = len({rep for _, rep in fin})
-            break
-    return mapping.select("node", F.col("comm").alias("community")), n_comms
-
-
-def louvain_distributed_df(edges: DataFrame) -> tuple[DataFrame, dict]:
-    """Same contract as the driver path (ml/clustering.louvain_communities_df):
-    (communities, {modularity, n_communities}), via distributed Louvain;
-    Q is computed over |weight|, as the driver path does."""
-    comms, n = _louvain_levels(
-        edges, max_levels=3, max_sweeps=10, tol=1e-12, driver_finish_edges=200_000
+    if rows is None:
+        return mapping.select("node", F.col("comm").alias("community")), n_comms, None
+    if not any(r.w for r in rows):
+        return edges.sparkSession.createDataFrame([], schema), 0, 0.0
+    comms, q = _nx_louvain(rows)
+    out = edges.sparkSession.createDataFrame(
+        [(n, min(c)) for c in comms for n in c], schema
     )
-    weight = "weight" if "weight" in edges.columns else None
-    e = edges.withColumn(weight, F.abs(F.col(weight))) if weight else edges
-    q = modularity(e, comms, weight=weight)
+    if mapping is not None:
+        out = _ckpt(
+            mapping.join(out.withColumnRenamed("node", "comm"), "comm")
+            .select("node", "community")
+        )
+    return out, len(comms), q
+
+
+def louvain_distributed_df(
+    edges: DataFrame, driver_finish_edges: int | None = 200_000
+) -> tuple[DataFrame, dict]:
+    """The one Louvain entry point: ``louvain_distributed`` (3 levels × 10
+    sweeps, routed by ``driver_finish_edges``) returning (communities,
+    {modularity, n_communities}) with Q over |weight|. A run that ends in
+    the driver finish takes Q from networkx on the collected graph, exact
+    since contraction keeps Q; a run that ends in the sweeps takes it from
+    the DataFrame aggregate ``modularity``."""
+    comms, n, q = _louvain_levels(
+        edges, max_levels=3, max_sweeps=10, tol=1e-12,
+        driver_finish_edges=driver_finish_edges,
+    )
+    if q is None:
+        weight = "weight" if "weight" in edges.columns else None
+        e = edges.withColumn(weight, F.abs(F.col(weight))) if weight else edges
+        q = modularity(e, comms, weight=weight)
     return comms, {"modularity": q, "n_communities": n}
 
 

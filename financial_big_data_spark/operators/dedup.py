@@ -24,6 +24,7 @@ from __future__ import annotations
 import warnings
 from functools import reduce
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -67,7 +68,9 @@ class _CapSignal:
         """RANK mode (``rank_col``): one tiny aggregate over the site's
         PERSISTED ranked frame (map-side combine); returns None — and
         skips the job — if the cache was already released
-        (``release_tracked`` ran): the signal window has passed.
+        (``release_tracked`` ran): the signal window has passed. Also
+        None when the frame's session is stopped (``Py4JError``); any
+        other error propagates.
 
         COUNTS mode (``group_cols``): per-bucket membership count over
         an UNPERSISTED frame + a 1-row reduce — used where caching the
@@ -99,7 +102,7 @@ class _CapSignal:
                     )
                     .first()
                 )
-        except Exception:  # pragma: no cover - stopped session etc.
+        except Py4JError:  # the frame's session is stopped
             return None
         overflow = int(row["overflow_rows"] or 0)
         return {

@@ -3102,10 +3102,11 @@ def q_emb_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ev_user_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2 scale path in the gate: distributed Louvain communities over the
     user correlation graph + Newman modularity computed as DataFrame
-    aggregates (ml/graph.py) — the distributed mirror of
-    q_ev_user_communities' driver-side Louvain, reporting the reference's
-    headline metric (market_analysis.py:321). Rows-only: iterative Louvain
-    has no SQL equivalent."""
+    aggregates (ml/graph.py), reporting the reference's headline metric
+    (market_analysis.py:321). The graph is far under the entry point's
+    driver cap, so ``driver_finish_edges=None`` keeps it on the
+    distributed sweeps — the query q_ev_user_communities answers on the
+    driver. Rows-only: iterative Louvain has no SQL equivalent."""
     from .ml.clustering import corr_edges, correlation_matrix
     from .ml.graph import louvain_distributed_df
 
@@ -3116,7 +3117,7 @@ def q_ev_user_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.avg("value").alias("v"))
     corr = correlation_matrix(hourly, key="uid", time="hr", value="v")
     edges = corr_edges(corr, threshold=0.1)
-    _comms, metrics = louvain_distributed_df(edges)
+    _comms, metrics = louvain_distributed_df(edges, driver_finish_edges=None)
     return spark.createDataFrame(
         [(float(metrics["modularity"]), int(metrics["n_communities"]))],
         "modularity double, n_communities int",

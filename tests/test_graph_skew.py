@@ -143,7 +143,7 @@ def test_distributed_modularity_uses_abs_weights(spark):
         (a, b, 0.9) for a, b in pairs_b
     ]
     e_df = spark.createDataFrame(edges, "src long, dst long, weight double")
-    comms, metrics = louvain_distributed_df(e_df)
+    comms, metrics = louvain_distributed_df(e_df, driver_finish_edges=None)
     assert metrics["n_communities"] == 2
     abs_df = e_df.withColumn("weight", F.abs("weight"))
     expected = modularity(abs_df, comms, weight="weight")
@@ -177,7 +177,7 @@ def test_distributed_modularity_planted_two_densities(spark):
     edges += [(0, 100, 1.0), (5, 110, 1.0)]  # sparse inter-community bridges
     e_df = spark.createDataFrame(edges, "src long, dst long, weight double")
     _, lv = louvain_communities_df(spark, e_df)
-    _, dist = louvain_distributed_df(e_df)
+    _, dist = louvain_distributed_df(e_df, driver_finish_edges=None)
     assert lv["n_communities"] == 2
     assert dist["n_communities"] == 2
     assert abs(dist["modularity"] - lv["modularity"]) < 0.05
@@ -207,7 +207,7 @@ def test_distributed_louvain_matches_networkx(spark):
 
     def check(edges_py):
         e_df = spark.createDataFrame(edges_py, "src long, dst long, weight double")
-        _, met = louvain_distributed_df(e_df)
+        _, met = louvain_distributed_df(e_df, driver_finish_edges=None)
         g = nx.Graph()
         for a, b, w in edges_py:
             g.add_edge(a, b, weight=abs(w))
@@ -249,27 +249,35 @@ def test_louvain_sweep_job_budget(spark, ckpt_jobs):
     assert len(per_sweep) >= 3, seen
     assert per_sweep[0] <= 9 and max(per_sweep[1:]) <= 6, per_sweep
 
-    part = {r.node: r.community for r in graph.louvain_distributed(e_df).collect()}
+    part = {
+        r.node: r.community
+        for r in graph.louvain_distributed(e_df, driver_finish_edges=None).collect()
+    }
     reps = {0: 4, 10: 14, 20: 23, 30: 33, 40: 43, 50: 53}
     assert part == {base + i: rep for base, rep in reps.items() for i in range(5)}
 
 
 def test_louvain_driver_finish_ignores_row_order():
-    """Seeded networkx Louvain depends on insertion order; the finish pass
-    must give the same partition however the contracted rows arrived."""
+    """Seeded networkx Louvain depends on insertion order; the driver
+    finish (``_nx_louvain``, which sorts the rows) must give the same
+    partition however the collected rows arrived."""
     import random
 
-    from financial_big_data_spark.ml.graph import _louvain_driver_finish
+    from financial_big_data_spark.ml.graph import _nx_louvain
+
+    def partition(rows):
+        comms, _ = _nx_louvain(rows)
+        return sorted(sorted(c) for c in comms)
 
     rnd = random.Random(1)
     rows = [
         (a, b, 1.0) for a in range(30) for b in range(a + 1, 30) if rnd.random() < 0.15
     ]
-    want = sorted(_louvain_driver_finish(rows))
+    want = partition(rows)
     for seed in range(3):
         shuffled = rows[:]
         random.Random(seed).shuffle(shuffled)
-        assert sorted(_louvain_driver_finish(shuffled)) == want
+        assert partition(shuffled) == want
 
 
 def test_driver_louvain_ignores_row_order(spark):
@@ -323,10 +331,56 @@ def test_distributed_modularity_near_driver_louvain(spark):
         correlation_matrix(df, key="key", time="t", value="value"), threshold=0.9
     )
     _, louvain_metrics = louvain_communities_df(spark, edges)
-    _, dist_metrics = louvain_distributed_df(edges)
+    _, dist_metrics = louvain_distributed_df(edges, driver_finish_edges=None)
     assert dist_metrics["n_communities"] == 2
     assert abs(dist_metrics["modularity"] - louvain_metrics["modularity"]) < 0.1
 
+
+def test_small_graph_takes_driver_route_at_entry(spark, monkeypatch):
+    """A graph under the default driver cap never sweeps: the entry check's
+    one bounded collect feeds networkx directly, the whole call stays
+    within 3 Spark jobs, and the networkx Q it reports equals the
+    DataFrame modularity of the returned partition."""
+    from financial_big_data_spark.ml import graph
+
+    def no_sweeps(*args, **kwargs):
+        raise AssertionError("a small graph must not reach the sweeps")
+
+    monkeypatch.setattr(graph, "_louvain_phase1", no_sweeps)
+    e_df = spark.createDataFrame(_ring_of_cliques(), "src long, dst long, weight double")
+    sc = spark.sparkContext
+    group = "louvain_entry_route"
+    sc.setJobGroup(group, group)
+    try:
+        comms, met = graph.louvain_distributed_df(e_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert met["n_communities"] == 6
+    assert abs(met["modularity"] - graph.modularity(e_df, comms, weight="weight")) < 1e-9
+    # each community is labelled by its smallest member id
+    part = {r.node: r.community for r in comms.collect()}
+    assert part == {c * 10 + i: c * 10 for c in range(6) for i in range(5)}
+
+
+def test_louvain_communities_without_weight_column(spark):
+    """The driver entry reads (src, dst) edges with no weight column as
+    unit weights and returns the two planted cliques; an empty edge list
+    gives no communities."""
+    from financial_big_data_spark.ml.clustering import louvain_communities_df
+
+    e_df = _two_cliques(spark)
+    empty, none = louvain_communities_df(spark, e_df.limit(0))
+    assert empty.count() == 0 and none == {"modularity": 0.0, "n_communities": 0}
+    comms, met = louvain_communities_df(spark, e_df)
+    by_comm = {}
+    for r in comms.collect():
+        by_comm.setdefault(r.community, set()).add(r.node)
+    assert sorted(map(sorted, by_comm.values())) == [
+        [0, 1, 2, 3], [10, 11, 12, 13]
+    ]
+    assert met["n_communities"] == 2
 
 
 def test_triangle_count_matches_brute_force(spark):

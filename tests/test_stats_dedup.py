@@ -554,6 +554,26 @@ def test_cap_bucket_rejects_nonpositive_cap(spark):
         D.jaccard_pairs(docs, shingle_n=1, shingle_doc_cap=1).collect()
 
 
+def test_cap_signal_result_swallows_only_py4j_errors():
+    """A cap signal whose frame's session is stopped (``Py4JError``)
+    reports None; any other error propagates instead of hiding the
+    truncation audit."""
+    import pytest as _pytest
+    from py4j.protocol import Py4JError
+
+    class Frame:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def groupBy(self, *cols):
+            raise self.exc
+
+    stopped = D._CapSignal("site", 4, Frame(Py4JError("stopped")), None, ["k"])
+    assert stopped.result() is None
+    broken = D._CapSignal("site", 4, Frame(RuntimeError("bug")), None, ["k"])
+    with _pytest.raises(RuntimeError):
+        broken.result()
+
 def test_cap_truncation_signal_fires_on_hot_bucket(spark):
     """ADVICE r11: a cap that actually truncates must leave a runtime
     signal — observe-based (no extra job), drained non-blockingly."""
