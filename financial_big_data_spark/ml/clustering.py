@@ -1,9 +1,17 @@
 """Clustering / decomposition operators (SURVEY §2.9 M1-M5).
 
-MLlib carries K-Means, PCA and silhouette natively. Louvain and DBSCAN have
-no MLlib implementation; the reference runs them on ≤100-node symbol graphs
-(reference market_analysis.py:310-374), so the engine computes the *inputs*
-distributed (correlation matrix → edge list → ε-graph). The correlation
+K-Means routes by row count at entry, as Louvain and DBSCAN route by graph
+size: one bounded collect decides, and an input of at most
+``_KMEANS_DRIVER_MAX_ROWS`` rows (the reference clusters ~100 symbol
+profiles with sklearn) is clustered on the driver with k-means++ and
+``operators.pq._lloyd_np``, scored with MLlib's own silhouette closed form;
+a larger one runs MLlib's KMeans and ``ClusteringEvaluator``. PCA is
+MLlib's.
+
+Louvain and DBSCAN have no MLlib implementation; the reference runs them
+on ≤100-node symbol graphs (reference market_analysis.py:310-374), so the
+engine computes the *inputs* distributed (correlation matrix → edge list
+→ ε-graph). The correlation
 matrix is pairwise-complete like the reference's pandas ``.corr()``: masked
 moments summed on the executors, or, above 2500 series, listwise
 distributed column similarities. Louvain is ``ml.graph``'s one entry point
@@ -23,7 +31,7 @@ from pyspark.ml.clustering import KMeans
 from pyspark.ml.evaluation import ClusteringEvaluator
 from pyspark.ml.feature import PCA, StandardScaler, VectorAssembler
 
-from .graph import louvain_distributed_df
+from .graph import _bounded_collect, louvain_distributed_df
 
 
 def _assemble(df: DataFrame, feature_cols: list[str], standardize: bool) -> DataFrame:
@@ -38,6 +46,16 @@ def _assemble(df: DataFrame, feature_cols: list[str], standardize: bool) -> Data
     return out.withColumnRenamed("_raw", "_features")
 
 
+# The driver k-means holds the collected rows, an n×d float64 copy (5 MB
+# at 10k rows of 64 features) and an n×k distance matrix. Above the cap
+# MLlib's distributed fit runs.
+_KMEANS_DRIVER_MAX_ROWS = 10_000
+# MLlib KMeans defaults: maxIter=20 Lloyd rounds; 10 seeded k-means++
+# restarts, the lowest-inertia one kept (sklearn's n_init=10).
+_KMEANS_ITER = 20
+_KMEANS_RESTARTS = 10
+
+
 def kmeans_clusters(
     df: DataFrame,
     feature_cols: list[str],
@@ -48,7 +66,32 @@ def kmeans_clusters(
     """M1: K-Means(k, seed) → (assignments DataFrame, quality metrics).
 
     Reference clustering.py:24-56 (k=5, seed=42, silhouette + inertia).
+    The assignments are ``df``'s rows plus an int ``cluster``; rows with a
+    NULL or NaN feature are skipped (VectorAssembler ``handleInvalid=
+    "skip"``). ``standardize`` centres each feature and divides by its
+    sample std (ddof=1, StandardScaler); a zero-variance feature maps to 0.
+    Inertia is the within-cluster sum of squared distances and silhouette
+    the squared-Euclidean one of MLlib's ``ClusteringEvaluator``, both in
+    the clustered (standardized) space.
+
+    Routes by row count at entry: one bounded collect (``_bounded_collect``)
+    of at most ``_KMEANS_DRIVER_MAX_ROWS`` rows clusters on the driver,
+    above it MLlib's distributed fit runs. The reference clusters ~100 symbol
+    profiles with sklearn on one node, and on a table that small MLlib's
+    fit and evaluator are ~20 Spark jobs of pure job floor. The driver
+    route runs ``_KMEANS_RESTARTS`` k-means++ inits drawn from
+    ``np.random.default_rng(seed)``, each refined by ``_KMEANS_ITER``
+    Lloyd rounds (``operators.pq._lloyd_np``), and keeps the one with the
+    lowest inertia. Rows are clustered in a canonical (sorted) order, so
+    the result does not depend on the order the collect returns them in.
+    k above the number of distinct points gives one cluster per distinct
+    point, as MLlib's fit returns fewer centres then: inertia 0, and a
+    singleton's silhouette is 0. A single cluster has no silhouette (NaN).
+    Cluster ids are 0..k'-1 on the driver route.
     """
+    rows = _bounded_collect(df, _KMEANS_DRIVER_MAX_ROWS)
+    if rows is not None:
+        return _kmeans_driver(df, rows, feature_cols, k, seed, standardize)
     # tracked: the returned assignments are lazy over this frame, so it must
     # stay pinned until the caller materializes — release_tracked (registry /
     # bench) drops it afterwards; a bare cache() would linger for the session
@@ -62,6 +105,100 @@ def kmeans_clusters(
     ).evaluate(assigned)
     metrics = {"silhouette": silhouette, "inertia": model.summary.trainingCost, "k": k}
     return assigned.drop("_features"), metrics
+
+
+def _kmeans_driver(df, rows, feature_cols, k, seed, standardize) -> tuple[DataFrame, dict]:
+    """``kmeans_clusters``' driver route over the collected ``rows``."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from ..operators.pq import _lloyd_np, _sqdist_np
+
+    X = np.array([[r[c] for c in feature_cols] for r in rows], dtype=float).reshape(
+        len(rows), len(feature_cols)
+    )
+    keep = ~np.isnan(X).any(axis=1)  # None became NaN
+    rows, X = [r for r, ok in zip(rows, keep) if ok], X[keep]
+    if not rows:
+        raise ValueError("kmeans_clusters: no row has every feature set")
+    order = np.lexsort(X.T[::-1])
+    X = X[order]
+    if standardize:
+        constant = (X == X[0]).all(axis=0)
+        sd = X.std(axis=0, ddof=1) if len(X) > 1 else np.zeros(X.shape[1])
+        X = np.divide(X - X.mean(axis=0), sd, out=np.zeros_like(X), where=~constant)
+    rng = np.random.default_rng(seed)
+    best = None
+    for _ in range(_KMEANS_RESTARTS):
+        C = _kmeans_pp(X, k, rng)
+        C = _lloyd_np(X, len(C), n_iter=_KMEANS_ITER, init=C)
+        labels = np.unique(_sqdist_np(X, C).argmin(1), return_inverse=True)[1]
+        inertia = _inertia(X, labels)
+        if best is None or inertia < best[0]:
+            best = (inertia, labels)
+    inertia, labels = best
+    cluster = np.empty(len(X), dtype=int)
+    cluster[order] = labels
+    schema = StructType(df.schema.fields + [StructField("cluster", IntegerType(), False)])
+    assigned = df.sparkSession.createDataFrame(
+        [(*r, int(c)) for r, c in zip(rows, cluster)], schema
+    )
+    return assigned, {"silhouette": _silhouette(X, labels), "inertia": inertia, "k": k}
+
+
+def _kmeans_pp(X, k: int, rng):
+    """k-means++ seeding: the first centre uniform, each next one drawn with
+    probability ∝ its squared distance to the nearest centre so far. Stops
+    early when every point sits on a centre (fewer distinct points than k)."""
+    import numpy as np
+
+    C = [X[rng.integers(len(X))]]
+    d2 = ((X - C[0]) ** 2).sum(axis=1)
+    while len(C) < k and d2.sum() > 0:
+        cum = np.cumsum(d2)
+        i = min(int(np.searchsorted(cum, rng.random() * cum[-1], side="right")), len(X) - 1)
+        C.append(X[i])
+        d2 = np.minimum(d2, ((X - X[i]) ** 2).sum(axis=1))
+    return np.array(C)
+
+
+def _cluster_sums(X, labels):
+    """(per-cluster row count, feature sums) for labels 0..k'-1."""
+    import numpy as np
+
+    sums = np.zeros((labels.max() + 1, X.shape[1]))
+    np.add.at(sums, labels, X)
+    return np.bincount(labels).astype(float), sums
+
+
+def _inertia(X, labels) -> float:
+    """Within-cluster sum of squared distances to each cluster's mean
+    (MLlib's ``trainingCost`` on a converged fit)."""
+    n, sums = _cluster_sums(X, labels)
+    return float(((X - (sums / n[:, None])[labels]) ** 2).sum())
+
+
+def _silhouette(X, labels) -> float:
+    """MLlib ``ClusteringEvaluator``'s squared-Euclidean silhouette, in its
+    closed form: a point's mean squared distance to cluster c is
+    ‖x‖² + Σ‖y‖²/N_c − 2·x·Σy/N_c, O(n·k·d) with no n×n matrix. The own
+    cluster's mean is rescaled by N/(N−1) to leave the point out, a
+    singleton scores 0, and the result is the mean over points."""
+    import numpy as np
+
+    n, sums = _cluster_sums(X, labels)
+    if len(n) < 2:
+        return float("nan")
+    sq = (X * X).sum(axis=1)
+    d = sq[:, None] + np.bincount(labels, weights=sq) / n - 2 * (X @ sums.T) / n
+    rows = np.arange(len(X))
+    size = n[labels]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        a = d[rows, labels] * size / (size - 1)
+        d[rows, labels] = np.inf
+        b = d.min(axis=1)
+        s = np.where(a < b, 1 - a / b, np.where(a > b, b / a - 1, 0.0))
+    return float(np.where(size == 1, 0.0, s).mean())
 
 
 def pca_project(

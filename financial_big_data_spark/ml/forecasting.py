@@ -9,7 +9,7 @@ windows of 16 features (reference src/models/lstm_forecasting.py:15-35,
          → sequences (collect_list window)
          → ordered 70/15/15 split
          → model scoring → (true, pred) DataFrame
-         → metrics (accuracy / F1 / confusion as aggregates)
+         → metrics (one confusion collect; accuracy / F1 from its counts)
 
 The model itself is pluggable:
 
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..operators.features import FEATURE_COLS, lstm_features, ordered_split
 from ..operators.regime import ShortTermThresholds, detect_regime_5way, regime_features
-from .metrics import accuracy, confusion_matrix, per_class_f1, weighted_f1
+from .metrics import evaluate
 
 try:  # pragma: no cover - torch is absent in the test container
     import torch  # noqa: F401
@@ -802,19 +802,13 @@ def forecast_and_evaluate(
         )
     else:
         scored = persistence_baseline(ds)
-    # every metric frame re-reads the scored test split — cache it so the
-    # feature pipeline (incl. the grouped-map MACD) computes once, not once
-    # per metric action (tracked: bulk-released between registry queries)
+    # the confusion collect fills this cache, so a caller reading the
+    # predictions does not recompute the feature pipeline (incl. the
+    # grouped-map MACD); tracked: bulk-released between registry queries
     from ..cache import tracked_persist
 
     test = tracked_persist(
         scored.where(F.col("split") == "test")
         .select(series, time, "true_label", "pred_label", "split")
     )
-    return ForecastResult(
-        predictions=test,
-        accuracy=accuracy(test),
-        weighted_f1=weighted_f1(test),
-        per_class_f1=per_class_f1(test),
-        confusion=confusion_matrix(test),
-    )
+    return ForecastResult(test, *evaluate(test))

@@ -78,6 +78,17 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return DataFrame(new_jdf, df.sparkSession)
 
 
+def _bounded_collect(df: DataFrame, cap: int) -> list | None:
+    """``df``'s rows when it has at most ``cap`` of them, else None, in ONE
+    Spark job (plus any upstream shuffle's): ``coalesce(1)`` before the
+    limit, because a limit over a checkpointed or large multi-partition
+    frame scans one partition and then the rest, two jobs (measured). The
+    collect that decides a size-routed operator's route also feeds its
+    driver path."""
+    rows = df.coalesce(1).limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
+
+
 def _undirected(edges: DataFrame) -> DataFrame:
     fwd = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     rev = edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
@@ -362,13 +373,9 @@ def _louvain_levels(
     m = mapping = rows = None
     for level in range(max_levels + 1):
         if driver_finish_edges is not None:
-            # one bounded collect decides the route AND feeds the finish.
-            # coalesce(1) first keeps it one job: a limit over a checkpointed
-            # or large multi-partition frame otherwise takes two (measured)
-            rows = cur.coalesce(1).limit(driver_finish_edges + 1).collect()
-            if len(rows) <= driver_finish_edges:
+            rows = _bounded_collect(cur, driver_finish_edges)
+            if rows is not None:
                 break
-            rows = None
         if level == max_levels:
             break
         if m is None:

@@ -125,27 +125,32 @@ def _sqdist_np(S, C, Sn=None):
     return np.maximum(d2, 0.0)
 
 
-def _lloyd_np(S, k: int, n_iter: int = 10):
-    """Small deterministic numpy Lloyd over a driver-held sample slice:
-    seeds are evenly-spaced rows of the (already hash-ordered) sample,
-    empty clusters keep their previous center. Driver-side by design —
-    OPQ's alternation needs m × n_iter tiny k-means fits over ≤ a few
-    thousand rows; a distributed fit per alternation would be all job
-    floor. Assignment + center update are fully vectorized (one dgemm +
-    one bincount per iteration) — the per-cluster boolean-mask mean loop
-    was 184k interpreted numpy calls per opq_train (optimization r13).
-    The mean update changed numerics too: ``np.add.at`` sums divided by
-    the bincount accumulate in a different order than the old
-    ``S[mask].mean(0)``, so centers can differ in the last float bits,
-    on top of the argmin near-ties of ``_sqdist_np``; property tests, not
-    exact floats, pin this path."""
+def _lloyd_np(S, k: int, n_iter: int = 10, init=None):
+    """Small deterministic numpy Lloyd over driver-held rows, with two
+    callers. OPQ's alternation needs m × n_iter tiny k-means fits over ≤ a
+    few thousand sample rows; ``ml.clustering.kmeans_clusters`` clusters
+    an input under its row cap on the driver, passing k-means++ centers
+    as ``init`` (k rows). Without ``init`` the seeds are evenly-spaced
+    rows of the (already hash-ordered) sample. Empty clusters keep their
+    previous center. Driver-side by design: a distributed fit per call
+    would be all job floor. Assignment + center update are fully
+    vectorized (one dgemm + one bincount per iteration) — the per-cluster
+    boolean-mask mean loop was 184k interpreted numpy calls per
+    opq_train (optimization r13). The mean update changed numerics too:
+    ``np.add.at`` sums divided by the bincount accumulate in a different
+    order than the old ``S[mask].mean(0)``, so centers can differ in the
+    last float bits, on top of the argmin near-ties of ``_sqdist_np``;
+    property tests, not exact floats, pin this path."""
     import numpy as np
 
-    n = S.shape[0]
-    idx = np.linspace(0, n - 1, num=min(k, n), dtype=int)
-    C = S[idx].copy()
-    if len(C) < k:  # degenerate tiny sample: pad by repeating rows
-        C = np.vstack([C, C[: k - len(C)]])
+    if init is not None:
+        C = np.array(init, dtype=float)
+    else:
+        n = S.shape[0]
+        idx = np.linspace(0, n - 1, num=min(k, n), dtype=int)
+        C = S[idx].copy()
+        if len(C) < k:  # degenerate tiny sample: pad by repeating rows
+            C = np.vstack([C, C[: k - len(C)]])
     Sn = (S * S).sum(1)  # constant across iterations
     for _ in range(n_iter):
         a = _sqdist_np(S, C, Sn).argmin(1)

@@ -151,17 +151,20 @@ def _events_ts_unit(path: str) -> str:
     (first file of the directory for a partitioned 100 TB layout), not a
     data scan.
     """
+    import pyarrow.parquet as pq
+
     p = path
     if os.path.isdir(path):
         parts = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
         if parts:
             p = os.path.join(path, parts[0])
+    # a missing or unreadable file (OSError), a corrupt footer (ArrowInvalid,
+    # a ValueError) or no ts column (KeyError): assume standard micros
     try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(p).schema_arrow.field("ts").type.unit
-    except Exception:  # noqa: BLE001 — unreadable footer: assume standard micros
+        ts_type = pq.ParquetFile(p).schema_arrow.field("ts").type
+    except (OSError, ValueError, KeyError):
         return "us"
+    return getattr(ts_type, "unit", "us")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -181,12 +181,14 @@ def _footer_schema_matches(file: str, sch) -> bool:
     carried files cannot satisfy — type mismatch falls back to inference,
     which resolves the conflict or fails with the real error."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
+    # an unreadable file (OSError), a corrupt footer (ArrowInvalid, a
+    # ValueError) or an arrow type Spark cannot map (PySparkTypeError, a
+    # TypeError): inference decides
     try:
-        from pyspark.sql.pandas.types import from_arrow_schema
-
         conv = from_arrow_schema(pq.ParquetFile(file).schema_arrow)
-    except Exception:  # noqa: BLE001 - unconvertible arrow type: inference decides
+    except (OSError, ValueError, TypeError):
         return False
     return [(f.name, f.dataType) for f in conv.fields] == [
         (f.name, f.dataType) for f in sch.fields

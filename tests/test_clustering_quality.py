@@ -57,6 +57,137 @@ def test_kmeans_deterministic_across_runs(spark, blobs_df):
     assert ra == rb
 
 
+def _jobs_in_group(spark, group, fn):
+    """``fn()``'s result and the Spark jobs it ran under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _labels(rows, feats):
+    """(features, 0..k'-1 cluster labels) of collected assignment rows."""
+    X = np.array([[r[c] for c in feats] for r in rows], dtype=float)
+    return X, np.unique([r.cluster for r in rows], return_inverse=True)[1]
+
+
+def _partition(rows) -> set:
+    """Clusters as a set of id sets, independent of their labels."""
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault(r.cluster, set()).add(r.id)
+    return {frozenset(g) for g in groups.values()}
+
+
+@pytest.mark.parametrize("standardize", [False, True])
+def test_kmeans_driver_quality_matches_mllib(spark, blobs_df, monkeypatch, standardize):
+    """On MLlib's own assignment, the driver route's closed-form silhouette
+    equals ClusteringEvaluator's and its inertia MLlib's training cost, in
+    raw and in standardized (ddof=1) feature space."""
+    import financial_big_data_spark.ml.clustering as mc
+
+    monkeypatch.setattr(mc, "_KMEANS_DRIVER_MAX_ROWS", 10)
+    assigned, want = mc.kmeans_clusters(blobs_df, FEATS, k=3, seed=42, standardize=standardize)
+    X, labels = _labels(assigned.collect(), FEATS)
+    if standardize:
+        X = (X - X.mean(axis=0)) / X.std(axis=0, ddof=1)
+    assert abs(mc._silhouette(X, labels) - want["silhouette"]) <= 1e-9
+    assert abs(mc._inertia(X, labels) - want["inertia"]) <= 1e-9
+    # the driver route finds that partition too, and reports its quality
+    driver, got = kmeans_clusters(blobs_df, FEATS, k=3, seed=42, standardize=standardize)
+    assert _partition(driver.collect()) == _partition(assigned.collect())
+    assert abs(got["silhouette"] - want["silhouette"]) <= 1e-9
+    assert abs(got["inertia"] - want["inertia"]) <= 1e-9
+
+
+def test_kmeans_driver_route_job_budget(spark, blobs_df, monkeypatch):
+    """Under the row cap the call is one bounded collect: at most 2 Spark
+    jobs, and MLlib is never fitted."""
+    import financial_big_data_spark.ml.clustering as mc
+
+    def no_mllib(*args, **kwargs):
+        raise AssertionError("an input under the row cap must not reach MLlib")
+
+    monkeypatch.setattr(mc, "KMeans", no_mllib)
+    (assigned, metrics), n_jobs = _jobs_in_group(
+        spark, "kmeans_driver_route",
+        lambda: kmeans_clusters(blobs_df, FEATS, k=3, seed=42, standardize=False),
+    )
+    assert n_jobs <= 2
+    assert metrics["silhouette"] > 0.8 and metrics["k"] == 3
+    assert assigned.schema.fieldNames() == blobs_df.columns + ["cluster"]
+
+
+def test_kmeans_driver_skips_null_and_nan_rows(spark, blobs_df):
+    """A row with a NULL or NaN feature is skipped, as VectorAssembler's
+    handleInvalid="skip" does; the rest cluster as without it."""
+    bad = spark.createDataFrame(
+        [("nul", -1, None, 0.0, 0.0, 0.0), ("nan", -1, 1.0, float("nan"), 0.0, 0.0)],
+        blobs_df.schema,
+    )
+    a, ma = kmeans_clusters(blobs_df.union(bad), FEATS, k=3, seed=42)
+    b, mb = kmeans_clusters(blobs_df, FEATS, k=3, seed=42)
+    assert a.count() == blobs_df.count()
+    assert _partition(a.collect()) == _partition(b.collect())
+    assert ma == mb
+
+
+def test_kmeans_driver_zero_variance_column_and_k_above_n(spark, blobs_df):
+    """Standardized, a zero-variance feature maps to 0 and changes
+    nothing. k above the distinct point count gives one cluster per
+    distinct point, as MLlib: inertia 0, and a singleton's silhouette is
+    0 (a duplicated point's is 1). A single cluster has no silhouette
+    (NaN)."""
+    import math
+
+    with_const = blobs_df.withColumn("c", F.lit(5.0))
+    a, ma = kmeans_clusters(with_const, ["c", *FEATS], k=3, seed=42)
+    b, mb = kmeans_clusters(blobs_df, FEATS, k=3, seed=42)
+    assert _partition(a.collect()) == _partition(b.collect())
+    assert abs(ma["inertia"] - mb["inertia"]) < 1e-12
+    assert abs(ma["silhouette"] - mb["silhouette"]) < 1e-12
+
+    rows = [("p", 0, 1.0, 2.0, 0.0, 0.0), ("q", 0, 1.0, 3.0, 0.0, 0.0),
+            ("r", 0, 1.0, 9.0, 0.0, 0.0), ("r2", 0, 1.0, 9.0, 0.0, 0.0)]
+    small = spark.createDataFrame(rows, blobs_df.schema)
+    out, m = kmeans_clusters(small, FEATS, k=10, seed=42)
+    got = {r.id: r.cluster for r in out.collect()}
+    assert sorted(set(got.values())) == [0, 1, 2] and got["r"] == got["r2"]
+    assert m["inertia"] == 0.0 and m["silhouette"] == 0.5
+    _distinct, m3 = kmeans_clusters(small.where("id != 'r2'"), FEATS, k=3, seed=42)
+    assert m3["inertia"] == 0.0 and m3["silhouette"] == 0.0
+    _one, m1 = kmeans_clusters(small.limit(1), FEATS, k=3, seed=42)
+    assert m1["inertia"] == 0.0 and math.isnan(m1["silhouette"])
+
+
+def test_kmeans_driver_seeded_and_row_order_invariant(spark, blobs_df):
+    """The same seed gives the same clusters and metrics, whatever order
+    the input's rows arrive in."""
+    a, ma = kmeans_clusters(blobs_df, FEATS, k=3, seed=7)
+    b, mb = kmeans_clusters(blobs_df, FEATS, k=3, seed=7)
+    c, mc_ = kmeans_clusters(blobs_df.orderBy(F.desc("x3")), FEATS, k=3, seed=7)
+    ids = {r.id: r.cluster for r in a.collect()}
+    assert ids == {r.id: r.cluster for r in b.collect()} == {r.id: r.cluster for r in c.collect()}
+    assert ma == mb == mc_
+
+
+def test_kmeans_blob_tests_on_mllib_route(spark, blobs_df, monkeypatch):
+    """Above the row cap MLlib runs, and the blob tests hold there too."""
+    import financial_big_data_spark.ml.clustering as mc
+
+    def no_driver(*args, **kwargs):
+        raise AssertionError("an input over the row cap must take the MLlib route")
+
+    monkeypatch.setattr(mc, "_KMEANS_DRIVER_MAX_ROWS", 10)
+    monkeypatch.setattr(mc, "_kmeans_driver", no_driver)
+    test_kmeans_recovers_blobs(spark, blobs_df)
+    test_kmeans_deterministic_across_runs(spark, blobs_df)
+
+
 def test_pca_variance_concentration(spark, blobs_df):
     out = pca_project(blobs_df, FEATS, k=3, standardize=False)
     pcs = np.array([r.pc for r in out.collect()])

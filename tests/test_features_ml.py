@@ -4,10 +4,18 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from financial_big_data_spark.functions.ewm import ewm_mean, macd
-from financial_big_data_spark.ml.metrics import accuracy, per_class_f1, weighted_f1
+from financial_big_data_spark.ml.metrics import (
+    accuracy,
+    confusion_matrix,
+    confusion_summary,
+    evaluate,
+    per_class_f1,
+    weighted_f1,
+)
 from financial_big_data_spark.operators.features import (
     FEATURE_COLS,
     lstm_features,
@@ -138,6 +146,74 @@ def test_weighted_f1(spark):
     got = weighted_f1(_preds(spark)).collect()[0].weighted_f1
     exp = (pc["a"] * 10 + pc["b"] * 10) / 20
     assert abs(got - exp) < 1e-12
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        [],
+        [("a", "c")] * 3,
+        [("d", "a")] * 2 + [("d", "b")],
+        [(None, "a"), ("b", None), (None, None)],
+    ],
+    ids=["preds", "pred_only_class", "true_only_class", "null_labels"],
+)
+def test_confusion_summary_matches_dataframe_metrics(spark, extra):
+    """The driver derivation from the confusion counts equals the DataFrame
+    metrics exactly, including a class seen only in predictions (recall
+    NULL), one seen only in truth (precision NULL) and NULL labels; the
+    frames ``evaluate`` returns carry the DataFrame functions' schemas."""
+    preds = _preds(spark).union(
+        spark.createDataFrame(extra, "true_label string, pred_label string")
+    )
+    want = (accuracy(preds), weighted_f1(preds), per_class_f1(preds), confusion_matrix(preds))
+    acc, wf1, pc, cm = ([tuple(r) for r in f.collect()] for f in want)
+    got_acc, got_n, got_pc, got_wf1 = confusion_summary(cm)
+    assert [(got_acc, got_n)] == acc
+    assert [(got_wf1,)] == wf1
+    assert sorted(got_pc, key=repr) == sorted(pc, key=repr)
+    for frame, ref, rows in zip(evaluate(preds), want, (acc, wf1, pc, cm)):
+        assert frame.schema == ref.schema
+        assert sorted(map(tuple, frame.collect()), key=repr) == sorted(rows, key=repr)
+
+
+def test_forecast_metric_frames_cost_one_action(spark, bars_df, monkeypatch):
+    """forecast_and_evaluate and reading every metric frame it returns run
+    Spark jobs from ONE action: the confusion collect. The frames are
+    local relations, so reading them runs none."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from financial_big_data_spark.ml.forecasting import forecast_and_evaluate
+
+    sc = spark.sparkContext
+    group = "forecast_metric_frames"
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    per_collect = []  # the jobs each DataFrame.collect ran
+    collect = DataFrame.collect
+
+    def counted(self):
+        before = jobs()
+        out = collect(self)
+        per_collect.append(jobs() - before)
+        return out
+
+    monkeypatch.setattr(DataFrame, "collect", counted)
+    sc.setJobGroup(group, group)
+    try:
+        res = forecast_and_evaluate(bars_df)
+        for frame in (res.accuracy, res.weighted_f1, res.per_class_f1, res.confusion):
+            frame.collect()
+            frame.first()
+        total = jobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    res.unpersist()
+    assert total > 0
+    assert [n for n in per_collect if n] == [total]
 
 
 def test_welch_ttest_matches_numpy(spark):

@@ -364,6 +364,27 @@ def test_small_graph_takes_driver_route_at_entry(spark, monkeypatch):
     assert part == {c * 10 + i: c * 10 for c in range(6) for i in range(5)}
 
 
+def test_bounded_collect_one_job(spark):
+    """``_bounded_collect`` returns a frame's rows when it has at most
+    ``cap`` of them and None above, in one Spark job on a checkpointed
+    4-partition frame, where a plain limit scans one partition, then the
+    rest."""
+    from financial_big_data_spark.ml.graph import _bounded_collect
+
+    df = spark.range(0, 1000, numPartitions=4).localCheckpoint()
+    sc = spark.sparkContext
+    for cap, want in ((1000, 1000), (999, None)):
+        group = f"bounded_collect_{cap}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = _bounded_collect(df, cap)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert (None if rows is None else len(rows)) == want
+
+
 def test_louvain_communities_without_weight_column(spark):
     """The driver entry reads (src, dst) edges with no weight column as
     unit weights and returns the two planted cliques; an empty edge list

@@ -12,8 +12,9 @@ import datetime
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from financial_big_data_spark.sources.tables import load_table
+from financial_big_data_spark.sources.tables import _events_ts_unit, load_table
 
 
 def _write_events(path: str, unit: str) -> list[datetime.datetime]:
@@ -53,3 +54,26 @@ def test_load_table_reads_nanos_and_micros_identically(spark, tmp_path):
     assert got["ns"] == got["us"]
     for i, ts in enumerate(expected, start=1):
         assert got["us"][i] == ts, (i, got["us"][i], ts)
+
+
+def test_events_ts_unit_falls_back_only_on_expected_errors(tmp_path, monkeypatch):
+    """A corrupt footer, a missing ts column or a non-timestamp ts reads as
+    micros; any other error propagates instead of silently picking a unit."""
+    bad = tmp_path / "bad.parquet"
+    bad.write_text("not parquet")
+    no_ts = tmp_path / "no_ts.parquet"
+    pq.write_table(pa.table({"a": [1]}), no_ts)
+    long_ts = tmp_path / "long_ts.parquet"
+    pq.write_table(pa.table({"ts": [1]}), long_ts)
+    nanos = tmp_path / "events.parquet"
+    _write_events(str(nanos), "ns")
+    assert [_events_ts_unit(str(p)) for p in (bad, no_ts, long_ts, nanos)] == [
+        "us", "us", "us", "ns"
+    ]
+
+    def unexpected(*args, **kwargs):
+        raise RuntimeError("unexpected")
+
+    monkeypatch.setattr(pq, "ParquetFile", unexpected)
+    with pytest.raises(RuntimeError, match="unexpected"):
+        _events_ts_unit(str(nanos))

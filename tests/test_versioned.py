@@ -461,3 +461,32 @@ def test_scan_files_type_mismatch_falls_back_to_inference(spark, vpath):
     got = _scan_files(spark, vpath, files)
     assert got.schema["v"].dataType.typeName() == "long"  # inference won
     assert got.count() == 50
+
+
+def test_footer_schema_check_falls_back_only_on_expected_errors(tmp_path, monkeypatch):
+    """A corrupt footer or an arrow type Spark cannot map leaves the scan to
+    inference (False); any other error propagates."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.pandas.types as ptypes
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from financial_big_data_spark.sources.versioned import _footer_schema_matches
+
+    sch = StructType([StructField("a", LongType())])
+    bad = tmp_path / "bad.parquet"
+    bad.write_text("not parquet")
+    unsigned = tmp_path / "unsigned.parquet"
+    pq.write_table(pa.table({"a": pa.array([1], pa.uint64())}), unsigned)
+    good = tmp_path / "good.parquet"
+    pq.write_table(pa.table({"a": pa.array([1], pa.int64())}), good)
+    assert [_footer_schema_matches(str(p), sch) for p in (bad, unsigned, good)] == [
+        False, False, True
+    ]
+
+    def unexpected(*args, **kwargs):
+        raise RuntimeError("unexpected")
+
+    monkeypatch.setattr(ptypes, "from_arrow_schema", unexpected)
+    with pytest.raises(RuntimeError, match="unexpected"):
+        _footer_schema_matches(str(good), sch)
