@@ -1,25 +1,25 @@
 """Clustering / decomposition operators (SURVEY §2.9 M1-M5).
 
-K-Means routes by row count at entry, as Louvain and DBSCAN route by graph
-size: one bounded collect decides, and an input of at most
-``_KMEANS_DRIVER_MAX_ROWS`` rows (the reference clusters ~100 symbol
-profiles with sklearn) is clustered on the driver with k-means++ and
-``operators.pq._lloyd_np``, scored with MLlib's own silhouette closed form;
-a larger one runs MLlib's KMeans and ``ClusteringEvaluator``. PCA is
-MLlib's.
+The reference runs its clustering steps on one node: sklearn k-means and
+DBSCAN on ~100 symbol profiles and networkx Louvain on the ≤100-node
+correlation graph (reference clustering.py:24-56, market_analysis.py:
+310-374). K-Means, DBSCAN and Louvain (``ml.graph``'s one entry point,
+which ``louvain_communities_df`` delegates to) share one routing shape:
+one bounded collect (``local.bounded_collect``) decides at entry. An
+input under the cap is computed on the driver — k-means++ refined by
+``operators.pq._lloyd_np`` and scored with MLlib's silhouette closed
+form; numpy DBSCAN over an n×n distance matrix; seeded networkx Louvain
+— and its result comes back as an Arrow local relation
+(``local.local_frame``), so reading it runs no Spark job. A larger input
+runs the distributed algorithm: MLlib KMeans and ``ClusteringEvaluator``;
+the ε-grid DBSCAN with ``ml.graph.connected_components``; the Louvain
+sweeps.
 
-Louvain and DBSCAN have no MLlib implementation; the reference runs them
-on ≤100-node symbol graphs (reference market_analysis.py:310-374), so the
-engine computes the *inputs* distributed (correlation matrix → edge list
-→ ε-graph). The correlation
-matrix is pairwise-complete like the reference's pandas ``.corr()``: masked
-moments summed on the executors, or, above 2500 series, listwise
-distributed column similarities. Louvain is ``ml.graph``'s one entry point
-(``louvain_communities_df`` delegates to ``louvain_distributed_df``), which
-routes by graph size: a graph under its edge cap runs on the driver, a
-larger one sweeps distributed. DBSCAN routes by node count the same way:
-driver components, or ``ml.graph.connected_components`` (the ε-graph
-labelling step of distributed DBSCAN) over the same edge DataFrame.
+The correlation matrix that feeds the graph is pairwise-complete like the
+reference's pandas ``.corr()``: masked moments summed on the executors,
+finished on the driver into a local relation, or, above 2500 series,
+listwise distributed column similarities. PCA is MLlib's, with an
+audit-grade power-iteration twin.
 """
 
 from __future__ import annotations
@@ -31,7 +31,8 @@ from pyspark.ml.clustering import KMeans
 from pyspark.ml.evaluation import ClusteringEvaluator
 from pyspark.ml.feature import PCA, StandardScaler, VectorAssembler
 
-from .graph import _bounded_collect, louvain_distributed_df
+from ..local import bounded_collect, local_frame
+from .graph import louvain_distributed_df
 
 
 def _assemble(df: DataFrame, feature_cols: list[str], standardize: bool) -> DataFrame:
@@ -74,7 +75,7 @@ def kmeans_clusters(
     the squared-Euclidean one of MLlib's ``ClusteringEvaluator``, both in
     the clustered (standardized) space.
 
-    Routes by row count at entry: one bounded collect (``_bounded_collect``)
+    Routes by row count at entry: one bounded collect (``local.bounded_collect``)
     of at most ``_KMEANS_DRIVER_MAX_ROWS`` rows clusters on the driver,
     above it MLlib's distributed fit runs. The reference clusters ~100 symbol
     profiles with sklearn on one node, and on a table that small MLlib's
@@ -89,7 +90,7 @@ def kmeans_clusters(
     singleton's silhouette is 0. A single cluster has no silhouette (NaN).
     Cluster ids are 0..k'-1 on the driver route.
     """
-    rows = _bounded_collect(df, _KMEANS_DRIVER_MAX_ROWS)
+    rows = bounded_collect(df, _KMEANS_DRIVER_MAX_ROWS)
     if rows is not None:
         return _kmeans_driver(df, rows, feature_cols, k, seed, standardize)
     # tracked: the returned assignments are lazy over this frame, so it must
@@ -140,9 +141,7 @@ def _kmeans_driver(df, rows, feature_cols, k, seed, standardize) -> tuple[DataFr
     cluster = np.empty(len(X), dtype=int)
     cluster[order] = labels
     schema = StructType(df.schema.fields + [StructField("cluster", IntegerType(), False)])
-    assigned = df.sparkSession.createDataFrame(
-        [(*r, int(c)) for r, c in zip(rows, cluster)], schema
-    )
+    assigned = local_frame(df.sparkSession, [(*r, int(c)) for r, c in zip(rows, cluster)], schema)
     return assigned, {"silhouette": _silhouette(X, labels), "inertia": inertia, "k": k}
 
 
@@ -306,7 +305,8 @@ def correlation_matrix(df: DataFrame, key: str, time: str, value: str) -> DataFr
     corr[(vx <= tol * sxx) | (vy <= tol * syy)] = np.nan
     keep = n > 0
     pairs = zip(i[keep].tolist(), j[keep].tolist(), corr[keep].tolist(), n[keep].tolist())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(keys[a], keys[b], None if math.isnan(c) else c, int(c_n)) for a, b, c, c_n in pairs],
         _pair_schema(df, key),
     )
@@ -352,15 +352,11 @@ def _correlation_matrix_distributed(
     from pyspark.ml.stat import Summarizer
     from pyspark.mllib.linalg import Vectors
     from pyspark.mllib.linalg.distributed import RowMatrix
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     from ..cache import tracked_persist
 
     spark = df.sparkSession
-    idx = spark.createDataFrame(
-        [(kk, i) for i, kk in enumerate(keys)],
-        StructType([StructField("_k", df.schema[key].dataType), StructField("_ki", IntegerType())]),
-    )
+    key_type = df.schema[key].dataType.simpleString()
+    idx = local_frame(spark, [(kk, i) for i, kk in enumerate(keys)], f"_k {key_type}, _ki int")
     vecs = tracked_persist(
         df.select(F.col(key).alias("_k"), F.col(time).alias("_t"), F.col(value).alias("_v"))
         .where(F.col("_v").isNotNull())
@@ -374,7 +370,7 @@ def _correlation_matrix_distributed(
     )
     n_complete = vecs.count()
     if n_complete == 0:  # Summarizer refuses an empty input
-        return spark.createDataFrame([], _pair_schema(df, key))
+        return local_frame(spark, [], _pair_schema(df, key))
     mu = vecs.select(Summarizer.mean(vecs["_v"])).head()[0].toArray()
     rm = RowMatrix(vecs.rdd.map(lambda r: Vectors.dense(r._v.toArray() - mu)))
     sims = rm.columnSimilarities()  # exact; upper triangle (i < j)
@@ -453,6 +449,11 @@ def _sq_dist(va: str, vb: str) -> F.Column:
     )
 
 
+# The driver DBSCAN holds the collected points and one n×n float64
+# distance matrix, 32 MB at 2000 points. Above the cap the ε-grid runs.
+_DBSCAN_DRIVER_MAX_NODES = 2000
+
+
 def dbscan(
     df: DataFrame,
     id_col: str,
@@ -460,148 +461,157 @@ def dbscan(
     eps: float | None = None,
     min_pts: int | None = None,
     eps_percentile: float = 0.9,
-    mode: str = "auto",
-    driver_max_nodes: int = 2000,
+    driver_max_nodes: int | None = _DBSCAN_DRIVER_MAX_NODES,
     count_candidates: bool = False,
 ) -> tuple[DataFrame, dict]:
     """M3/M4: DBSCAN via ε-graph + connected components of core points.
 
-    Two physical regimes, routed automatically by node count (``mode`` can
-    pin ``"driver"``/``"distributed"``):
+    Routes by point count at entry, as k-means and Louvain do: one bounded
+    collect (``local.bounded_collect``) of the (id as string, features as
+    doubles) points decides.
 
-    - **driver** (n ≤ driver_max_nodes): all-pairs distances + networkx
-      components — the reference's own scale class (sklearn DBSCAN on ≤100
-      symbols, market_analysis.py:310-374).
-    - **distributed** (everything else): ε-grid candidate pruning — each
-      point is hashed to a ⌊x/ε⌋ cell on its top-2 principal-component
-      projections (max-variance directions, so cells stay spread even when
-      individual raw dims are degenerate; projection is 1-Lipschitz so the
-      grid remains an exact superset of ε-neighbors — no all-pairs
-      cartesian), then core flags and the core-graph
-      ``ml.graph.connected_components`` labelling stay DataFrames end to
-      end. The only collects are cluster-count-bounded metadata (the dense
-      relabel map), never fact rows. ``count_candidates=True`` adds an
-      ``n_candidates`` stat (one extra count job) so tests can pin the
-      candidate-pair ratio.
+    - **driver** (≤ ``driver_max_nodes`` points, the reference's scale
+      class: sklearn DBSCAN on ≤100 symbols, market_analysis.py:310-374):
+      numpy over the collected points, no further Spark job.
+    - **distributed** (above the cap; ``driver_max_nodes=None`` always):
+      ε-grid candidate pruning — each point is hashed to a ⌊x/ε⌋ cell on
+      its top-2 principal-component projections (max-variance directions,
+      so cells stay spread even when individual raw dims are degenerate;
+      projection is 1-Lipschitz so the grid remains an exact superset of
+      ε-neighbors — no all-pairs cartesian), then core flags and the
+      core-graph ``ml.graph.connected_components`` labelling stay
+      DataFrames end to end; the only collect is the cluster-count-sized
+      relabel map. ``count_candidates=True`` adds an ``n_candidates`` stat
+      (one extra count job) so tests can pin the candidate-pair ratio.
 
-    eps default (M4): P-``eps_percentile`` of 1-NN distances — the
-    reference's KneeLocator fallback (market_analysis.py:875-879) — over a
-    bounded sample at scale.
+    Both routes return the same rows: a distance is sqrt(Σ(x−y)²) summed
+    dimension by dimension in the same order; a core point has
+    ≥ ``min_pts`` − 1 neighbours within eps (sklearn counts the point
+    itself; default max(⌊ln n⌋, 3)); clusters are the connected components
+    of core–core pairs; a border point joins the cluster of its smallest
+    core neighbour id; clusters are numbered 0..k−1 by their smallest core
+    member id (string order). Returns ((id, cluster, is_noise) DataFrame,
+    params); cluster = -1 → noise.
 
-    Core semantics match sklearn: ``min_pts`` counts the point itself, so
-    the neighbor-pair threshold is ``n_neigh >= min_pts - 1``.
-    Returns ((id, cluster, is_noise) DataFrame, params). cluster = -1 → noise.
-
-    Raises ``ValueError`` when auto-eps resolves to 0 — e.g. duplicate-heavy
-    data where the 1-NN-distance percentile is exactly 0. Pass an explicit
-    ``eps`` (or pre-dedup the points) for such degenerate inputs; eps=0
-    would silently mean "exact duplicates only", which is never what DBSCAN
-    callers intend.
+    eps default (M4): the Kneedle elbow of the sorted 1-NN distance curve,
+    else its ``eps_percentile`` quantile (the reference's KneeLocator and
+    fallback, market_analysis.py:856-879), over every point on the driver
+    route and over a collected hash sample of about ``driver_max_nodes``
+    points (2000 when None) on the distributed one. Raises ``ValueError``
+    when eps resolves to ≤ 0 — e.g. duplicate-heavy data whose 1-NN
+    percentile is exactly 0; pass an explicit ``eps`` (or pre-dedup the
+    points), as eps=0 would silently mean "exact duplicates only".
     """
     import math
 
-    n = df.count()
+    import numpy as np
+
+    vec = F.array(*[F.col(c).cast("double") for c in feature_cols])
+    pts = df.select(F.col(id_col).cast("string").alias("_id"), vec.alias("_v"))
+    rows = None if driver_max_nodes is None else bounded_collect(pts, driver_max_nodes)
+    n = len(rows) if rows is not None else df.count()
     if min_pts is None:
         min_pts = max(int(math.log(max(n, 2))), 3)
-    vec = F.array(*[F.col(c).cast("double") for c in feature_cols])
-    n_block = min(2, len(feature_cols))
-    pts = df.select(
-        F.col(id_col).cast("string").alias("_id"), vec.alias("_v")
-    ).cache()
-    dist = _sq_dist("va", "vb")
+    if rows is not None:
+        sample = rows = sorted(rows, key=lambda r: (r[0] is not None, r[0] or ""))
+    else:
+        pts = pts.cache()
+        # deterministic spread sample: a hash filter on the point id is
+        # a pure function of the data (same rows regardless of physical
+        # layout), unlike limit() (whichever partitions answer first)
+        # or per-partition sample(seed) (reshuffles change the draw)
+        m = 1_000_000
+        thr = math.ceil(m * (driver_max_nodes or _DBSCAN_DRIVER_MAX_NODES) / max(n, 1))
+        spread = pts.where(F.pmod(F.xxhash64("_id"), F.lit(m)) < thr)
+        sample = [] if eps is not None else spread.collect()
+    X = np.array([r[1] for r in sample], dtype=float).reshape(len(sample), len(feature_cols))
+    dists = _pair_dists(X)
     if eps is None:
-        # M4: sorted 1-NN distance curve → Kneedle elbow, percentile
-        # fallback — the reference's two-step heuristic
-        # (market_analysis.py:856-872) over a bounded sample at scale.
-        import numpy as np
-
-        if n <= driver_max_nodes:
-            sample = pts
-        else:
-            # deterministic spread sample: a hash filter on the point id is
-            # a pure function of the data (same rows regardless of physical
-            # layout), unlike limit() (whichever partitions answer first)
-            # or per-partition sample(seed) (reshuffles change the draw)
-            m = 1_000_000
-            thr = int(math.ceil(m * driver_max_nodes / n))
-            sample = pts.where(F.pmod(F.xxhash64("_id"), F.lit(m)) < thr)
-        sa = sample.select(F.col("_id").alias("ia"), F.col("_v").alias("va"))
-        sb = sample.select(F.col("_id").alias("ib"), F.col("_v").alias("vb"))
-        knn = (
-            sa.join(sb, F.col("ia") != F.col("ib"))
-            .select("ia", dist.alias("d"))
-            .groupBy("ia")
-            .agg(F.min("d").alias("nn"))
-        )
-        nn_sorted = np.sort(np.array([r.nn for r in knn.collect()], dtype=float))
-        elbow = kneedle_elbow(nn_sorted)
-        if elbow is not None:
-            eps = float(nn_sorted[elbow])
-        else:
-            eps = float(np.percentile(nn_sorted, eps_percentile * 100))
+        eps = _auto_eps(dists, eps_percentile)
     if eps <= 0:
         raise ValueError(f"eps must be positive, got {eps}")
-
-    use_driver = mode == "driver" or (mode == "auto" and n <= driver_max_nodes)
-    if use_driver:
-        out, stats = _dbscan_driver(pts, dist, eps, min_pts, id_col)
+    if rows is not None:
+        out, stats = _dbscan_driver(pts.sparkSession, rows, dists, eps, min_pts, id_col)
     else:
         out, stats = _dbscan_distributed(
-            pts, dist, eps, min_pts, n_block, id_col,
-            count_candidates=count_candidates,
+            pts, eps, min_pts, min(2, len(feature_cols)), id_col, count_candidates
         )
-    pts.unpersist()
+        pts.unpersist()
     return out, {"eps": eps, "min_pts": min_pts, **stats}
 
 
-def _dbscan_driver(pts, dist, eps, min_pts, id_col) -> tuple[DataFrame, dict]:
-    import networkx as nx
+def _pair_dists(X):
+    """n×n Euclidean distances between the rows of ``X``, with +inf on the
+    diagonal (a point is not its own neighbour). Each is sqrt(Σ(x−y)²)
+    summed one dimension at a time, the order ``_sq_dist`` folds them in,
+    so both DBSCAN routes compare the same doubles with eps. Built a block
+    of rows at a time: never an n×n×d array, and no Gram expansion, whose
+    cancellation would move distances near eps."""
+    import numpy as np
 
-    a = pts.select(F.col("_id").alias("ia"), F.col("_v").alias("va"))
-    b = pts.select(F.col("_id").alias("ib"), F.col("_v").alias("vb"))
-    pairs = a.join(b, F.col("ia") != F.col("ib")).select("ia", "ib", dist.alias("d"))
-    neigh = pairs.where(F.col("d") <= eps).cache()
-    core = neigh.groupBy("ia").agg(F.count(F.lit(1)).alias("n_neigh")).where(
-        F.col("n_neigh") >= min_pts - 1  # sklearn counts the point itself
+    n, d = X.shape
+    D = np.empty((n, n))
+    for lo in range(0, n, 256):
+        block = np.zeros((min(256, n - lo), n))
+        for k in range(d):
+            diff = X[lo : lo + 256, k, None] - X[None, :, k]
+            block += diff * diff
+        D[lo : lo + 256] = np.sqrt(block)
+    np.fill_diagonal(D, np.inf)
+    return D
+
+
+def _auto_eps(dists, eps_percentile: float) -> float:
+    """M4: the Kneedle elbow of the sorted 1-NN distance curve, else its
+    ``eps_percentile`` quantile — the reference's two-step heuristic
+    (market_analysis.py:856-879). A NULL feature's NaN distances are
+    skipped, as Spark's ``min`` skips NULL."""
+    import numpy as np
+
+    nn = np.sort(np.fmin.reduce(dists, axis=1))
+    elbow = kneedle_elbow(nn)
+    if elbow is not None:
+        return float(nn[elbow])
+    return float(np.percentile(nn, eps_percentile * 100))
+
+
+def _dbscan_driver(spark, rows, dists, eps, min_pts, id_col) -> tuple[DataFrame, dict]:
+    """``dbscan``'s driver route over the collected points, sorted by id, and
+    their ``_pair_dists``: index order is id order, so a smallest id is a
+    smallest index."""
+    import numpy as np
+
+    neigh = dists <= eps
+    core = neigh.sum(axis=1) >= min_pts - 1  # sklearn counts the point itself
+    adj = neigh & core & core[:, None]
+    label = np.full(len(rows), -1)
+    for i in np.flatnonzero(core):
+        if label[i] < 0:  # the smallest id of a component not yet labelled
+            label[i], frontier = i, [i]
+            while len(frontier):
+                reached = adj[frontier].any(axis=0) & (label < 0)
+                label[reached] = i
+                frontier = np.flatnonzero(reached)
+    core_neigh = neigh & core
+    border = ~core & core_neigh.any(axis=1)
+    if border.any():
+        label[border] = label[core_neigh[border].argmax(axis=1)]  # first = smallest id
+    roots = np.unique(label[label >= 0])
+    cluster = np.where(label >= 0, np.searchsorted(roots, label), -1)
+    out = local_frame(
+        spark,
+        [(r[0], int(c), bool(c < 0)) for r, c in zip(rows, cluster)],
+        f"{id_col} string, cluster int, is_noise boolean",
     )
-    core_ids = {r.ia for r in core.collect()}
-    g = nx.Graph()
-    g.add_nodes_from(core_ids)
-    for r in neigh.collect():
-        if r.ia in core_ids and r.ib in core_ids:
-            g.add_edge(r.ia, r.ib)
-    label: dict = {}
-    for ci, comp in enumerate(nx.connected_components(g)):
-        for node in comp:
-            label[node] = ci
-    # border points attach to any core neighbor's cluster (deterministic: min)
-    border = (
-        neigh.where(F.col("ia").isin(list(core_ids)) == False)  # noqa: E712
-        .where(F.col("ib").isin(list(core_ids)))
-        .groupBy("ia")
-        .agg(F.min("ib").alias("via"))
-        .collect()
-        if core_ids
-        else []
-    )
-    neigh.unpersist()
-    for r in border:
-        label[r.ia] = label[r.via]
-    all_ids = [r._id for r in pts.select("_id").collect()]
-    rows = [(i, int(label.get(i, -1)), i not in label) for i in all_ids]
-    out = pts.sparkSession.createDataFrame(
-        rows, f"{id_col} string, cluster int, is_noise boolean"
-    )
-    n_clusters = len({v for v in label.values()})
-    return out, {"n_clusters": n_clusters, "n_noise": sum(1 for r in rows if r[2])}
+    return out, {"n_clusters": len(roots), "n_noise": int((cluster < 0).sum())}
 
 
 def _dbscan_distributed(
-    pts, dist, eps, min_pts, n_block, id_col, count_candidates=False
+    pts, eps, min_pts, n_block, id_col, count_candidates=False
 ) -> tuple[DataFrame, dict]:
     from .graph import connected_components
 
-    spark = pts.sparkSession
+    spark, dist = pts.sparkSession, _sq_dist("va", "vb")
     # Block on the top-n_block PRINCIPAL COMPONENTS, not the first raw
     # feature dims (VERDICT r3 weak #2): in high-dimensional or
     # first-two-dims-degenerate data, raw-dim cells concentrate occupancy
@@ -635,9 +645,7 @@ def _dbscan_distributed(
     from itertools import product
 
     offsets = list(product((-1, 0, 1), repeat=n_block))
-    off_df = spark.createDataFrame(
-        offsets, ", ".join(f"_d{i} int" for i in range(n_block))
-    )
+    off_df = local_frame(spark, offsets, ", ".join(f"_d{i} int" for i in range(n_block)))
     a_side = cells.select(
         F.col("_id").alias("ia"), F.col("_v").alias("va"),
         *[F.col(f"_c{i}") for i in range(n_block)],
@@ -687,9 +695,9 @@ def _dbscan_distributed(
     # dense 0..k-1 relabel: the map is #clusters rows — cluster metadata,
     # not fact data — so a driver-side enumerate + broadcast join is safe
     comp_ids = sorted(r.component for r in core_comp.select("component").distinct().collect())
-    relabel = spark.createDataFrame(
-        [(c, i) for i, c in enumerate(comp_ids)], "component string, cluster int"
-    ) if comp_ids else spark.createDataFrame([], "component string, cluster int")
+    relabel = local_frame(
+        spark, [(c, i) for i, c in enumerate(comp_ids)], "component string, cluster int"
+    )
     out = (
         pts.select(F.col("_id"))
         .join(labels.withColumnRenamed("node", "_id"), on="_id", how="left")
@@ -883,9 +891,7 @@ def power_iteration_pca(
         vec = [x / nrm for x in w]
     if vec[0] < 0:
         vec = [-x for x in vec]
-    vdf = df.sparkSession.createDataFrame(
-        [(i, x) for i, x in enumerate(vec)], "d int, vv double"
-    )
+    vdf = local_frame(df.sparkSession, list(enumerate(vec)), "d int, vv double")
     return (
         cd.join(F.broadcast(vdf), on="d")
         .groupBy(id_col)

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..local import bounded_collect, local_frame
+
 
 def _ckpt(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager)`` + STATISTICS RESET for iterative state.
@@ -76,17 +78,6 @@ def _ckpt(df: DataFrame) -> DataFrame:
         )
         return ck
     return DataFrame(new_jdf, df.sparkSession)
-
-
-def _bounded_collect(df: DataFrame, cap: int) -> list | None:
-    """``df``'s rows when it has at most ``cap`` of them, else None, in ONE
-    Spark job (plus any upstream shuffle's): ``coalesce(1)`` before the
-    limit, because a limit over a checkpointed or large multi-partition
-    frame scans one partition and then the rest, two jobs (measured). The
-    collect that decides a size-routed operator's route also feeds its
-    driver path."""
-    rows = df.coalesce(1).limit(cap + 1).collect()
-    return rows if len(rows) <= cap else None
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -373,7 +364,7 @@ def _louvain_levels(
     m = mapping = rows = None
     for level in range(max_levels + 1):
         if driver_finish_edges is not None:
-            rows = _bounded_collect(cur, driver_finish_edges)
+            rows = bounded_collect(cur, driver_finish_edges)
             if rows is not None:
                 break
         if level == max_levels:
@@ -381,7 +372,7 @@ def _louvain_levels(
         if m is None:
             m = cur.agg(F.sum("w")).first()[0]
             if not m:
-                return edges.sparkSession.createDataFrame([], schema), 0, 0.0
+                return local_frame(edges.sparkSession, [], schema), 0, 0.0
         labels = _louvain_phase1(cur, float(m), max_sweeps, tol)
         n_nodes, n_comms = labels.agg(
             F.count(F.lit(1)), F.countDistinct("comm")
@@ -415,11 +406,9 @@ def _louvain_levels(
     if rows is None:
         return mapping.select("node", F.col("comm").alias("community")), n_comms, None
     if not any(r.w for r in rows):
-        return edges.sparkSession.createDataFrame([], schema), 0, 0.0
+        return local_frame(edges.sparkSession, [], schema), 0, 0.0
     comms, q = _nx_louvain(rows)
-    out = edges.sparkSession.createDataFrame(
-        [(n, min(c)) for c in comms for n in c], schema
-    )
+    out = local_frame(edges.sparkSession, [(n, min(c)) for c in comms for n in c], schema)
     if mapping is not None:
         out = _ckpt(
             mapping.join(out.withColumnRenamed("node", "comm"), "comm")

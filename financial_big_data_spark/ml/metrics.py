@@ -3,28 +3,28 @@
 The reference computes accuracy / weighted & per-class F1 / confusion with
 sklearn on collected arrays (reference src/models/lstm_forecasting.py:
 288-302, lstm_analysis.py:144,193-196). Every metric is a closed form of
-the confusion counts. Two forms compute them:
+the confusion counts, and one form computes them:
 
-- The DataFrame functions (``confusion_matrix``, ``accuracy``,
-  ``per_class_f1``, ``weighted_f1``) are hash aggregates over a
-  (true, pred) DataFrame, distributed, no driver arrays:
+- ``confusion_matrix`` is the distributed step, a lazy hash aggregate
+  over a (true, pred) DataFrame: ``groupBy(true, pred).count()``, at most
+  classes² rows.
+- ``evaluate`` collects it ONCE and derives accuracy, per-class
+  precision/recall/F1 and weighted F1 on the driver with
+  ``confusion_summary``, in plain Python arithmetic. It returns them as
+  local relations (``local.local_frame``), so reading them runs no Spark
+  job. ``accuracy``, ``per_class_f1`` and ``weighted_f1`` are ``evaluate``'s
+  frames, so they are eager: each call runs the confusion collect.
 
-      confusion  = groupBy(true, pred).count()
-      accuracy   = avg(true == pred)
-      F1 family  = precision/recall per class from the confusion counts
-
-  The DuckDB oracle reproduces them bit-for-bit (the ``pred_*`` queries).
-- ``evaluate`` collects the confusion ONCE, at most classes² rows, and
-  derives the rest on the driver with ``confusion_summary``, the same
-  arithmetic in pure Python. Its frames are local relations with the
-  DataFrame functions' schemas, so reading them runs no Spark job: one
-  action in place of a plan per metric, for a forecast's test split.
+The DuckDB oracle reproduces them to the 6 digits the ``pred_*`` queries
+round to.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..local import local_frame
 
 
 def confusion_matrix(preds: DataFrame, true_col: str = "true_label", pred_col: str = "pred_label") -> DataFrame:
@@ -33,68 +33,43 @@ def confusion_matrix(preds: DataFrame, true_col: str = "true_label", pred_col: s
 
 
 def accuracy(preds: DataFrame, true_col: str = "true_label", pred_col: str = "pred_label") -> DataFrame:
-    """A14: overall accuracy as a 1-row DataFrame."""
-    return preds.agg(
-        F.avg((F.col(true_col) == F.col(pred_col)).cast("double")).alias("accuracy"),
-        F.count(F.lit(1)).alias("n"),
-    )
+    """A14: overall accuracy and row count as a 1-row (accuracy, n) frame,
+    ``evaluate``'s. Eager: the confusion collect runs here."""
+    return evaluate(preds, true_col, pred_col)[0]
 
 
 def per_class_f1(
     preds: DataFrame, true_col: str = "true_label", pred_col: str = "pred_label"
 ) -> DataFrame:
-    """A15: per-class precision/recall/F1 + support from confusion counts.
+    """A15: per-class (label, support, precision, recall, f1), ``evaluate``'s.
+    Eager: the confusion collect runs here.
 
     TP = n(true=c, pred=c); FP = n(pred=c) - TP; FN = n(true=c) - TP.
     Classes appearing only in predictions get recall NULL (no support),
     matching the divide-by-zero guard semantics.
     """
-    cm = confusion_matrix(preds, true_col, pred_col)
-    by_true = cm.groupBy(true_col).agg(F.sum("n").alias("support"))
-    by_pred = cm.groupBy(pred_col).agg(F.sum("n").alias("n_pred"))
-    tp = cm.where(F.col(true_col) == F.col(pred_col)).select(
-        F.col(true_col).alias("label"), F.col("n").alias("tp")
-    )
-    out = (
-        by_true.select(F.col(true_col).alias("label"), "support")
-        .join(by_pred.select(F.col(pred_col).alias("label"), "n_pred"), on="label", how="full")
-        .join(tp, on="label", how="left")
-        .na.fill({"tp": 0, "support": 0, "n_pred": 0})
-    )
-    precision = F.try_divide(F.col("tp"), F.col("n_pred"))
-    recall = F.try_divide(F.col("tp"), F.col("support"))
-    f1 = F.try_divide(2 * precision * recall, precision + recall)
-    return out.select(
-        "label",
-        "support",
-        precision.alias("precision"),
-        recall.alias("recall"),
-        F.coalesce(f1, F.lit(0.0)).alias("f1"),
-    )
+    return evaluate(preds, true_col, pred_col)[2]
 
 
 def weighted_f1(
     preds: DataFrame, true_col: str = "true_label", pred_col: str = "pred_label"
 ) -> DataFrame:
-    """A15: support-weighted mean F1 (sklearn average='weighted')."""
-    pc = per_class_f1(preds, true_col, pred_col).where(F.col("support") > 0)
-    return pc.agg(
-        (F.sum(F.col("f1") * F.col("support")) / F.sum("support")).alias("weighted_f1")
-    )
+    """A15: support-weighted mean F1 (sklearn average='weighted') as a 1-row
+    frame, ``evaluate``'s. Eager: the confusion collect runs here."""
+    return evaluate(preds, true_col, pred_col)[1]
 
 
 def confusion_summary(cells) -> tuple:
     """``(accuracy, n, per_class, weighted_f1)`` from (true, pred, count)
-    cells, with the DataFrame functions' semantics and arithmetic:
+    cells, with SQL's NULL semantics (the ``pred_*`` oracle's):
 
     - accuracy is correct / (rows with both labels set); None for none
     - n counts every row
-    - per_class is ``per_class_f1``'s rows (label, support, precision,
-      recall, f1): precision None with no predictions of the class,
-      recall None with no support, f1 0.0 when either is None or both
-      are 0. A NULL label never matches (NULL = NULL is not true), so
-      NULL true and NULL predicted labels stay two rows, as in the full
-      join.
+    - per_class is (label, support, precision, recall, f1) per class:
+      precision None with no predictions of the class, recall None with
+      no support, f1 0.0 when either is None or both are 0. A NULL label
+      never matches (NULL = NULL is not true), so NULL true and NULL
+      predicted labels stay two rows, as in a full join on the label.
     - weighted_f1 is the support-weighted mean F1 over classes with
       support; None when no class has any
     """
@@ -133,30 +108,23 @@ def confusion_summary(cells) -> tuple:
 def evaluate(
     preds: DataFrame, true_col: str = "true_label", pred_col: str = "pred_label"
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """``(accuracy, weighted_f1, per_class_f1, confusion)`` frames, equal to
-    the DataFrame functions' results and with their schemas, from ONE
-    confusion collect. The frames are local relations (an Arrow table
-    under ``spark.sql.execution.arrow.localRelationThreshold``; a row list
-    would become an RDD scan, one job per read), so reading them runs no
-    Spark job."""
+    """``(accuracy, weighted_f1, per_class_f1, confusion)`` frames from ONE
+    confusion collect, derived by ``confusion_summary``. All four are local
+    relations (``local.local_frame``), so reading them runs no Spark job.
+    The per-class label has the type of ``coalesce(true, pred)``."""
     cm = confusion_matrix(preds, true_col, pred_col)
     cells = [tuple(r) for r in cm.collect()]
     acc, n, per_class, wf1 = confusion_summary(cells)
+    label = cm.select(F.coalesce(true_col, pred_col)).schema[0].dataType.simpleString()
     spark = preds.sparkSession
     return (
-        _local_frame(spark, [(acc, n)], accuracy(preds, true_col, pred_col).schema),
-        _local_frame(spark, [(wf1,)], weighted_f1(preds, true_col, pred_col).schema),
-        _local_frame(spark, per_class, per_class_f1(preds, true_col, pred_col).schema),
-        _local_frame(spark, cells, cm.schema),
+        local_frame(spark, [(acc, n)], "accuracy double, n bigint not null"),
+        local_frame(spark, [(wf1,)], "weighted_f1 double"),
+        local_frame(
+            spark,
+            per_class,
+            f"label {label}, support bigint not null, precision double, recall double,"
+            " f1 double not null",
+        ),
+        local_frame(spark, cells, cm.schema),
     )
-
-
-def _local_frame(spark, rows: list, schema) -> DataFrame:
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow = to_arrow_schema(schema)
-    table = pa.Table.from_pydict(
-        {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}, schema=arrow
-    )
-    return spark.createDataFrame(table, schema)

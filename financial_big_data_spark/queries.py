@@ -1322,7 +1322,7 @@ def q_emb_dbscan_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res, _params = dbscan(
         flat, "vid", [f"e{i}" for i in range(dims)], eps=1.16, min_pts=4,
-        mode="distributed",
+        driver_max_nodes=None,
     )
     res = res.withColumn("vec_id", F.col("vid").cast("bigint"))
     canon = (
@@ -2330,12 +2330,12 @@ SELECT true_label, pred_label, count(*) AS n FROM p GROUP BY 1, 2
 def q_pred_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14/A15 headline metrics: accuracy + n + macro & support-weighted F1
     (reference lstm_forecasting.py:288-302 reports weighted F1 as the
-    headline). One pass over the confusion counts + one over the pairs."""
-    from .ml.metrics import accuracy, per_class_f1
+    headline). One confusion collect (``evaluate``); the rest reads its
+    local frames."""
+    from .ml.metrics import evaluate
 
-    preds = _ev_preds(spark, sf_dir)
-    acc = accuracy(preds).select(_r6(F.col("accuracy")).alias("accuracy"), "n")
-    pc = per_class_f1(preds)
+    acc, _wf1, pc, _cm = evaluate(_ev_preds(spark, sf_dir))
+    acc = acc.select(_r6(F.col("accuracy")).alias("accuracy"), "n")
     f1s = pc.agg(
         _r6(F.avg("f1")).alias("macro_f1"),
         _r6(

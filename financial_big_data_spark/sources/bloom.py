@@ -38,6 +38,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..local import bounded_collect
+
 BITS_PER_KEY = 10
 NUM_HASHES = 7
 
@@ -237,7 +239,5 @@ def _collect_keys_capped(updates: DataFrame, key: str, cap: int) -> list | None:
     dtype = dict(updates.dtypes).get(key)
     if dtype not in _EXACT_STR_TYPES:
         return None
-    sample = updates.select(key).distinct().limit(cap + 1).collect()
-    if len(sample) > cap:
-        return None
-    return [r[0] for r in sample]
+    rows = bounded_collect(updates.select(key).distinct(), cap)
+    return None if rows is None else [r[0] for r in rows]

@@ -43,6 +43,13 @@ Deliberate limits, stated rather than hidden:
   zero rows), so the view's row set always equals `SELECT group FROM base
   GROUP BY group`.
 
+Bounded refreshes cross the driver↔Spark boundary through ``local``'s
+two helpers only: the touched keys and the ±delta (≤ 10k groups) arrive
+by ``bounded_collect``, one job each, and the new view rows go back as a
+``local_frame`` Arrow local relation — no session conf is toggled for
+them and no failure falls back silently to another path. Only AQE (off)
+and the shuffle width (8) are set for the bounded window, and restored.
+
 Concurrency contract (VERDICT r10 #8), stated precisely:
 
 - **Readers need no coordination.** Every read resolves a manifest (the
@@ -84,6 +91,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..local import bounded_collect, local_frame
 from .versioned import (
     _commit,
     _footer_columns,
@@ -948,28 +956,9 @@ def _refresh_partials_view(
             sch = table_schema(view_path)
             if sch is None:
                 sch = old_view.schema
-            arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
-            prev_arrow = spark.conf.get(arrow_conf, None)
-            try:
-                import pandas as pd
-
-                spark.conf.set(arrow_conf, "true")
-                live_local = spark.createDataFrame(
-                    pd.DataFrame(
-                        [tuple(r[n] for n in sch.names) for r in live_rows],
-                        columns=sch.names,
-                    ),
-                    sch,
-                )
-            except Exception:  # noqa: BLE001 - arrow/pandas edge: pickled path
-                live_local = spark.createDataFrame(
-                    [tuple(r[n] for n in sch.names) for r in live_rows], sch
-                )
-            finally:
-                if prev_arrow is None:
-                    spark.conf.unset(arrow_conf)
-                else:
-                    spark.conf.set(arrow_conf, prev_arrow)
+            live_local = local_frame(
+                spark, [tuple(r[n] for n in sch.names) for r in live_rows], sch
+            )
             _apply_groups(
                 spark, view_path, live_local.coalesce(1), gcol,
                 [r[gcol] for r in live_rows] + dead_keys,
@@ -1173,10 +1162,9 @@ def refresh_matview(
                 # key in the diff files IS a change — no fingerprint join
                 changed_keys = _scan_files(spark, table_path, diff).select(key)
         changed_keys_df = changed_keys
-        # bounded metadata: ONE capped distinct-keys job (CollectLimit
-        # forced to a single wave — the default incremental
-        # 1/4/16-partition scale-up is pure job-floor waste on a frame
-        # this skinny) yields the changed-key RANGE (routes footer
+        # bounded metadata: ONE capped distinct-keys job (the
+        # ``bounded_collect`` under ``_collect_keys_capped``) yields the
+        # changed-key RANGE (routes footer
         # pruning, derived driver-side) AND — when the delta is small
         # enough — an exact IN-set the pruned scans apply map-only, with
         # no join and no re-evaluation of the changed-key lineage per
@@ -1185,13 +1173,10 @@ def refresh_matview(
         # discipline as upsert_version.
         from .bloom import _collect_keys_capped
 
-        limit_conf = "spark.sql.limit.initialNumPartitions"
         aqe_conf = "spark.sql.adaptive.enabled"
         shuf_conf = "spark.sql.shuffle.partitions"
-        prev_limit = spark.conf.get(limit_conf, None)
         prev_aqe = spark.conf.get(aqe_conf, None)
         prev_shuf = spark.conf.get(shuf_conf, None)
-        spark.conf.set(limit_conf, "1000000")
         # AQE splits the distinct+limit into shuffle-stage + result jobs
         # for no optimization gain on a capped collect — one job, not two
         spark.conf.set(aqe_conf, "false")
@@ -1206,7 +1191,6 @@ def refresh_matview(
             probe = _collect_keys_capped(changed_keys_df, key, cap=10_000)
         finally:
             for conf, prev in (
-                (limit_conf, prev_limit),
                 (aqe_conf, prev_aqe),
                 (shuf_conf, prev_shuf) if derived_small else (None, None),
             ):
@@ -1303,21 +1287,16 @@ def refresh_matview(
     # join + persisted cascade.
     aqe_conf = "spark.sql.adaptive.enabled"
     shuf_conf = "spark.sql.shuffle.partitions"
-    limit_conf = "spark.sql.limit.initialNumPartitions"
-    prev_confs = {c: spark.conf.get(c, None) for c in (aqe_conf, shuf_conf, limit_conf)}
+    prev_confs = {c: spark.conf.get(c, None) for c in (aqe_conf, shuf_conf)}
     if probe is not None:
         spark.conf.set(aqe_conf, "false")
         # delta-sized exchanges: 8 tasks beat 32 near-empty ones (AQE,
         # which would coalesce them, is off in this window by choice)
         spark.conf.set(shuf_conf, "8")
-    # CollectLimit scales up incrementally (1, 4, 16... partitions —
-    # several job waves); launching all partitions in wave one makes
-    # each capped collect a single job
-    spark.conf.set(limit_conf, "1000000")
     touched = None
     try:
-        delta_rows = delta.limit(10_001).collect()
-        if len(delta_rows) <= 10_000:
+        delta_rows = bounded_collect(delta, 10_000)
+        if delta_rows is not None:
             gvals = [r[gcol] for r in delta_rows]
             nonnull_g = [g for g in gvals if g is not None]
             has_null_g = len(nonnull_g) < len(gvals)
@@ -1382,30 +1361,10 @@ def refresh_matview(
                     dead_keys.append(g)
             n_up, n_dead = len(live_rows), len(dead_keys)
             if n_up or n_dead:
-                # ARROW local relation: a plain createDataFrame pickles
-                # the rows into a parallelized RDD whose execution spawns
-                # a python worker — measured 1.47s for a 2k-row frame vs
-                # 0.19s through Arrow. coalesce(1): the local relation
-                # otherwise contributes near-empty tasks to the write
-                # stage — pure task-floor waste for ≤10k rows.
-                live_local = None
-                arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
-                prev_arrow = spark.conf.get(arrow_conf, None)
-                try:
-                    import pandas as pd
-
-                    spark.conf.set(arrow_conf, "true")
-                    live_local = spark.createDataFrame(
-                        pd.DataFrame(live_rows, columns=sch.names), sch
-                    )
-                except Exception:  # noqa: BLE001 - arrow/pandas edge: pickled path
-                    live_local = spark.createDataFrame(live_rows, sch)
-                finally:
-                    if prev_arrow is None:
-                        spark.conf.unset(arrow_conf)
-                    else:
-                        spark.conf.set(arrow_conf, prev_arrow)
-                live_local = live_local.coalesce(1)
+                # coalesce(1): the local relation otherwise contributes
+                # near-empty tasks to the write stage — pure task-floor
+                # waste for ≤10k rows
+                live_local = local_frame(spark, live_rows, sch).coalesce(1)
                 # ONE atomic snapshot applies upserts AND drops in a
                 # single write + commit; the skinny (group, sum, count)
                 # view packs ~1M rows/file comfortably

@@ -41,6 +41,8 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame
 
+from ..local import bounded_collect
+
 # fixed-order categorical palette (validated: see module docstring)
 _SERIES = [
     "#2a78d6", "#eb6834", "#1baf7a", "#eda100",
@@ -63,8 +65,8 @@ class PlotInputTooLarge(ValueError):
 
 
 def _collect_bounded(df: DataFrame, max_rows: int) -> list:
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    rows = bounded_collect(df, max_rows)
+    if rows is None:
         raise PlotInputTooLarge(
             f"plot input exceeds {max_rows} rows — plots render bounded "
             "aggregates; aggregate or limit the frame first (or raise "

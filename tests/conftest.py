@@ -155,6 +155,7 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_dbscan_distributed_parity",
         "test_dbscan_distributed_scale",
         "test_dbscan_pca_blocking_highdim_degenerate_dims",
+        "test_emb_dbscan_rows_independent_of_hash_seed",
     },
     "test_contamination_packing": {
         "test_ngram_overlap_shuffle_join_mode_matches",

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -260,29 +262,60 @@ def test_multifile_scan_filename_symbol(spark, tmp_path, bars_df):
 
 
 def test_dbscan_distributed_parity(spark, blobs_df):
-    """The ε-grid + connected-components path must produce the same cluster
-    PARTITION (same groupings, same noise set) as the driver/networkx path."""
+    """The ε-grid + connected-components route returns the same
+    (id, cluster, is_noise) rows as the driver route: same groupings, same
+    noise set and the same cluster numbers (by smallest core member id)."""
     noise = spark.createDataFrame(
         [(f"n{i}", -1, 100.0 + 30 * i, -100.0 - 30 * i, 300.0 + 30 * i, -200.0) for i in range(5)],
         blobs_df.schema,
     )
     df = blobs_df.union(noise)
-    drv, p_drv = dbscan(df, "id", FEATS, eps=3.0, min_pts=4, mode="driver")
-    dist, p_dist = dbscan(df, "id", FEATS, eps=3.0, min_pts=4, mode="distributed")
+    drv, p_drv = dbscan(df, "id", FEATS, eps=3.0, min_pts=4)
+    dist, p_dist = dbscan(df, "id", FEATS, eps=3.0, min_pts=4, driver_max_nodes=None)
     assert p_drv["n_clusters"] == p_dist["n_clusters"] == 3
     assert p_drv["n_noise"] == p_dist["n_noise"] == 5
-    a = {r.id: (r.cluster, r.is_noise) for r in drv.collect()}
-    b = {r.id: (r.cluster, r.is_noise) for r in dist.collect()}
-    assert set(a) == set(b)
-    # partition equality: grouping-by-label must induce the same sets
-    def parts(m):
-        groups: dict = {}
-        for i, (c, noise_flag) in m.items():
-            groups.setdefault((c if not noise_flag else -1), set()).add(i)
-        return {frozenset(v) for k, v in groups.items() if k != -1}, {
-            i for i, (c, nf) in m.items() if nf
-        }
-    assert parts(a) == parts(b)
+    assert p_drv == p_dist
+    a = sorted(tuple(r) for r in drv.collect())
+    assert a == sorted(tuple(r) for r in dist.collect())
+    assert len(a) == df.count()
+
+
+_EMB_DBSCAN_ROWS = """
+import json, sys
+from financial_big_data_spark.queries import q_emb_dbscan
+from financial_big_data_spark.session import build_session
+spark = build_session("emb_dbscan_hash_seed", cpus=1, shuffle_partitions=2)
+print(json.dumps(sorted(tuple(r) for r in q_emb_dbscan(spark, sys.argv[1]).collect())))
+"""
+
+
+def test_emb_dbscan_rows_independent_of_hash_seed():
+    """``q_emb_dbscan``'s (cluster, n) rows are the same in two driver
+    processes with different Python hash seeds: cluster numbers follow the
+    smallest core member id, not ``set`` iteration order."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.test_registry_contract import SF
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _EMB_DBSCAN_ROWS, SF],
+            cwd=root,
+            env={**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": root},
+            stdout=subprocess.PIPE,
+            stderr=subprocess.DEVNULL,
+            text=True,
+        )
+        for seed in ("1", "2")
+    ]
+    outs = [p.communicate(timeout=600)[0] for p in procs]
+    assert [p.returncode for p in procs] == [0, 0]
+    outs = [out.strip().splitlines()[-1] for out in outs]
+    assert len(json.loads(outs[0])) > 1
+    assert outs[0] == outs[1]
 
 
 def test_dbscan_distributed_scale(spark):
@@ -296,7 +329,7 @@ def test_dbscan_distributed_scale(spark):
             p = np.array([cx * 50.0, cy * 50.0]) + rng.normal(0, 1.0, 2)
             rows.append((f"s{ci}_{i}", *p.tolist()))
     df = spark.createDataFrame(rows, "id string, x0 double, x1 double")
-    out, params = dbscan(df, "id", ["x0", "x1"], eps=3.0, min_pts=4, mode="distributed")
+    out, params = dbscan(df, "id", ["x0", "x1"], eps=3.0, min_pts=4, driver_max_nodes=None)
     assert params["n_clusters"] == 20
     assert params["n_noise"] == 0
     assert out.count() == 10_000
@@ -328,7 +361,7 @@ def test_dbscan_pca_blocking_highdim_degenerate_dims(spark):
     )
     out, params = dbscan(
         df, "id", ["x0", "x1", "x2", "x3", "x4"], eps=3.0, min_pts=4,
-        mode="distributed", count_candidates=True,
+        driver_max_nodes=None, count_candidates=True,
     )
     assert params["n_clusters"] == 20
     assert params["n_noise"] == 0

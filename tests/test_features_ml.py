@@ -148,6 +148,39 @@ def test_weighted_f1(spark):
     assert abs(got - exp) < 1e-12
 
 
+def _plan_metrics(preds):
+    """The metrics as distributed DataFrame plans (hash aggregates and a
+    full join on the label): the Spark reference ``evaluate``'s driver
+    arithmetic must equal exactly, with the same schemas."""
+    cm = confusion_matrix(preds)
+    acc = preds.agg(
+        F.avg((F.col("true_label") == F.col("pred_label")).cast("double")).alias("accuracy"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    by_true = cm.groupBy("true_label").agg(F.sum("n").alias("support"))
+    by_pred = cm.groupBy("pred_label").agg(F.sum("n").alias("n_pred"))
+    tp = cm.where(F.col("true_label") == F.col("pred_label")).select(
+        F.col("true_label").alias("label"), F.col("n").alias("tp")
+    )
+    joined = (
+        by_true.select(F.col("true_label").alias("label"), "support")
+        .join(by_pred.select(F.col("pred_label").alias("label"), "n_pred"), on="label", how="full")
+        .join(tp, on="label", how="left")
+        .na.fill({"tp": 0, "support": 0, "n_pred": 0})
+    )
+    precision = F.try_divide(F.col("tp"), F.col("n_pred"))
+    recall = F.try_divide(F.col("tp"), F.col("support"))
+    f1 = F.try_divide(2 * precision * recall, precision + recall)
+    pc = joined.select(
+        "label", "support", precision.alias("precision"), recall.alias("recall"),
+        F.coalesce(f1, F.lit(0.0)).alias("f1"),
+    )
+    wf1 = pc.where(F.col("support") > 0).agg(
+        (F.sum(F.col("f1") * F.col("support")) / F.sum("support")).alias("weighted_f1")
+    )
+    return acc, wf1, pc, cm
+
+
 @pytest.mark.parametrize(
     "extra",
     [
@@ -159,22 +192,25 @@ def test_weighted_f1(spark):
     ids=["preds", "pred_only_class", "true_only_class", "null_labels"],
 )
 def test_confusion_summary_matches_dataframe_metrics(spark, extra):
-    """The driver derivation from the confusion counts equals the DataFrame
-    metrics exactly, including a class seen only in predictions (recall
-    NULL), one seen only in truth (precision NULL) and NULL labels; the
-    frames ``evaluate`` returns carry the DataFrame functions' schemas."""
+    """The driver derivation from the confusion counts equals the metrics
+    as DataFrame plans exactly, including a class seen only in predictions
+    (recall NULL), one seen only in truth (precision NULL) and NULL labels;
+    the frames ``evaluate`` (and ``accuracy``, ``weighted_f1``,
+    ``per_class_f1``) return carry the plans' schemas."""
     preds = _preds(spark).union(
         spark.createDataFrame(extra, "true_label string, pred_label string")
     )
-    want = (accuracy(preds), weighted_f1(preds), per_class_f1(preds), confusion_matrix(preds))
+    want = _plan_metrics(preds)
     acc, wf1, pc, cm = ([tuple(r) for r in f.collect()] for f in want)
     got_acc, got_n, got_pc, got_wf1 = confusion_summary(cm)
     assert [(got_acc, got_n)] == acc
     assert [(got_wf1,)] == wf1
     assert sorted(got_pc, key=repr) == sorted(pc, key=repr)
-    for frame, ref, rows in zip(evaluate(preds), want, (acc, wf1, pc, cm)):
-        assert frame.schema == ref.schema
-        assert sorted(map(tuple, frame.collect()), key=repr) == sorted(rows, key=repr)
+    public = (accuracy(preds), weighted_f1(preds), per_class_f1(preds), confusion_matrix(preds))
+    for frames in (evaluate(preds), public):
+        for frame, ref, rows in zip(frames, want, (acc, wf1, pc, cm)):
+            assert frame.schema == ref.schema
+            assert sorted(map(tuple, frame.collect()), key=repr) == sorted(rows, key=repr)
 
 
 def test_forecast_metric_frames_cost_one_action(spark, bars_df, monkeypatch):

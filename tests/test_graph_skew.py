@@ -365,11 +365,11 @@ def test_small_graph_takes_driver_route_at_entry(spark, monkeypatch):
 
 
 def test_bounded_collect_one_job(spark):
-    """``_bounded_collect`` returns a frame's rows when it has at most
+    """``bounded_collect`` returns a frame's rows when it has at most
     ``cap`` of them and None above, in one Spark job on a checkpointed
     4-partition frame, where a plain limit scans one partition, then the
     rest."""
-    from financial_big_data_spark.ml.graph import _bounded_collect
+    from financial_big_data_spark.local import bounded_collect
 
     df = spark.range(0, 1000, numPartitions=4).localCheckpoint()
     sc = spark.sparkContext
@@ -377,7 +377,7 @@ def test_bounded_collect_one_job(spark):
         group = f"bounded_collect_{cap}"
         sc.setJobGroup(group, group)
         try:
-            rows = _bounded_collect(df, cap)
+            rows = bounded_collect(df, cap)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)

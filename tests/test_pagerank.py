@@ -148,6 +148,22 @@ def test_personalized_pagerank_fused_matches_dense_few_iters(spark):
         assert got[n] == pytest.approx(want[n], abs=1e-12)
 
 
+def test_personalized_pagerank_dangling_matches_dense_few_iters(spark):
+    # node 5 has no in-edge (the unfused path) and node 4 no out-edge, so
+    # its mass returns through the reset distribution; a few iterations
+    # keep this in the default tier
+    edges = [(5, 0), (0, 1), (1, 2), (2, 0), (2, 3), (3, 4)]
+    reset = spark.createDataFrame([(1,), (5,)], "node long")
+    got = {
+        r.node: r.rank
+        for r in pagerank(_edges_df(spark, edges), n_iter=4, reset=reset).collect()
+    }
+    want = _dense_ppr(edges, [1, 5], iters=4)
+    assert set(got) == set(want)
+    for n in want:
+        assert got[n] == pytest.approx(want[n], abs=1e-12)
+
+
 def test_personalized_pagerank_concentrates_near_seeds(spark):
     # symmetric ring: uniform PR gives every node 1/6; personalization
     # must pull mass toward the seed

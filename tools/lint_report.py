@@ -176,11 +176,6 @@ SELF_JOIN_JUSTIFIED: dict[str, str] = {
         "cost knob — cluster count bounds member count); join key is "
         "the cluster id"
     ),
-    "financial_big_data_spark/ml/clustering.py::_dbscan_driver": (
-        "driver-routed DBSCAN path: size-gated to bounded samples "
-        "before the pairwise stage (the distributed ε-grid path is the "
-        "scale route)"
-    ),
     "financial_big_data_spark/ml/clustering.py::power_iteration_pca": (
         "d×d scatter-matrix build: pair expansion over the FEATURE "
         "dimension (bounded, not row count)"
