@@ -11,10 +11,8 @@ goes through these two helpers.
 
 from __future__ import annotations
 
-from datetime import timezone
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
+from pyspark.sql.types import ArrayType, MapType, StructType, TimestampNTZType, TimestampType
 
 
 def bounded_collect(df: DataFrame, cap: int) -> list | None:
@@ -32,34 +30,51 @@ def bounded_collect(df: DataFrame, cap: int) -> list | None:
 def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
     """``createDataFrame(rows, schema)``'s rows as an Arrow local relation,
     whose reads run no Spark job. ``rows`` are tuples (or collected Rows)
-    in the field order of ``schema``, a StructType or a DDL string."""
+    in the field order of ``schema``, a StructType or a DDL string.
+
+    Every timestamp goes to Arrow as its int64 microseconds, read as
+    ``createDataFrame(rows)`` reads it (a naive ``timestamp`` in
+    driver-local time, a ``timestamp_ntz`` as wall clock), and Spark's
+    own cast to the target schema restores the type. Spark localizes an
+    Arrow timestamp inside a map by rebuilding the map without its null
+    mask (before pyarrow 17), so a NULL map would come back as ``{}``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    columns = {}
-    for i, f in enumerate(schema.fields):
-        values = [r[i] for r in rows]
-        if "timestamp" in f.dataType.simpleString():
-            values = [_utc(f.dataType, v) for v in values]
-        columns[f.name] = values
-    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+    arrow_schema = pa.schema([f.with_type(_micros_type(f.type)) for f in to_arrow_schema(schema)])
+    columns = {
+        f.name: [_micros(f.dataType, r[i]) for r in rows] for i, f in enumerate(schema.fields)
+    }
+    return spark.createDataFrame(pa.Table.from_pydict(columns, schema=arrow_schema), schema)
 
 
-def _utc(dtype, v):
-    """``v`` with each ``timestamp`` in it moved to UTC, a naive one read as
-    driver-local time, as collect() returns and createDataFrame(rows) reads
-    it; pyarrow would store its wall clock as UTC. ``timestamp_ntz`` stays."""
+def _micros_type(t):
+    """Arrow type ``t`` with each timestamp in it replaced by int64."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return pa.int64()
+    if pa.types.is_map(t):
+        return pa.map_(_micros_type(t.key_type), _micros_type(t.item_type))
+    if pa.types.is_list(t):
+        return pa.list_(_micros_type(t.value_type))
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_micros_type(f.type)) for f in t])
+    return t
+
+
+def _micros(dtype, v):
+    """``v`` with each timestamp in it as Spark's internal microseconds."""
     if v is None:
         return None
-    if isinstance(dtype, TimestampType):
-        return v.astimezone(timezone.utc)
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
+        return dtype.toInternal(v)
     if isinstance(dtype, ArrayType):
-        return [_utc(dtype.elementType, x) for x in v]
+        return [_micros(dtype.elementType, x) for x in v]
     if isinstance(dtype, StructType):
-        return tuple(_utc(f.dataType, x) for f, x in zip(dtype.fields, v))
+        return tuple(_micros(f.dataType, x) for f, x in zip(dtype.fields, v))
     if isinstance(dtype, MapType):
-        return {_utc(dtype.keyType, k): _utc(dtype.valueType, x) for k, x in v.items()}
+        return {_micros(dtype.keyType, k): _micros(dtype.valueType, x) for k, x in v.items()}
     return v

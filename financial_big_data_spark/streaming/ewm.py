@@ -8,62 +8,39 @@ the pathological case — a single series whose full history exceeds one
 task's memory — out of scope for batch, pointing at "chunked carry-over
 (stateful streaming)". This module IS that carry-over path:
 
-- state per series is O(1) — exactly the last EWM value(s), not a window
-  of history (contrast streaming/regime.py, which must carry the last
-  ``2×window`` closes): one double for ``streaming_ewm_mean``, three for
-  ``streaming_macd`` (fast/slow/signal EMAs);
-- each micro-batch continues the recurrence bit-for-bit: the carried value
-  seeds pandas' own C ``ewm`` kernel (prepend-seed-then-drop-it), which
-  runs the identical float recurrence in the identical operand order — so
-  splitting a series across ANY number of micro-batches produces
-  byte-identical doubles to the single-pass batch operator (pinned by the
-  parity test, which asserts ``==`` on floats, not approx);
-- ordering contract: rows are sorted by event time WITHIN a micro-batch;
-  across batches the source must deliver per-series in-order (file replay,
-  availableNow) — and the contract is ENFORCED (streaming/ordering.py): a
-  row older than the state's last processed event time raises naming the
-  series/timestamps, or is dropped under opt-in ``on_late="drop"``. Late
-  rows would need event-time history buffering, which an O(1)-state
-  recurrence cannot express — absorbing them is out of scope, stated
-  loudly AND checked;
-- optional ``state_ttl_ms`` evicts idle series (processing-time timeout),
-  bounding total state under key churn.
-
-Checkpoint compatibility: applyInPandasWithState state rows are
-positional, so a stream restarted from a checkpoint written by a build
-with a DIFFERENT state layout must start from a fresh checkpoint (replay
-the source) — there is no in-place state migration. Every state tuple
-now leads with a layout-version tag (streaming/ordering.py STATE_VERSION)
-and ``read_state`` verifies it: an old-layout checkpoint fails with a
-NAMED error carrying that remedy instead of a raw tuple-unpack deep in
-the worker (VERDICT r9 #7 / ADVICE r9).
+- the carry per series is O(1) — exactly the last EWM value(s), not a
+  window of history (contrast streaming/regime.py, which must carry the
+  last ``2×window`` closes): one double for ``streaming_ewm_mean``, three
+  for ``streaming_macd`` (fast/slow/signal EMAs);
+- each emitted slice continues the recurrence bit-for-bit: the carried
+  value seeds pandas' own C ``ewm`` kernel (prepend-seed-then-drop-it),
+  which runs the identical float recurrence in the identical operand
+  order — so splitting a series across ANY number of micro-batches
+  produces byte-identical doubles to the single-pass batch operator
+  (pinned by the parity test, which asserts ``==`` on floats, not
+  approx);
+- ordering, admission (``on_late``), the reorder buffer
+  (``delay_seconds``, default 0 = in-order delivery), the state layout
+  guard and the TTL (none by default; see the trigger caveat) are the
+  shared driver's, ``streaming/ordering.py``. Each operator here is only
+  its output schema, its carry fields and its ``step``.
 
 API note: built on ``applyInPandasWithState``. Spark 4 also ships the
 richer ``transformWithStateInPandas``; its Python state server requires
 ``google.protobuf`` at runtime, which this environment does not provide,
-and the per-series O(1) ValueState carried here needs none of its extras
+and the per-series ValueState carried here needs none of its extras
 (timers, multiple state variables, initial state), so the widely-available
 API is the right dependency floor.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .ordering import (
-    STATE_VERSION,
-    enforce_series_order,
-    raise_beyond_bound,
-    read_state,
-    split_ready,
-    validate_on_late,
-)
+from .ordering import ordered_recurrence
 
 
 def _continue_ewm(series: pd.Series, span: int, prev: float | None) -> pd.Series:
@@ -93,239 +70,43 @@ def streaming_ewm_mean(
     state_ttl_ms: int | None = None,
     order_tiebreak: list[str] | None = None,
     on_late: str = "error",
+    delay_seconds: float = 0,
 ) -> DataFrame:
     """Streaming ``ewm(span, adjust=False).mean()`` per series — the
-    unbounded-series companion of ``functions.ewm.ewm_mean``; identical
-    doubles for any micro-batch split of the same in-order input.
+    unbounded-series companion of ``functions.ewm.ewm_mean``: the input
+    columns plus ``out``, identical doubles for any micro-batch split of
+    the same input once it is emitted in event-time order.
 
     ``order_tiebreak``: extra sort columns after ``time``. Duplicate
     timestamps within a series otherwise leave the recurrence order (and
-    the carried last-state) at the mercy of Arrow chunk arrival order —
-    pass a unique column (event id) whenever ties are possible. The sort
-    is stable (mergesort) either way, matching functions/ewm.py.
+    the carried value) to Arrow chunk arrival order — pass a unique
+    column (event id) whenever ties are possible. The sort is stable
+    (mergesort) either way, matching functions/ewm.py.
 
-    The cross-batch in-order contract is ENFORCED, not just documented
-    (streaming/ordering.py): a row older than the state's last processed
-    event time raises naming the series and timestamps (``on_late=
-    "error"``) or is dropped (``on_late="drop"``) — never silently folded
-    into the recurrence, which would corrupt every later value."""
-    validate_on_late(on_late)
-    cols = [f.name for f in stream.schema.fields]
-    order = [time] + (order_tiebreak or [])
-    out_schema = T.StructType(stream.schema.fields + [T.StructField(out, T.DoubleType())])
-    state_schema = T.StructType(
-        [
-            T.StructField("state_v", T.IntegerType()),
-            T.StructField("last_ewm", T.DoubleType()),
-            T.StructField("last_ts", T.TimestampType()),
-        ]
-    )
+    ``on_late``, ``delay_seconds`` and ``state_ttl_ms`` are the shared
+    driver's (streaming/ordering.py): a row older than the last emitted
+    event time raises naming the series and timestamps, or is dropped;
+    a positive ``delay_seconds`` holds rows until the series' watermark
+    passes them, absorbing disorder up to that bound."""
 
-    def fn(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # One group arrives as MULTIPLE Arrow chunks (maxRecordsPerBatch)
-        # in no guaranteed order — sorting per chunk while carrying the
-        # EMA across chunks would run the recurrence on an out-of-order
-        # sequence. Concatenate the whole group's batch, sort ONCE.
-        chunks = list(pdf_iter)
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(order, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        prev, last_ts = (
-            read_state(state, 3, "streaming_ewm_mean")
-            if state.exists
-            else (None, None)
-        )
-        pdf = enforce_series_order(pdf, time, last_ts, key[0], on_late)
-        if pdf.empty:
-            return
-        y = _continue_ewm(pdf[value], span, prev)
-        pdf[out] = y.to_numpy()
-        state.update((STATE_VERSION, float(y.iloc[-1]), pdf[time].iloc[-1]))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pdf[cols + [out]]
+    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame, tuple]:
+        y = _continue_ewm(rows[value], span, carry[0])
+        return rows.assign(**{out: y.to_numpy()}), (float(y.iloc[-1]),)
 
-    return stream.groupBy(series).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
+    return ordered_recurrence(
+        stream,
+        step,
+        out_schema=T.StructType(
+            stream.schema.fields + [T.StructField(out, T.DoubleType())]
         ),
-    )
-
-
-def _buffer_fields(schema: T.StructType) -> list[T.StructField]:
-    """One typed-array state field per input column — the reorder buffer
-    holds WHOLE ROWS as parallel arrays (no struct nesting, no row
-    serialization), so the buffered operators carry every input column
-    through to the output (VERDICT r9 #4)."""
-    return [
-        T.StructField(f"_buf_{f.name}", T.ArrayType(f.dataType))
-        for f in schema.fields
-    ]
-
-
-def _rebuild_buffer(cols: list[str], bufs: tuple, time: str) -> pd.DataFrame:
-    """Buffered state arrays → a pandas frame with the input columns.
-    The event-time column round-trips through datetime objects —
-    normalized back to datetime64[us] (Spark timestamps ARE µs)."""
-    data = {c: list(b) if b is not None else [] for c, b in zip(cols, bufs)}
-    pdf = pd.DataFrame(data, columns=cols)
-    if len(pdf):
-        pdf[time] = pd.to_datetime(pdf[time]).astype("datetime64[us]")
-    return pdf
-
-
-def streaming_ewm_mean_buffered(
-    stream: DataFrame,
-    value: str,
-    span: int,
-    delay_seconds: float,
-    series: str = "symbol",
-    time: str = "ts",
-    out: str = "ewm",
-    state_ttl_ms: int | None = None,
-    order_tiebreak: list[str] | None = None,
-) -> DataFrame:
-    """Streaming EWM that ABSORBS bounded disorder instead of rejecting
-    it: a per-series reorder buffer holds rows until the series'
-    event-time watermark (max event time seen − ``delay_seconds``)
-    passes them, then emits them through the recurrence in event-time
-    order — the watermark-bounded alternative to ``streaming_ewm_mean``'s
-    enforced in-order contract.
-
-    Semantics and costs, stated:
-
-    - State per series is O(buffer): the held input ROWS as parallel
-      typed arrays (every input column — the output carries the full
-      input schema + ``out``, VERDICT r9 #4), plus the carried EWM, the
-      last EMITTED event time, and the monotone max event time seen. A
-      series emitting ~r rows/second holds ~r × delay_seconds rows.
-      Input columns must be scalar types (a column of arrays would need
-      nested-array state).
-    - Emission: each micro-batch emits exactly the buffered rows at or
-      below the advanced watermark, sorted by event time with the
-      ``order_tiebreak`` contract of the unbuffered operators (stable
-      mergesort — pass a unique column when duplicate timestamps are
-      possible), continuing the recurrence bit-exactly. Rows inside
-      the final ``delay_seconds`` of a finite stream stay buffered —
-      standard watermark semantics — UNLESS ``state_ttl_ms`` fires:
-      TTL expiry FLUSHES the buffer (emits the held rows through the
-      recurrence in order) before dropping state, so an idle series
-      loses no input rows.
-    - A row arriving LATER than the bound (older than the last emitted
-      event time) still cannot be folded into an O(1) recurrence — it
-      raises naming the series and timestamps, exactly like
-      ``streaming_ewm_mean(on_late="error")``. The buffer bounds the
-      disorder it absorbs; it does not remove the contract.
-    """
-    if delay_seconds < 0:
-        raise ValueError("delay_seconds must be >= 0")
-    delay_us = int(delay_seconds * 1_000_000)
-    cols = [f.name for f in stream.schema.fields]
-    order = [time] + (order_tiebreak or [])
-    out_schema = T.StructType(
-        stream.schema.fields + [T.StructField(out, T.DoubleType())]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("state_v", T.IntegerType()),
-            T.StructField("last_ewm", T.DoubleType()),
-            T.StructField("last_emitted_us", T.LongType()),
-            T.StructField("max_seen_us", T.LongType()),
-        ]
-        + _buffer_fields(stream.schema)
-    )
-    n_state = len(state_schema.fields)
-    _OP = "streaming_ewm_mean_buffered"
-
-    def _emit(prev, ready: pd.DataFrame) -> tuple[float, pd.DataFrame]:
-        y = _continue_ewm(ready[value], span, prev)
-        ready = ready.copy()
-        ready[out] = y.to_numpy()
-        return float(y.iloc[-1]), ready[cols + [out]]
-
-    def fn(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # TTL FLUSH: the series went idle past the TTL, so its
-            # watermark will never advance — emit the held rows through
-            # the recurrence before dropping state. Unlike the O(1)-state
-            # operators (where TTL forgets only carry values), silently
-            # removing a reorder buffer would lose INPUT rows.
-            prev, _le, _ms, *bufs = read_state(state, n_state, _OP)
-            state.remove()
-            held = _rebuild_buffer(cols, tuple(bufs), time)
-            if len(held):
-                held = held.sort_values(order, kind="mergesort").reset_index(
-                    drop=True
-                )
-                _, flushed = _emit(prev, held)
-                yield flushed
-            return
-        chunks = list(pdf_iter)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            prev, last_emit, max_seen, *bufs = read_state(state, n_state, _OP)
-            held = _rebuild_buffer(cols, tuple(bufs), time)
-        else:
-            prev, last_emit, max_seen = None, None, None
-            held = pdf.iloc[0:0]
-        pdf[time] = pdf[time].astype("datetime64[us]")
-        new_ts = pdf[time].astype("int64")
-        if last_emit is not None and len(new_ts) and int(new_ts.min()) < last_emit:
-            raise_beyond_bound(key[0], int(new_ts.min()), last_emit, _OP)
-        if len(new_ts):
-            batch_max = int(new_ts.max())
-            max_seen = batch_max if max_seen is None else max(max_seen, batch_max)
-        combined = (
-            pd.concat([held, pdf], ignore_index=True)
-            .sort_values(order, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        emitted = None
-        if len(combined) and max_seen is not None:
-            ts_us = combined[time].astype("datetime64[us]").astype("int64")
-            ready, hold = split_ready(combined, ts_us, max_seen - delay_us)
-            if len(ready):
-                prev, emitted = _emit(prev, ready)
-                last_emit = int(
-                    ready[time].astype("datetime64[us]").astype("int64").iloc[-1]
-                )
-            combined = hold
-        bufs = tuple(combined[c].tolist() for c in cols)
-        state.update((STATE_VERSION, prev, last_emit, max_seen) + bufs)
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        if emitted is not None:
-            yield emitted
-
-    return stream.groupBy(series).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        carry_fields=[T.StructField("last_ewm", T.DoubleType())],
+        operator="streaming_ewm_mean",
+        series=series,
+        time=time,
+        order_tiebreak=order_tiebreak,
+        on_late=on_late,
+        delay_seconds=delay_seconds,
+        state_ttl_ms=state_ttl_ms,
     )
 
 
@@ -340,145 +121,46 @@ def streaming_macd(
     state_ttl_ms: int | None = None,
     order_tiebreak: list[str] | None = None,
     on_late: str = "error",
-    delay_seconds: float | None = None,
+    delay_seconds: float = 0,
 ) -> DataFrame:
     """Streaming MACD(fast, slow, signal) — appends macd, macd_signal,
     macd_hist exactly as ``functions.ewm.macd`` does in batch, carrying
-    three doubles of state per series across micro-batches. See
-    ``streaming_ewm_mean`` for the ``order_tiebreak`` and ``on_late``
-    (enforced in-order) contracts.
+    three doubles per series across micro-batches. See
+    ``streaming_ewm_mean`` for ``order_tiebreak``, ``on_late``,
+    ``delay_seconds`` and ``state_ttl_ms``."""
 
-    ``delay_seconds``: the watermark-bounded reorder-buffer variant —
-    same semantics, costs and full-input-schema carry-through as
-    ``streaming_ewm_mean_buffered`` (held rows as parallel typed arrays,
-    TTL flush, beyond-bound raises); the buffered state layout differs
-    from the unbuffered one (fresh checkpoint required to switch)."""
-    validate_on_late(on_late)
-    buffered = delay_seconds is not None
-    if buffered and delay_seconds < 0:
-        raise ValueError("delay_seconds must be >= 0")
-    delay_us = int((delay_seconds or 0) * 1_000_000)
-    cols = [f.name for f in stream.schema.fields]
-    order = [time] + (order_tiebreak or [])
-    out_fields = [
-        T.StructField("macd", T.DoubleType()),
-        T.StructField("macd_signal", T.DoubleType()),
-        T.StructField("macd_hist", T.DoubleType()),
-    ]
-    out_schema = T.StructType(stream.schema.fields + out_fields)
-    state_fields = [
-        T.StructField("state_v", T.IntegerType()),
-        T.StructField("ema_fast", T.DoubleType()),
-        T.StructField("ema_slow", T.DoubleType()),
-        T.StructField("ema_signal", T.DoubleType()),
-        T.StructField("last_ts", T.TimestampType()),
-    ]
-    if buffered:
-        state_fields += [
-            T.StructField("max_seen_us", T.LongType()),
-        ] + _buffer_fields(stream.schema)
-    state_schema = T.StructType(state_fields)
-    n_state = len(state_fields)
-    _OP = "streaming_macd"
-
-    def _apply(pdf, carry):
-        """Run the three-EMA recurrence over in-order rows; returns the
-        output frame and the new carry triple."""
+    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame, tuple]:
         prev_f, prev_s, prev_sig = carry
-        ef = _continue_ewm(pdf[close], fast, prev_f)
-        es = _continue_ewm(pdf[close], slow, prev_s)
+        ef = _continue_ewm(rows[close], fast, prev_f)
+        es = _continue_ewm(rows[close], slow, prev_s)
         macd_line = ef - es
         sig = _continue_ewm(macd_line, signal, prev_sig)
-        pdf = pdf.copy()
-        pdf["macd"] = macd_line.to_numpy()
-        pdf["macd_signal"] = sig.to_numpy()
-        pdf["macd_hist"] = (macd_line - sig).to_numpy()
-        return (
-            pdf[cols + ["macd", "macd_signal", "macd_hist"]],
-            (float(ef.iloc[-1]), float(es.iloc[-1]), float(sig.iloc[-1])),
+        out = rows.assign(
+            macd=macd_line.to_numpy(),
+            macd_signal=sig.to_numpy(),
+            macd_hist=(macd_line - sig).to_numpy(),
         )
+        return out, (float(ef.iloc[-1]), float(es.iloc[-1]), float(sig.iloc[-1]))
 
-    def fn(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            payload = read_state(state, n_state, _OP)
-            state.remove()
-            if buffered:
-                held = _rebuild_buffer(cols, tuple(payload[5:]), time)
-                if len(held):
-                    held = held.sort_values(order, kind="mergesort").reset_index(
-                        drop=True
-                    )
-                    flushed, _ = _apply(held, payload[:3])
-                    yield flushed
-            return
-        # See streaming_ewm_mean: chunks are unordered — concat, sort once.
-        chunks = list(pdf_iter)
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(order, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        if state.exists:
-            payload = read_state(state, n_state, _OP)
-            carry, last_ts = payload[:3], payload[3]
-            if buffered:
-                max_seen = payload[4]
-                held = _rebuild_buffer(cols, tuple(payload[5:]), time)
-        else:
-            carry, last_ts = (None, None, None), None
-            max_seen, held = None, pdf.iloc[0:0]
-        if buffered:
-            pdf[time] = pdf[time].astype("datetime64[us]")
-            new_us = pdf[time].astype("int64")
-            if last_ts is not None and len(new_us) and pdf[time].iloc[0] < last_ts:
-                raise_beyond_bound(
-                    key[0],
-                    int(new_us.min()),
-                    int(pd.Timestamp(last_ts).value // 1000),
-                    _OP,
-                )
-            if len(new_us):
-                bmax = int(new_us.max())
-                max_seen = bmax if max_seen is None else max(max_seen, bmax)
-            combined = (
-                pd.concat([held, pdf], ignore_index=True)
-                .sort_values(order, kind="mergesort")
-                .reset_index(drop=True)
-            )
-            ts_us = combined[time].astype("datetime64[us]").astype("int64")
-            ready, hold = split_ready(combined, ts_us, (max_seen or 0) - delay_us)
-            bufs = tuple(hold[c].tolist() for c in cols)
-            emitted = None
-            if len(ready):
-                emitted, carry = _apply(ready, carry)
-                last_ts = ready[time].iloc[-1]
-            state.update((STATE_VERSION,) + carry + (last_ts, max_seen) + bufs)
-            if state_ttl_ms is not None:
-                state.setTimeoutDuration(state_ttl_ms)
-            if emitted is not None:
-                yield emitted
-            return
-        pdf = enforce_series_order(pdf, time, last_ts, key[0], on_late)
-        if pdf.empty:
-            return
-        emitted, carry = _apply(pdf, carry)
-        state.update((STATE_VERSION,) + carry + (pdf[time].iloc[-1],))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield emitted
-
-    return stream.groupBy(series).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
+    return ordered_recurrence(
+        stream,
+        step,
+        out_schema=T.StructType(
+            stream.schema.fields
+            + [
+                T.StructField(c, T.DoubleType())
+                for c in ("macd", "macd_signal", "macd_hist")
+            ]
         ),
+        carry_fields=[
+            T.StructField(c, T.DoubleType())
+            for c in ("ema_fast", "ema_slow", "ema_signal")
+        ],
+        operator="streaming_macd",
+        series=series,
+        time=time,
+        order_tiebreak=order_tiebreak,
+        on_late=on_late,
+        delay_seconds=delay_seconds,
+        state_ttl_ms=state_ttl_ms,
     )

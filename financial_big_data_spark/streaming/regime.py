@@ -16,36 +16,29 @@ Design constraints Structured Streaming imposes (and how we meet them):
   each micro-batch labels its rows exactly as the batch operator would given
   the same prefix.
 - Late data: the stateless path uses an event-time watermark; the stateful
-  path requires per-series in-order arrival across micro-batches (sorted
-  within each batch) and ENFORCES it (streaming/ordering.py): a row older
-  than the state's last processed event time raises or — opt-in
-  ``on_late="drop"`` — is discarded, never silently folded into the
-  carried prefix. Matches the batch semantics for availableNow/file
-  replays, which satisfy the contract by construction.
-- State TTL: timeout is configurable; idle series are dropped after
-  ``state_ttl_ms`` (processing-time) to bound total state.
+  operators run on the shared ordered-recurrence driver
+  (streaming/ordering.py), which sorts each series' rows by event time,
+  admits new rows against the last emitted event time (``on_late``:
+  raise, or drop, never silently fold a late row into the carried
+  state) and, with ``delay_seconds > 0``, holds rows until the series'
+  watermark passes them. ``delay_seconds=0`` (default) is in-order
+  delivery, which availableNow/file replays satisfy by construction.
+- State TTL: none by default; ``state_ttl_ms`` drops idle series
+  (processing-time) to bound total state, but keeps an availableNow
+  query from terminating (the driver's trigger caveat).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.regime import ShortTermThresholds
-from .ordering import (
-    STATE_VERSION,
-    enforce_series_order,
-    raise_beyond_bound,
-    read_state,
-    split_ready,
-    validate_on_late,
-)
+from .ordering import micros, ordered_recurrence
 
 
 def streaming_bar_stats(
@@ -88,8 +81,6 @@ def _label_rows(
     Pure pandas mirror of operators.regime.regime_features +
     detect_regime_5way so streaming output converges to batch output.
     """
-    import numpy as np
-
     hourly = closes.pct_change()
     daily = closes.pct_change(window_size)
     vol = hourly.rolling(window_size).std() * np.sqrt(window_size)
@@ -105,6 +96,12 @@ def _label_rows(
     return out
 
 
+def _columns(stream: DataFrame, *names: str) -> DataFrame:
+    """``stream`` projected to the columns a step reads, so the driver
+    ships and holds nothing else."""
+    return stream.select(*dict.fromkeys(names))
+
+
 def streaming_label_transitions(
     stream: DataFrame,
     series: str = "symbol",
@@ -112,197 +109,69 @@ def streaming_label_transitions(
     close: str = "close",
     window_size: int = 24,
     thresholds: ShortTermThresholds | None = None,
-    state_ttl_ms: int = 24 * 3600 * 1000,
+    state_ttl_ms: int | None = None,
     order_tiebreak: list[str] | None = None,
     on_late: str = "error",
-    delay_seconds: float | None = None,
+    delay_seconds: float = 0,
 ) -> DataFrame:
     """Stateful path: per-series regime labels + transition flags on a stream.
 
     Emits one row per input bar: (series, ts, close, regime, prev_regime,
-    is_transition). GroupState per series: the last ``2×window_size`` closes
-    (warm-up prefix) + the last emitted regime — bounded regardless of
-    stream length. The cross-batch in-order contract is ENFORCED
-    (streaming/ordering.py): a row older than the state's last processed
-    event time raises (``on_late="error"``) or is dropped
-    (``on_late="drop"`` / ``"drop-replayed"``) instead of silently
-    corrupting the close prefix.
-
-    ``delay_seconds`` (VERDICT r9 #4): a watermark-bounded REORDER BUFFER
-    that absorbs bounded disorder instead — held (ts, close) pairs per
-    series, emitted through the labeler in event-time order once the
-    series' watermark (max event time seen − delay) passes them. State
-    grows by ~rate × delay rows; a row older than the last LABELED event
-    time still raises (the buffer bounds the disorder it absorbs). TTL
-    expiry FLUSHES the buffer through the labeler before dropping state,
-    so an idle series loses no input rows. The buffered state layout
-    differs from the unbuffered one — switching requires a fresh
-    checkpoint (the layout guard raises the named error)."""
-    validate_on_late(on_late)
+    is_transition). The carry per series is the last ``2×window_size``
+    closes (warm-up prefix) and the last emitted regime — bounded
+    regardless of stream length. ``order_tiebreak``, ``on_late``,
+    ``delay_seconds`` and ``state_ttl_ms`` are the shared driver's
+    (streaming/ordering.py): rows are labelled in ``[time,
+    *order_tiebreak]`` order, a late row raises or is dropped instead of
+    corrupting the close prefix, and a positive delay holds rows until
+    the series' watermark passes them."""
     t = thresholds or ShortTermThresholds()
-    order = [time] + (order_tiebreak or [])
-    buffered = delay_seconds is not None
-    if buffered and delay_seconds < 0:
-        raise ValueError("delay_seconds must be >= 0")
-    delay_us = int((delay_seconds or 0) * 1_000_000)
-    out_schema = T.StructType(
-        [
-            T.StructField(series, T.StringType()),
-            T.StructField(time, T.TimestampType()),
-            T.StructField(close, T.DoubleType()),
-            T.StructField("regime", T.StringType()),
-            T.StructField("prev_regime", T.StringType()),
-            T.StructField("is_transition", T.BooleanType()),
-        ]
-    )
-    state_fields = [
-        T.StructField("state_v", T.IntegerType()),
-        T.StructField("closes", T.ArrayType(T.DoubleType())),
-        T.StructField("last_regime", T.StringType()),
-        T.StructField("last_ts", T.TimestampType()),
-    ]
-    if buffered:
-        state_fields += [
-            T.StructField("max_seen_us", T.LongType()),
-            T.StructField("buf_ts", T.ArrayType(T.TimestampType())),
-            T.StructField("buf_close", T.ArrayType(T.DoubleType())),
-        ]
-    state_schema = T.StructType(state_fields)
-    n_state = len(state_fields)
     keep = 2 * window_size
-    _OP = "streaming_label_transitions"
 
-    def _label(pdf, closes_prefix, last_regime):
-        """One in-order slice through the batch-identical labeler;
-        returns (out frame, new prefix, new last_regime, new last_ts)."""
-        full = pd.Series(closes_prefix + pdf[close].astype(float).tolist())
-        labels = _label_rows(full, window_size, t).iloc[len(closes_prefix):]
+    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame, tuple]:
+        prefix, last_regime = carry
+        prefix = list(prefix or [])
+        closes = prefix + rows[close].astype(float).tolist()
+        labels = _label_rows(pd.Series(closes), window_size, t).to_numpy()[len(prefix):]
         prev = [last_regime] + labels.tolist()[:-1]
         out = pd.DataFrame(
             {
-                series: pdf[series].astype(str),
-                time: pdf[time].values,
-                close: pdf[close].astype(float).values,
-                "regime": labels.values,
+                series: rows[series].astype(str).to_numpy(),
+                time: rows[time].to_numpy(),
+                close: closes[len(prefix):],
+                "regime": labels,
                 "prev_regime": prev,
                 "is_transition": [
                     p is not None and p != r for p, r in zip(prev, labels)
                 ],
             }
         )
-        new_prefix = (closes_prefix + pdf[close].astype(float).tolist())[-keep:]
-        new_last = labels.iloc[-1] if len(labels) else last_regime
-        return out, new_prefix, new_last, pdf[time].iloc[-1]
+        return out, (closes[-keep:], labels[-1])
 
-    def fn(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # TTL expiry: a timed-out invocation has an empty batch iterator —
-        # drop the state instead of re-arming the timeout, or idle series
-        # would be resurrected forever and state would grow with churn.
-        # Buffered mode FLUSHES the held rows through the labeler first.
-        if state.hasTimedOut:
-            payload = read_state(state, n_state, _OP)
-            state.remove()
-            if buffered:
-                closes_prefix, last_regime, _lt, _ms, buf_ts, buf_close = payload
-                if buf_ts:
-                    held = pd.DataFrame(
-                        {
-                            series: str(key[0]),
-                            time: pd.to_datetime(list(buf_ts)).astype(
-                                "datetime64[us]"
-                            ),
-                            close: list(buf_close),
-                        }
-                    ).sort_values([time], kind="mergesort").reset_index(drop=True)
-                    out, _, _, _ = _label(
-                        held, list(closes_prefix), last_regime
-                    )
-                    yield out
-            return
-        if state.exists:
-            payload = read_state(state, n_state, _OP)
-            closes_prefix, last_regime, last_ts = payload[0], payload[1], payload[2]
-            closes_prefix = list(closes_prefix)
-            if buffered:
-                max_seen = payload[3]
-                buf_ts, buf_close = list(payload[4]), list(payload[5])
-        else:
-            closes_prefix, last_regime, last_ts = [], None, None
-            max_seen, buf_ts, buf_close = None, [], []
-        # One group can arrive as MULTIPLE Arrow chunks (maxRecordsPerBatch)
-        # in no guaranteed order; labeling per chunk while carrying the
-        # prefix across chunks would process out-of-order closes.
-        # Concatenate the whole group's batch and sort ONCE.
-        chunks = list(pdf_iter)
-        for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
-            # stable sort + optional tiebreaker: duplicate timestamps must
-            # not leave the labeling order (hence the carried close prefix)
-            # to Arrow chunk arrival order
-            pdf = pdf.sort_values(order, kind="mergesort")
-            if buffered:
-                pdf = pdf.reset_index(drop=True)
-                pdf[time] = pdf[time].astype("datetime64[us]")
-                new_us = pdf[time].astype("int64")
-                if (
-                    last_ts is not None
-                    and len(new_us)
-                    and pdf[time].iloc[0] < last_ts
-                ):
-                    raise_beyond_bound(
-                        key[0],
-                        int(new_us.min()),
-                        int(pd.Timestamp(last_ts).value // 1000),
-                        _OP,
-                    )
-                if len(new_us):
-                    bmax = int(new_us.max())
-                    max_seen = bmax if max_seen is None else max(max_seen, bmax)
-                held = pd.DataFrame(
-                    {
-                        series: str(key[0]),
-                        time: pd.to_datetime(buf_ts).astype("datetime64[us]"),
-                        close: buf_close,
-                    }
-                )
-                combined = (
-                    pd.concat([held, pdf[[series, time, close]]], ignore_index=True)
-                    .sort_values([time], kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                ts_us = combined[time].astype("int64")
-                ready, hold = split_ready(
-                    combined, ts_us, (max_seen or 0) - delay_us
-                )
-                buf_ts = hold[time].tolist()
-                buf_close = hold[close].astype(float).tolist()
-                pdf = ready
-            else:
-                pdf = enforce_series_order(pdf, time, last_ts, key[0], on_late)
-            if pdf.empty:
-                continue
-            out, closes_prefix, last_regime, last_ts = _label(
-                pdf, closes_prefix, last_regime
-            )
-            yield out
-        if buffered:
-            state.update(
-                (
-                    STATE_VERSION, closes_prefix, last_regime, last_ts,
-                    max_seen, buf_ts, buf_close,
-                )
-            )
-        else:
-            state.update((STATE_VERSION, closes_prefix, last_regime, last_ts))
-        state.setTimeoutDuration(state_ttl_ms)
-
-    return stream.groupBy(series).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return ordered_recurrence(
+        _columns(stream, series, time, close, *(order_tiebreak or [])),
+        step,
+        out_schema=T.StructType(
+            [
+                T.StructField(series, T.StringType()),
+                T.StructField(time, T.TimestampType()),
+                T.StructField(close, T.DoubleType()),
+                T.StructField("regime", T.StringType()),
+                T.StructField("prev_regime", T.StringType()),
+                T.StructField("is_transition", T.BooleanType()),
+            ]
+        ),
+        carry_fields=[
+            T.StructField("closes", T.ArrayType(T.DoubleType())),
+            T.StructField("last_regime", T.StringType()),
+        ],
+        operator="streaming_label_transitions",
+        series=series,
+        time=time,
+        order_tiebreak=order_tiebreak,
+        on_late=on_late,
+        delay_seconds=delay_seconds,
+        state_ttl_ms=state_ttl_ms,
     )
 
 
@@ -314,48 +183,29 @@ def streaming_regime_transitions(
     state_ttl_ms: int | None = None,
     order_tiebreak: list[str] | None = None,
     on_late: str = "error",
-    delay_seconds: float | None = None,
+    delay_seconds: float = 0,
 ) -> DataFrame:
     """W12 gaps-and-islands ACROSS micro-batch boundaries (VERDICT r7 #8):
     the streaming continuation of ``operators.transitions.regime_transitions``
     over an already-labeled stream (series, ts, regime).
 
-    State per series is O(1) — the OPEN run only: (regime, start_time,
-    end_time, n_rows). Each micro-batch (sorted by event time, same
-    in-order contract as streaming/ewm.py) extends or closes it; a row
+    The carry per series is O(1) — the OPEN run only: (regime, start,
+    end). Each emitted slice (in ``[time, *order_tiebreak]`` order, the
+    shared driver's, streaming/ordering.py) extends or closes it; a row
     whose label differs from the open run's emits the completed run as a
     transition — (from_regime, to_regime, start_time, end_time, duration,
     duration_days, is_volatility_increase, is_trend_change), the exact
     batch columns with the exact arithmetic (integer-microsecond diff /
     3.6e9, the same operand order as ``_duration_hours``) — so ANY
-    micro-batch split of the same in-order input yields byte-identical
-    rows to the batch operator on the concatenation. The batch operator
-    drops the final (still-open) run for the same reason this one keeps
-    it in state: its successor hasn't arrived.
+    micro-batch split of the same input yields byte-identical rows to the
+    batch operator on the concatenation. The batch operator drops the
+    final (still-open) run for the same reason this one keeps it in
+    state: its successor hasn't arrived; a TTL flush emits the
+    transitions among the held rows and drops the open run likewise.
 
     Composition note: labeling and run-tracking are BOTH stateful; chain
     them across two streaming queries (label → sink → this) rather than
-    stacking two applyInPandasWithState operators in one query.
-
-    The in-order contract is ENFORCED (streaming/ordering.py) against the
-    open run's end time — the last event the state absorbed: a late row
-    raises naming the series/timestamps (``on_late="error"``) or is
-    dropped (``on_late="drop"`` / ``"drop-replayed"``) instead of
-    silently extending a run it precedes.
-
-    ``delay_seconds`` (VERDICT r9 #4): a watermark-bounded reorder buffer
-    — held (ts, regime) pairs per series absorb bounded disorder and fold
-    into the run tracker in event-time order once the watermark passes
-    them; a row older than the last ABSORBED event time still raises.
-    TTL expiry flushes the buffer through the tracker (emitting any
-    transitions it completes) before dropping state; the then-open run is
-    dropped exactly as the batch operator drops its final run."""
-    validate_on_late(on_late)
-    t_cols = [time] + (order_tiebreak or [])
-    buffered = delay_seconds is not None
-    if buffered and delay_seconds < 0:
-        raise ValueError("delay_seconds must be >= 0")
-    delay_us = int((delay_seconds or 0) * 1_000_000)
+    stacking two applyInPandasWithState operators in one query."""
     out_schema = T.StructType(
         [
             T.StructField(series, T.StringType()),
@@ -369,149 +219,56 @@ def streaming_regime_transitions(
             T.StructField("is_trend_change", T.BooleanType()),
         ]
     )
-    state_fields = [
-        T.StructField("state_v", T.IntegerType()),
-        T.StructField("run_regime", T.StringType()),
-        T.StructField("run_start", T.TimestampType()),
-        T.StructField("run_end", T.TimestampType()),
-        T.StructField("run_n", T.LongType()),
-    ]
-    if buffered:
-        state_fields += [
-            T.StructField("max_seen_us", T.LongType()),
-            T.StructField("buf_ts", T.ArrayType(T.TimestampType())),
-            T.StructField("buf_regime", T.ArrayType(T.StringType())),
-        ]
-    state_schema = T.StructType(state_fields)
-    n_state = len(state_fields)
-    _OP = "streaming_regime_transitions"
 
-    def _fold(rows, run, skey):
-        """Feed (ts, regime) rows through the run tracker; returns
-        (completed transitions, new run tuple) — the exact batch
-        arithmetic (integer-µs diff / 3.6e9)."""
-        cur_reg, cur_start, cur_end, cur_n = run
-        out = []
-        for ts_, reg in rows:
-            if cur_reg is None:
-                cur_reg, cur_start, cur_end, cur_n = reg, ts_, ts_, 1
-            elif reg == cur_reg:
-                cur_end, cur_n = ts_, cur_n + 1
-            else:
-                us = (
-                    pd.Timestamp(cur_end).value - pd.Timestamp(cur_start).value
-                ) // 1000
-                duration = us / 3_600_000_000.0
-                vol_up = ("volatile" not in cur_reg) and ("volatile" in reg)
-                trend = ("bull" in cur_reg and "bear" in reg) or (
-                    "bear" in cur_reg and "bull" in reg
-                )
-                out.append(
-                    (
-                        skey, cur_reg, reg, cur_start, cur_end,
-                        duration, duration / 24.0, vol_up, trend,
-                    )
-                )
-                cur_reg, cur_start, cur_end, cur_n = reg, ts_, ts_, 1
-        return out, (cur_reg, cur_start, cur_end, cur_n)
-
-    def fn(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            payload = read_state(state, n_state, _OP)
-            state.remove()
-            if buffered:
-                run, buf_ts, buf_reg = payload[:4], payload[5], payload[6]
-                if buf_ts:
-                    # flush: completed transitions among buffered rows
-                    # emit; the final open run drops with the state (the
-                    # batch operator's own final-run semantics)
-                    rows = sorted(zip(list(buf_ts), list(buf_reg)))
-                    out, _ = _fold(rows, tuple(run), key[0])
-                    if out:
-                        yield pd.DataFrame(
-                            out, columns=[f.name for f in out_schema.fields]
-                        )
-            return
-        chunks = list(pdf_iter)
-        if not chunks:
-            return
-        # one group = many unordered Arrow chunks: concat + ONE stable sort
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(t_cols, kind="mergesort")
-            .reset_index(drop=True)
+    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame | None, tuple]:
+        run_regime, run_start, run_end = carry
+        labels = rows[regime].to_numpy(dtype=object)
+        ts = micros(rows[time])
+        if run_regime is not None:
+            # the open run re-enters as its first and last row
+            labels = np.concatenate([np.array([run_regime] * 2, dtype=object), labels])
+            ts = np.concatenate([np.array([run_start, run_end], dtype=np.int64), ts])
+        first = np.flatnonzero(np.r_[True, labels[1:] != labels[:-1]])
+        carry = (labels[first[-1]], int(ts[first[-1]]), int(ts[-1]))
+        if len(first) == 1:
+            return None, carry
+        frm, to = labels[first[:-1]], labels[first[1:]]
+        start, end = ts[first[:-1]], ts[first[1:] - 1]
+        duration = (end - start) / 3_600_000_000.0
+        out = pd.DataFrame(
+            {
+                series: str(rows[series].iloc[0]),
+                "from_regime": frm,
+                "to_regime": to,
+                "start_time": start.astype("datetime64[us]"),
+                "end_time": end.astype("datetime64[us]"),
+                "duration": duration,
+                "duration_days": duration / 24.0,
+                "is_volatility_increase": [
+                    "volatile" not in a and "volatile" in b for a, b in zip(frm, to)
+                ],
+                "is_trend_change": [
+                    ("bull" in a and "bear" in b) or ("bear" in a and "bull" in b)
+                    for a, b in zip(frm, to)
+                ],
+            }
         )
-        if state.exists:
-            payload = read_state(state, n_state, _OP)
-            cur_reg, cur_start, cur_end, cur_n = payload[:4]
-            if buffered:
-                max_seen = payload[4]
-                buf_ts, buf_reg = list(payload[5]), list(payload[6])
-        else:
-            cur_reg, cur_start, cur_end, cur_n = None, None, None, 0
-            max_seen, buf_ts, buf_reg = None, [], []
-        skey = key[0]
-        if buffered:
-            pdf[time] = pdf[time].astype("datetime64[us]")
-            new_us = pdf[time].astype("int64")
-            if (
-                cur_end is not None
-                and len(new_us)
-                and pdf[time].iloc[0] < cur_end
-            ):
-                raise_beyond_bound(
-                    skey,
-                    int(new_us.min()),
-                    int(pd.Timestamp(cur_end).value // 1000),
-                    _OP,
-                )
-            if len(new_us):
-                bmax = int(new_us.max())
-                max_seen = bmax if max_seen is None else max(max_seen, bmax)
-            pairs = sorted(
-                list(zip(buf_ts, buf_reg))
-                + list(zip(pdf[time], pdf[regime]))
-            )
-            watermark_ts = pd.Timestamp((max_seen or 0) - delay_us, unit="us")
-            ready = [(ts_, r) for ts_, r in pairs if ts_ <= watermark_ts]
-            hold = [(ts_, r) for ts_, r in pairs if ts_ > watermark_ts]
-            buf_ts = [ts_ for ts_, _ in hold]
-            buf_reg = [r for _, r in hold]
-            rows = ready
-        else:
-            # the open run's end IS the last event time the state absorbed
-            pdf = enforce_series_order(pdf, time, cur_end, skey, on_late)
-            if pdf.empty:
-                return
-            rows = list(zip(pdf[time], pdf[regime]))
-        out, run = _fold(rows, (cur_reg, cur_start, cur_end, cur_n), skey)
-        cur_reg, cur_start, cur_end, cur_n = run
-        if buffered:
-            state.update(
-                (
-                    STATE_VERSION, cur_reg, cur_start, cur_end, int(cur_n),
-                    max_seen, buf_ts, buf_reg,
-                )
-            )
-        else:
-            state.update(
-                (STATE_VERSION, cur_reg, cur_start, cur_end, int(cur_n))
-            )
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+        return out, carry
 
-    return stream.groupBy(series).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return ordered_recurrence(
+        _columns(stream, series, time, regime, *(order_tiebreak or [])),
+        step,
+        out_schema=out_schema,
+        carry_fields=[
+            T.StructField("run_regime", T.StringType()),
+            T.StructField("run_start_us", T.LongType()),
+            T.StructField("run_end_us", T.LongType()),
+        ],
+        operator="streaming_regime_transitions",
+        series=series,
+        time=time,
+        order_tiebreak=order_tiebreak,
+        on_late=on_late,
+        delay_seconds=delay_seconds,
+        state_ttl_ms=state_ttl_ms,
     )

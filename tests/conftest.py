@@ -266,10 +266,8 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_one_snapshot_per_microbatch_and_frozen_encode",
     },
     "test_streaming_ewm": {
-        "test_streaming_ewm_buffered_absorbs_bounded_disorder",
         "test_streaming_ewm_buffered_carries_input_columns",
         "test_streaming_ewm_mean_bit_exact_across_batches",
-        "test_streaming_ewm_out_of_order_raises_named",
         "test_streaming_macd_buffered_absorbs_disorder_and_carries_columns",
     },
     "test_streaming_near_dup": {
@@ -278,13 +276,8 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_rejected_doc_still_vetoes",
         "test_stream_matches_batch_curation",
     },
-    "test_streaming_plans": {
-        "test_streaming_labels_match_batch",
-    },
     "test_streaming_transitions": {
         "test_label_to_transitions_buffered_end_to_end",
-        "test_streaming_transitions_buffered_beyond_bound_raises",
-        "test_streaming_transitions_buffered_disordered_byte_match",
         "test_streaming_transitions_byte_match_batch",
     },
     "test_streaming_upsert": {

@@ -55,16 +55,15 @@ def driver_tz(request, monkeypatch):
 def test_local_frame_matches_create_dataframe(spark, driver_tz):
     """Rows → local_frame → collect equals createDataFrame(rows) → collect,
     and collected rows round-trip, for timestamp (also nested),
-    timestamp_ntz, date, decimal, string and an all-NULL row."""
+    timestamp_ntz, date, decimal, string, an all-NULL row and a NULL map."""
     want = spark.createDataFrame(ROWS, SCHEMA)
     rows = want.collect()
     got = local_frame(spark, ROWS, SCHEMA)
     assert got.schema == want.schema
     assert got.collect() == rows
     assert local_frame(spark, rows, want.schema).collect() == rows
-    # a map's timestamps too (a NULL map is left out: Spark's Arrow reader
-    # returns it as an empty map)
-    maps = [({"a": datetime(2024, 7, 1, 7, 30), "b": None},)]
+    # a map's timestamps too, and a NULL map stays NULL (not an empty map)
+    maps = [({"a": datetime(2024, 7, 1, 7, 30), "b": None},), (None,), ({},)]
     want = spark.createDataFrame(maps, "m map<string,timestamp>").collect()
     assert local_frame(spark, maps, "m map<string,timestamp>").collect() == want
 

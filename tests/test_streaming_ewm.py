@@ -5,9 +5,9 @@ out of scope for batch)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import tempfile
-import time as _time
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +15,17 @@ from pyspark.sql import functions as F
 from financial_big_data_spark.functions.ewm import ewm_mean as batch_ewm
 from financial_big_data_spark.functions.ewm import macd as batch_macd
 from financial_big_data_spark.streaming.ewm import streaming_ewm_mean, streaming_macd
+
+
+def _write_batches(df, conds, d):
+    """One file per condition, with strictly increasing mtimes: one
+    micro-batch each, in this order, under maxFilesPerTrigger=1
+    (FileStreamSource orders by modification time)."""
+    for j, cond in enumerate(conds):
+        path = f"{d}/f{j}"
+        df.where(cond).coalesce(1).write.mode("overwrite").parquet(path)
+        for p in os.listdir(path):
+            os.utime(os.path.join(path, p), (1_700_000_000 + 60 * j,) * 2)
 
 
 @pytest.fixture(scope="module")
@@ -31,15 +42,12 @@ def ewm_stream(spark):
             )
     df = spark.createDataFrame(rows, "symbol string, ts timestamp, close double")
     d = tempfile.mkdtemp(prefix="ewm_stream_")
-    # Three files with strictly increasing mtimes → three micro-batches in
-    # event-time order under maxFilesPerTrigger=1 (FileStreamSource orders
-    # by modification time; sub-second ties would break the in-order
-    # contract, hence the sleeps).
-    for j, (lo, hi) in enumerate([(0, 20), (20, 40), (40, 60)]):
-        df.where((F.minute("ts") >= lo) & (F.minute("ts") < hi)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/f{j}")
-        _time.sleep(1.1)
+    # three micro-batches in event-time order
+    _write_batches(
+        df,
+        [(F.minute("ts") >= lo) & (F.minute("ts") < lo + 20) for lo in (0, 20, 40)],
+        d,
+    )
     yield df, d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -57,8 +65,11 @@ def _run(spark, d, build, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    try:
+        assert q.awaitTermination(180), f"{name}: replay did not finish"
+        n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    finally:
+        q.stop()
     return spark.table(name), n_batches
 
 
@@ -160,9 +171,7 @@ def ooo_stream(spark):
     ]
     df = spark.createDataFrame(rows, "symbol string, ts timestamp, close double")
     d = tempfile.mkdtemp(prefix="ewm_ooo_")
-    for j, cond in enumerate([F.minute("ts") % 2 == 0, F.minute("ts") % 2 == 1]):
-        df.where(cond).coalesce(1).write.mode("overwrite").parquet(f"{d}/f{j}")
-        _time.sleep(1.1)
+    _write_batches(df, [F.minute("ts") % 2 == 0, F.minute("ts") % 2 == 1], d)
     yield df, d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -172,22 +181,12 @@ def test_streaming_ewm_out_of_order_raises_named(spark, ooo_stream):
     series and timestamps — never silently corrupt the recurrence."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    df, d = ooo_stream
-    schema = df.schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/f*")
-    )
-    q = (
-        streaming_ewm_mean(stream, value="close", span=10)
-        .writeStream.format("memory")
-        .queryName("ewm_ooo_err")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(StreamingQueryException, match="out-of-order"):
-        q.awaitTermination(180)
-    assert "AAA" in str(q.exception())
+    _, d = ooo_stream
+    with pytest.raises(StreamingQueryException, match="out-of-order") as err:
+        _run(
+            spark, d, lambda s: streaming_ewm_mean(s, value="close", span=10), "ewm_ooo_err"
+        )
+    assert "AAA" in str(err.value)
 
 
 def test_streaming_ewm_out_of_order_drop_processes_in_order_subset(spark, ooo_stream):
@@ -195,21 +194,13 @@ def test_streaming_ewm_out_of_order_drop_processes_in_order_subset(spark, ooo_st
     the recurrence byte-identically to the batch operator on the kept
     (in-order) subset."""
     df, d = ooo_stream
-    schema = df.schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/f*")
+    got_df, _ = _run(
+        spark,
+        d,
+        lambda s: streaming_ewm_mean(s, value="close", span=10, on_late="drop"),
+        "ewm_ooo_drop",
     )
-    q = (
-        streaming_ewm_mean(stream, value="close", span=10, on_late="drop")
-        .writeStream.format("memory")
-        .queryName("ewm_ooo_drop")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-    got = {(r.symbol, r.ts): r.ewm for r in spark.table("ewm_ooo_drop").collect()}
+    got = {(r.symbol, r.ts): r.ewm for r in got_df.collect()}
     # kept subset: all even minutes (batch 1) + :59 (the only odd row not
     # older than batch 1's last processed :58)
     kept = df.where((F.minute("ts") % 2 == 0) | (F.minute("ts") == 59))
@@ -239,37 +230,24 @@ def buffered_stream(spark):
     d = tempfile.mkdtemp(prefix="ewm_buf_")
     b1 = (F.minute("ts") <= 24) | ((F.minute("ts") >= 26) & (F.minute("ts") <= 29))
     b2 = (F.minute("ts") == 25) | (F.minute("ts") >= 30)
-    for j, cond in enumerate([b1, b2]):
-        df.where(cond).coalesce(1).write.mode("overwrite").parquet(f"{d}/f{j}")
-        _time.sleep(1.1)
+    _write_batches(df, [b1, b2], d)
     yield df, d
     shutil.rmtree(d, ignore_errors=True)
 
 
 def test_streaming_ewm_buffered_absorbs_bounded_disorder(spark, buffered_stream):
-    """The reorder-buffer variant: a 10-minute watermark absorbs the
-    4-minute-late row; emitted rows are byte-identical to the batch
-    operator on the SORTED full input (prefix up to the final
+    """The reorder buffer (``delay_seconds > 0``): a 10-minute watermark
+    absorbs the 4-minute-late row; emitted rows are byte-identical to
+    the batch operator on the SORTED full input (prefix up to the final
     watermark); the last delay's worth of rows stays buffered."""
-    from financial_big_data_spark.streaming.ewm import streaming_ewm_mean_buffered
-
     df, d = buffered_stream
-    stream = (
-        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/f*")
+    got_df, _ = _run(
+        spark,
+        d,
+        lambda s: streaming_ewm_mean(s, value="close", span=10, delay_seconds=600),
+        "ewm_buf",
     )
-    q = (
-        streaming_ewm_mean_buffered(
-            stream, value="close", span=10, delay_seconds=600
-        )
-        .writeStream.format("memory")
-        .queryName("ewm_buf")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-    got = {(r.symbol, r.ts): r.ewm for r in spark.table("ewm_buf").collect()}
+    got = {(r.symbol, r.ts): r.ewm for r in got_df.collect()}
     # final watermark = minute 59 - 10 => rows up to minute 49 emitted,
     # INCLUDING the late minute 25 folded back into event-time order
     exp = {
@@ -284,36 +262,24 @@ def test_streaming_ewm_buffered_absorbs_bounded_disorder(spark, buffered_stream)
 def test_streaming_ewm_buffered_beyond_bound_raises(spark, buffered_stream):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from financial_big_data_spark.streaming.ewm import streaming_ewm_mean_buffered
-
     df, d = buffered_stream
-    stream = (
-        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/f*")
-    )
     # 60s bound: after batch 1 the watermark sits at minute 28, so the
     # 4-minute-late minute 25 in batch 2 is older than the last EMITTED
     # event — beyond the bound, must fail naming the series
-    q = (
-        streaming_ewm_mean_buffered(
-            stream, value="close", span=10, delay_seconds=60
+    with pytest.raises(StreamingQueryException, match="beyond the reorder bound") as err:
+        _run(
+            spark,
+            d,
+            lambda s: streaming_ewm_mean(s, value="close", span=10, delay_seconds=60),
+            "ewm_buf_err",
         )
-        .writeStream.format("memory")
-        .queryName("ewm_buf_err")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(StreamingQueryException, match="beyond the reorder bound"):
-        q.awaitTermination(180)
-    assert "AAA" in str(q.exception())
+    assert "AAA" in str(err.value)
 
 
 def test_streaming_ewm_buffered_carries_input_columns(spark):
     """VERDICT r9 #4: the buffered EWM's output schema is the INPUT
     schema + ewm — extra columns ride the reorder buffer instead of
     being projected away (no re-join on (series, ts) needed)."""
-    from financial_big_data_spark.streaming.ewm import streaming_ewm_mean_buffered
-
     rows = [
         ("AAA", dt.datetime(2024, 5, 1) + dt.timedelta(minutes=i),
          100.0 + i * 0.5, i * 10, f"tag{i}")
@@ -326,28 +292,15 @@ def test_streaming_ewm_buffered_carries_input_columns(spark):
     try:
         b1 = (F.minute("ts") <= 14) & (F.minute("ts") != 13)
         b2 = (F.minute("ts") == 13) | (F.minute("ts") >= 15)
-        for j, cond in enumerate([b1, b2]):
-            df.where(cond).coalesce(1).write.mode("overwrite").parquet(f"{d}/f{j}")
-            _time.sleep(1.1)
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/f*")
-        )
-        out = streaming_ewm_mean_buffered(
-            stream, value="close", span=5, delay_seconds=120
-        )
-        assert out.columns == ["symbol", "ts", "close", "volume", "tag", "ewm"]
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ewm_carry")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        assert q.exception() is None
-        got = {r.ts: (r.volume, r.tag, r.ewm) for r in spark.table("ewm_carry").collect()}
+        _write_batches(df, [b1, b2], d)
+
+        def build(stream):
+            out = streaming_ewm_mean(stream, value="close", span=5, delay_seconds=120)
+            assert out.columns == ["symbol", "ts", "close", "volume", "tag", "ewm"]
+            return out
+
+        got_df, _ = _run(spark, d, build, "ewm_carry")
+        got = {r.ts: (r.volume, r.tag, r.ewm) for r in got_df.collect()}
         # watermark = minute 29 - 2 => rows through minute 27 emitted,
         # the late minute 13 included, extra columns intact
         exp_ewm = {
@@ -368,30 +321,36 @@ def test_streaming_ewm_buffered_carries_input_columns(spark):
 
 def test_drop_replayed_discards_equal_timestamp_redelivery():
     """ADVICE r9: on_late='drop' keeps rows with event time EQUAL to the
-    last processed (an at-least-once redelivery re-folds into the
+    last emitted (an at-least-once redelivery re-folds into the
     recurrence); on_late='drop-replayed' drops at-or-before rows, so the
-    redelivered last row is discarded."""
+    redelivered last row is discarded. The driver's admission step is
+    the same at every delay."""
     import pandas as pd
 
-    from financial_big_data_spark.streaming.ordering import enforce_series_order
+    from financial_big_data_spark.streaming.ordering import admit, micros
 
     t = [dt.datetime(2024, 6, 1, 0, m) for m in range(4)]
-    pdf = pd.DataFrame({"ts": [t[2], t[3]], "v": [1.0, 2.0]})
-    kept_drop = enforce_series_order(pdf, "ts", t[2], "AAA", "drop")
-    assert kept_drop["ts"].tolist() == [t[2], t[3]]  # equal ts reprocessed
-    kept_replayed = enforce_series_order(pdf, "ts", t[2], "AAA", "drop-replayed")
-    assert kept_replayed["ts"].tolist() == [t[3]]  # redelivery discarded
-    # strictly-late rows drop under both
-    pdf2 = pd.DataFrame({"ts": [t[0], t[3]], "v": [1.0, 2.0]})
-    assert enforce_series_order(pdf2, "ts", t[2], "A", "drop")["ts"].tolist() == [t[3]]
+    last_us = int(micros(pd.Series([t[2]]))[0])
+
+    def kept(ts, on_late, delay=0):
+        pdf = pd.DataFrame({"ts": ts, "v": [1.0, 2.0]})
+        rows, _ = admit(pdf, micros(pdf["ts"]), last_us, on_late, "AAA", "op", delay)
+        return rows["ts"].tolist()
+
+    for delay in (0, 60):
+        assert kept([t[2], t[3]], "drop", delay) == [t[2], t[3]]  # equal ts reprocessed
+        assert kept([t[2], t[3]], "drop-replayed", delay) == [t[3]]  # redelivery discarded
+        # strictly-late rows drop under both
+        assert kept([t[0], t[3]], "drop", delay) == [t[3]]
+        assert kept([t[0], t[3]], "drop-replayed", delay) == [t[3]]
+        with pytest.raises(ValueError, match="beyond the reorder bound"):
+            kept([t[0], t[3]], "error", delay)
 
 
 def test_streaming_macd_buffered_absorbs_disorder_and_carries_columns(spark):
-    """delay_seconds= on MACD (the last O(1)-state op without a buffered
-    variant): a disordered-within-bound replay byte-matches the batch
-    MACD on the emitted watermark prefix, with input columns carried."""
-    from financial_big_data_spark.streaming.ewm import streaming_macd
-
+    """delay_seconds= on MACD: a disordered-within-bound replay
+    byte-matches the batch MACD on the emitted watermark prefix, with
+    input columns carried."""
     rows = [
         ("AAA", dt.datetime(2024, 5, 2) + dt.timedelta(minutes=i),
          100.0 + ((i * 37) % 13) - (i % 5) * 0.7, i)
@@ -404,30 +363,19 @@ def test_streaming_macd_buffered_absorbs_disorder_and_carries_columns(spark):
     try:
         b1 = (F.minute("ts") <= 19) & (F.minute("ts") != 18)
         b2 = (F.minute("ts") == 18) | (F.minute("ts") >= 20)
-        for j, cond in enumerate([b1, b2]):
-            df.where(cond).coalesce(1).write.mode("overwrite").parquet(f"{d}/f{j}")
-            _time.sleep(1.1)
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/f*")
-        )
-        out = streaming_macd(stream, close="close", delay_seconds=120)
-        assert out.columns == [
-            "symbol", "ts", "close", "seq", "macd", "macd_signal", "macd_hist"
-        ]
-        q = (
-            out.writeStream.format("memory")
-            .queryName("macd_buf")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        assert q.exception() is None
+        _write_batches(df, [b1, b2], d)
+
+        def build(stream):
+            out = streaming_macd(stream, close="close", delay_seconds=120)
+            assert out.columns == [
+                "symbol", "ts", "close", "seq", "macd", "macd_signal", "macd_hist"
+            ]
+            return out
+
+        got_df, _ = _run(spark, d, build, "macd_buf")
         got = {
             r.ts: (r.seq, r.macd, r.macd_signal, r.macd_hist)
-            for r in spark.table("macd_buf").collect()
+            for r in got_df.collect()
         }
         # watermark = minute 39 - 2 => rows through minute 37 emitted
         exp = {

@@ -36,7 +36,10 @@ def _run_stream(spark, stream_df, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), f"{name}: stream did not finish"
+    finally:
+        q.stop()
     return spark.table(name)
 
 
