@@ -16,10 +16,10 @@ the ε-grid DBSCAN with ``ml.graph.connected_components``; the Louvain
 sweeps.
 
 The correlation matrix that feeds the graph is pairwise-complete like the
-reference's pandas ``.corr()``: masked moments summed on the executors,
-finished on the driver into a local relation, or, above 2500 series,
-listwise distributed column similarities. PCA is MLlib's, with an
-audit-grade power-iteration twin.
+reference's pandas ``.corr()`` at every series count: centred partial
+moments per time partition, merged with Chan's formula in one relational
+step into a distributed frame. PCA is MLlib's, with an audit-grade
+power-iteration twin.
 """
 
 from __future__ import annotations
@@ -212,10 +212,13 @@ def pca_project(
     return out.withColumn("pc", vector_to_array("_pc")).drop("_features", "_pc")
 
 
-# The moments route sums one k×4k float64 matrix on the driver:
-# 4·k²·8 B ≈ 200 MB at k = 2500, the driver budget for bounded metadata.
-# Above it, the distributed tier keeps every k²-sized result in a DataFrame.
-_MOMENTS_MAX_KEYS = 2500
+# A partition tiles its keys in blocks of _PAIR_BLOCK, so a task holds its
+# T_p × k_p panel and O(_PAIR_BLOCK²) pair moments or recomputed cells.
+_PAIR_BLOCK = 512
+# Σx̃² − (Σx̃)²/n loses about ε·Σx̃²/M2 of M2 to cancellation: a pair whose
+# Σx̃² exceeds _CANCEL_BOUND × M2 (error bound ~1e-12) is recomputed exactly.
+_CANCEL_BOUND = 4096.0
+_PARTIAL_COLS = ("key_a", "key_b", "n", "mean_a", "mean_b", "m2_a", "m2_b", "c_ab", "q_a", "q_b")
 
 
 def correlation_matrix(df: DataFrame, key: str, time: str, value: str) -> DataFrame:
@@ -229,162 +232,136 @@ def correlation_matrix(df: DataFrame, key: str, time: str, value: str) -> DataFr
     collapse to their mean, pairs with n = 0 are omitted, and a zero
     variance over a pair's overlap gives NULL corr.
 
-    One ``groupBy(key).agg(avg)`` collect returns the sorted keys and a
-    per-key shift (its mean), then masked moments, all public API:
+    One pass, no driver state at any k:
 
-    - ``repartition(time)`` → ``mapInPandas``: each partition pivots its
-      timestamps into X (value − shift, 0 where missing) and the presence
-      mask M, and emits row i of ``[XᵀX | XᵀM | (X∘X)ᵀM | MᵀM]`` per key i.
-    - ``groupBy(i)`` + ``Summarizer.sum`` adds the partials on the
-      executors; the driver receives one k×4k sum.
-    - The driver derives every pair's r and n from the sums. They are
-      uncentred, so r carries an error of about ε·(s_key / s_pair)², where
-      s_pair is a key's spread over the pair's overlap and s_key its spread
-      around the shift: ~1e-9 on the 300-user hourly panel, but larger for
-      a two- or three-point overlap whose values nearly coincide.
+    - ``repartition(time)`` → ``mapInPandas`` (``_pair_partials``): each
+      partition emits, per pair present in it, the pair's overlap count,
+      means, centred second moments and co-moment (Chan et al.'s partial
+      statistics), plus Σx̃² per key for the rounding bound below.
+    - The partials merge in one relational step on one exchange: a
+      window over (key_a, key_b) picks each key's centre — the smallest
+      partial mean, so a series constant over the overlap gets exactly
+      zero deviations — and ``groupBy(key_a, key_b)`` sums the centred
+      terms: M2 = Σ M2_p + Σ n_p·d_p² − (Σ n_p·d_p)²/n, likewise the
+      co-moment.
+    - A variance within the sums' rounding of zero (≤ 4·n·ε·Σx̃²) is a
+      series constant over this overlap: NULL, as pandas gives NaN.
 
-    Above ``_MOMENTS_MAX_KEYS`` keys the k×4k sum no longer fits the
-    driver and ``_correlation_matrix_distributed`` (listwise, see there)
-    takes over.
+    The result is ``tracked_persist``-ed: it is lazy, and ``release_tracked``
+    drops it once the caller has materialized what it needs.
     """
-    import math
-
     import numpy as np
-    import pandas as pd
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.stat import Summarizer
-
-    spark, v = df.sparkSession, F.col(value).cast("double")
-    present = F.col(key).isNotNull() & v.isNotNull()
-    stats = sorted(df.where(present).groupBy(key).agg(F.avg(v)).collect())
-    keys, k = [r[0] for r in stats], len(stats)
-    if k > _MOMENTS_MAX_KEYS:
-        return _correlation_matrix_distributed(df, key, time, value, keys)
-    pos, shift = pd.Index(keys), np.array([r[1] for r in stats])
-
-    # partials closes over the k keys and shifts: no key-index frame to
-    # join, so no broadcast job
-    def partials(batches):
-        frames = list(batches)
-        if frames:
-            pdf = pd.concat(frames)
-            ki = pos.get_indexer(pdf["_k"])
-            cells = (
-                pdf.assign(_ki=ki, _x=pdf["_v"] - shift[ki])[ki >= 0]
-                .groupby(["_t", "_ki"])["_x"]
-                .mean()
-            )
-            rows, _ = pd.factorize(cells.index.get_level_values(0))
-            cols = cells.index.get_level_values(1)
-            x, m = np.zeros((2, rows.max() + 1, k))
-            x[rows, cols], m[rows, cols] = cells.to_numpy(), 1.0
-            sums = np.hstack([x.T @ x, x.T @ m, (x * x).T @ m, m.T @ m])
-            yield pd.DataFrame({"_i": np.arange(k, dtype=np.int32), "_m": list(sums)})
-
-    summed = (
-        df.where(present & F.col(time).isNotNull())
-        .select(F.col(key).alias("_k"), F.col(time).alias("_t"), v.alias("_v"))
-        .repartition("_t")
-        .mapInPandas(partials, "_i int, _m array<double>")
-        .groupBy("_i")
-        .agg(Summarizer.sum(array_to_vector("_m")).alias("_s"))
-        .collect()
-    )
-    s = np.zeros((k, 4 * k))
-    for r in summed:
-        s[r["_i"]] = r["_s"].toArray()
-    xy, x1, x2, n = (s[:, q * k : (q + 1) * k] for q in range(4))
-    i, j = np.triu_indices(k, 1)
-    n, sx, sy, sxx, syy = n[i, j], x1[i, j], x1[j, i], x2[i, j], x2[j, i]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        vx, vy = sxx - sx * sx / n, syy - sy * sy / n
-        corr = (xy[i, j] - sx * sy / n) / np.sqrt(vx * vy)
-    # a variance within the sums' float rounding of zero (about n·ε·Σx²)
-    # is a series constant over this overlap: NULL, as pandas gives NaN
-    tol = 4 * np.finfo(float).eps * n
-    corr[(vx <= tol * sxx) | (vy <= tol * syy)] = np.nan
-    keep = n > 0
-    pairs = zip(i[keep].tolist(), j[keep].tolist(), corr[keep].tolist(), n[keep].tolist())
-    return local_frame(
-        spark,
-        [(keys[a], keys[b], None if math.isnan(c) else c, int(c_n)) for a, b, c, c_n in pairs],
-        _pair_schema(df, key),
-    )
-
-
-def _pair_schema(df: DataFrame, key: str):
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    from pyspark.sql.window import Window
 
-    key_type = df.schema[key].dataType
-    return StructType(
-        [
-            StructField("key_a", key_type),
-            StructField("key_b", key_type),
-            StructField("corr", DoubleType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-
-def _correlation_matrix_distributed(
-    df: DataFrame, key: str, time: str, value: str, keys: list
-) -> DataFrame:
-    """Unbounded-k tier: Pearson via cosine of mean-centred columns.
-
-    Listwise, unlike the moments route: NULL values drop and duplicate
-    (key, time) rows collapse to their mean, then only timestamps where
-    all k ``keys`` have a value survive, so every pair's n is the same
-    count of complete timestamps. The vectors come from a narrow
-    per-timestamp ``collect_list``, never a k-column pivot, so generated
-    code stays within its method-size limit at any k.
-
-    ``Summarizer`` returns the k column means (bounded metadata, like the
-    k key names); each vector is centred as it enters the ``RowMatrix``.
-    ``columnSimilarities()`` (exact mode) computes the upper triangle of
-    the column-cosine matrix as a DISTRIBUTED CoordinateMatrix —
-    cos(a−ā, b−b̄) = Pearson r — so the k(k-1)/2 output pairs live in a
-    DataFrame, never on the driver. Pairs whose centred dot product is
-    exactly 0 are absent from the sparse entries, and a zero-variance
-    series yields no entries. The returned frame is lazy over the
-    vectors, so they are ``tracked_persist``-ed, not unpersisted here.
-    """
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.stat import Summarizer
-    from pyspark.mllib.linalg import Vectors
-    from pyspark.mllib.linalg.distributed import RowMatrix
     from ..cache import tracked_persist
 
-    spark = df.sparkSession
-    key_type = df.schema[key].dataType.simpleString()
-    idx = local_frame(spark, [(kk, i) for i, kk in enumerate(keys)], f"_k {key_type}, _ki int")
-    vecs = tracked_persist(
-        df.select(F.col(key).alias("_k"), F.col(time).alias("_t"), F.col(value).alias("_v"))
-        .where(F.col("_v").isNotNull())
-        .groupBy("_k", "_t")
-        .agg(F.avg("_v").alias("_v"))
-        .join(F.broadcast(idx), on="_k")
-        .groupBy("_t")
-        .agg(F.array_sort(F.collect_list(F.struct("_ki", "_v"))).alias("_s"))
-        .where(F.size("_s") == len(keys))
-        .select(array_to_vector(F.transform("_s", lambda s: s["_v"])).alias("_v"))
+    v = F.col(value).cast("double")
+    key_type = df.schema[key].dataType
+    types = [key_type, key_type, LongType()] + [DoubleType()] * 7
+    schema = StructType([StructField(c, t) for c, t in zip(_PARTIAL_COLS, types)])
+    w = Window.partitionBy("key_a", "key_b")
+    n, d_a, d_b = F.col("n"), F.col("d_a"), F.col("d_b")
+    sums = [F.sum("n").alias("n"), F.sum(F.col("c_ab") + n * d_a * d_b).alias("c_ab")]
+    for s, d in (("a", d_a), ("b", d_b)):
+        sums += [F.sum(n * d).alias(f"s_{s}")]
+        sums += [F.sum(F.col(f"{c}_{s}") + n * d * d).alias(f"{c}_{s}") for c in ("m2", "q")]
+    merged = (
+        df.where(F.col(key).isNotNull() & F.col(time).isNotNull() & v.isNotNull())
+        .select(F.col(key).alias("_k"), F.col(time).alias("_t"), v.alias("_v"))
+        .repartition("_t")
+        .mapInPandas(_pair_partials, schema)
+        .withColumns({f"d_{s}": F.col(f"mean_{s}") - F.min(f"mean_{s}").over(w) for s in "ab"})
+        .groupBy("key_a", "key_b")
+        .agg(*sums)
     )
-    n_complete = vecs.count()
-    if n_complete == 0:  # Summarizer refuses an empty input
-        return local_frame(spark, [], _pair_schema(df, key))
-    mu = vecs.select(Summarizer.mean(vecs["_v"])).head()[0].toArray()
-    rm = RowMatrix(vecs.rdd.map(lambda r: Vectors.dense(r._v.toArray() - mu)))
-    sims = rm.columnSimilarities()  # exact; upper triangle (i < j)
-    ent = spark.createDataFrame(
-        sims.entries.map(lambda e: (int(e.i), int(e.j), float(e.value))),
-        "i int, j int, corr double",
+    m2_a, m2_b = (F.col(f"m2_{s}") - F.col(f"s_{s}") * F.col(f"s_{s}") / n for s in "ab")
+    tol = n * (4 * float(np.finfo(float).eps))
+    corr = F.when(
+        (m2_a > tol * F.col("q_a")) & (m2_b > tol * F.col("q_b")),
+        (F.col("c_ab") - F.col("s_a") * F.col("s_b") / n) / (F.sqrt(m2_a) * F.sqrt(m2_b)),
     )
-    ia = idx.select(F.col("_ki").alias("i"), F.col("_k").alias("key_a"))
-    ib = idx.select(F.col("_ki").alias("j"), F.col("_k").alias("key_b"))
-    return (
-        ent.join(F.broadcast(ia), on="i")
-        .join(F.broadcast(ib), on="j")
-        .select("key_a", "key_b", "corr", F.lit(n_complete).cast("long").alias("n"))
-    )
+    return tracked_persist(merged.select("key_a", "key_b", corr.alias("corr"), "n"))
+
+
+def _pair_partials(batches):
+    """``correlation_matrix``'s per-partition step: one row per key pair
+    present in this partition's timestamps.
+
+    The partition's cells form a dense T_p × k_p panel (duplicates
+    mean-collapsed); each key is shifted by its own mean in the partition
+    (x̃), and every B × B key block's sums come from six matrix products.
+    A pair whose cancellation bound ε·Σx̃²/M2 flags it — a one- or
+    two-point overlap, an overlap far from the key's partition mean, a
+    constant overlap — is recomputed exactly by ``_exact_partials``."""
+    import numpy as np
+    import pandas as pd
+
+    frames = [f for f in batches if len(f)]
+    if not frames:
+        return
+    pdf = pd.concat(frames, ignore_index=True)
+    ki, keys = pd.factorize(pdf["_k"], sort=True)
+    ti = pd.factorize(pdf["_t"])[0]
+    t_p, k_p = int(ti.max()) + 1, len(keys)
+    cell = ti.astype(np.int64) * k_p + ki
+    count = np.bincount(cell, minlength=t_p * k_p).reshape(t_p, k_p)
+    total = np.bincount(cell, weights=pdf["_v"].to_numpy(float), minlength=t_p * k_p)
+    x = total.reshape(t_p, k_p) / np.maximum(count, 1)
+    m = count > 0
+    mf = m.astype(float)
+    shift = x.sum(axis=0) / mf.sum(axis=0)
+    xs = np.where(m, x - shift, 0.0)
+    xs2 = xs * xs
+    for a0 in range(0, k_p, _PAIR_BLOCK):
+        ia = slice(a0, a0 + _PAIR_BLOCK)
+        for b0 in range(a0, k_p, _PAIR_BLOCK):
+            ib = slice(b0, b0 + _PAIR_BLOCK)
+            nn = mf[:, ia].T @ mf[:, ib]
+            if a0 == b0:
+                nn = np.triu(nn, 1)
+            a, b = np.nonzero(nn)
+            if not len(a):
+                continue
+            nn = nn[a, b]
+            s_a = (xs[:, ia].T @ mf[:, ib])[a, b]
+            s_b = (mf[:, ia].T @ xs[:, ib])[a, b]
+            q_a = (xs2[:, ia].T @ mf[:, ib])[a, b]
+            q_b = (mf[:, ia].T @ xs2[:, ib])[a, b]
+            c_ab = (xs[:, ia].T @ xs[:, ib])[a, b] - s_a * s_b / nn
+            m2_a, m2_b = q_a - s_a * s_a / nn, q_b - s_b * s_b / nn
+            a, b = a + a0, b + b0
+            mean_a, mean_b = shift[a] + s_a / nn, shift[b] + s_b / nn
+            cols = [mean_a, mean_b, m2_a, m2_b, c_ab, q_a, q_b]
+            redo = np.flatnonzero((m2_a * _CANCEL_BOUND <= q_a) | (m2_b * _CANCEL_BOUND <= q_b))
+            step = max(1, _PAIR_BLOCK**2 // t_p)
+            for r0 in range(0, len(redo), step):
+                r = redo[r0 : r0 + step]
+                for col, exact in zip(cols, _exact_partials(x, m, a[r], b[r])):
+                    col[r] = exact
+            yield pd.DataFrame(
+                dict(zip(_PARTIAL_COLS, [keys[a], keys[b], nn.astype(np.int64), *cols]))
+            )
+
+
+def _exact_partials(x, m, a, b):
+    """Pairs (a[i], b[i])'s overlap moments, computed exactly on the raw
+    panel ``x`` (presence ``m``): each column is centred on its first
+    overlap value, then on the mean of those differences (two-pass), so a
+    constant overlap gives exactly its value as the mean and zero moments.
+    Returns (mean_a, mean_b, M2_a, M2_b, C_ab, Σy_a², Σy_b²)."""
+    import numpy as np
+
+    both = m[:, a] & m[:, b]
+    first, n = both.argmax(axis=0), both.sum(axis=0)
+    sides = []
+    for j in (a, b):
+        y = np.where(both, x[:, j] - x[first, j], 0.0)
+        mean = y.sum(axis=0) / n
+        sides.append((x[first, j] + mean, np.where(both, y - mean, 0.0), (y * y).sum(axis=0)))
+    (mean_a, d_a, q_a), (mean_b, d_b, q_b) = sides
+    m2_a, m2_b, c_ab = ((u * v).sum(axis=0) for u, v in ((d_a, d_a), (d_b, d_b), (d_a, d_b)))
+    return mean_a, mean_b, m2_a, m2_b, c_ab, q_a, q_b
 
 
 def corr_edges(corr: DataFrame, threshold: float = 0.3) -> DataFrame:

@@ -53,10 +53,11 @@ def fetch_ohlcv(
     """Distributed cursor-paginated fetch: one task per symbol.
 
     Cursor semantics mirror the reference: each page asks for bars since
-    ``last_ts + 1`` until ``end_ms`` or a short page. Retries with
-    exponential backoff per page; a page that keeps failing raises (the task
-    retries per Spark's policy — at-least-once semantics, dedupe downstream
-    on (symbol, ts) if the transport is not idempotent).
+    ``last_ts + 1`` until ``end_ms`` or a short page. Transport errors
+    (``OSError``) retry with exponential backoff per page, any other error
+    propagates at once; a page that keeps failing raises (the task retries
+    per Spark's policy — at-least-once semantics, dedupe downstream on
+    (symbol, ts) if the transport is not idempotent).
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -70,7 +71,7 @@ def fetch_ohlcv(
                         try:
                             page = fetch_page(sym, since, page_limit)
                             break
-                        except Exception:  # noqa: BLE001
+                        except OSError:
                             if attempt == max_retries - 1:
                                 raise
                             time.sleep(backoff_s * (2**attempt))

@@ -140,6 +140,27 @@ def admit(
     return pdf[keep], ts_us[keep]
 
 
+def sort_order(pdf: pd.DataFrame, order: list[str]) -> np.ndarray:
+    """Row positions that sort ``pdf`` stably by the columns ``order``,
+    NaN/NaT last, as ``pdf.sort_values(order, kind="mergesort")`` does, from
+    one ``np.lexsort``: datetimes enter as int64, numpy numbers as they are,
+    anything else as sorted factor codes, each ranked first by its missing flag."""
+    keys = []
+    for c in reversed(order):
+        col = pdf[c]
+        if col.dtype.kind in "mM":
+            values = col.array.asi8
+            missing = values == np.iinfo(np.int64).min
+        elif isinstance(col.dtype, np.dtype) and col.dtype.kind in "biuf":
+            values = col.to_numpy()
+            missing = np.isnan(values)
+        else:
+            values = pd.factorize(col, sort=True)[0]
+            missing = values < 0
+        keys += [values, missing]
+    return np.lexsort(keys)
+
+
 def _pack(held: pd.DataFrame) -> bytes | None:
     if held.empty:
         return None
@@ -221,7 +242,7 @@ def ordered_recurrence(
             pdf = pd.concat([held, pdf], ignore_index=True)
         out = None
         if len(pdf):
-            pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
+            pdf = pdf.iloc[sort_order(pdf, order)].reset_index(drop=True)
             ts_us = micros(pdf[time])
             k = int(np.searchsorted(ts_us, max_us - delay_us, side="right"))
             ready, pdf = pdf.iloc[:k], pdf.iloc[k:]

@@ -480,16 +480,12 @@ def test_correlation_matrix_gram_compiles_wide_panel(spark):
     _assert_matches_pandas(got, ref, 1e-9)
 
 
-def test_correlation_matrix_duplicates_and_nulls(spark, monkeypatch):
-    """Both routes mean-collapse a duplicated (key, time) row and drop a
-    NULL value. One panel holds a dirty copy ``d*`` of four series and a
-    copy ``c*`` cleaned that way by hand: every d-pair must equal its
-    c-pair, route by route. The moments route is pairwise-complete (only
-    pairs with key 3 lose the NULL's timestamp); the distributed route
-    is listwise (every pair loses it)."""
+def test_correlation_matrix_duplicates_and_nulls(spark):
+    """A duplicated (key, time) row mean-collapses and a NULL value drops.
+    One panel holds a dirty copy ``d*`` of four series and a copy ``c*``
+    cleaned that way by hand: every d-pair must equal its c-pair. n is
+    pairwise-complete: only pairs with key 3 lose the NULL's timestamp."""
     import math
-
-    import financial_big_data_spark.ml.clustering as mc
 
     rows = {
         (i, t): math.sin((i + 1) * 0.7 * t) + 0.1 * i for i in range(4) for t in range(10)
@@ -502,53 +498,21 @@ def test_correlation_matrix_duplicates_and_nulls(spark, monkeypatch):
         if (i, t) != (3, 8)
     ]
     df = spark.createDataFrame(dirty + clean, "key string, t int, value double")
-    for route, max_keys in (("moments", mc._MOMENTS_MAX_KEYS), ("distributed", 0)):
-        monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", max_keys)
-        got = _corr_pairs(df)
-        assert len(got) == 8 * 7 // 2, route
-        for i in range(4):
-            for j in range(i + 1, 4):
-                c_d, n_d = got[(f"d{i}", f"d{j}")]
-                c_c, n_c = got[(f"c{i}", f"c{j}")]
-                want_n = 10 if route == "moments" and j != 3 else 9
-                assert n_d == n_c == want_n, (route, i, j)
-                assert abs(c_d - c_c) < 1e-12, (route, i, j)
+    got = _corr_pairs(df)
+    assert len(got) == 8 * 7 // 2
+    for i in range(4):
+        for j in range(i + 1, 4):
+            c_d, n_d = got[(f"d{i}", f"d{j}")]
+            c_c, n_c = got[(f"c{i}", f"c{j}")]
+            assert n_d == n_c == (9 if j == 3 else 10), (i, j)
+            assert abs(c_d - c_c) < 1e-12, (i, j)
 
 
-def test_correlation_matrix_auto_routes_by_key_count(spark, monkeypatch):
-    """``_MOMENTS_MAX_KEYS`` alone splits the routes: up to it the
-    moments route answers (no call into the distributed tier), above it
-    the distributed tier does."""
-    import financial_big_data_spark.ml.clustering as mc
-
-    small = spark.createDataFrame(
-        [(f"k{i}", t, float(i * t)) for i in range(3) for t in range(5)],
-        "key string, t int, value double",
-    )
-    big = spark.createDataFrame(
-        [(f"k{i:03d}", t, float((i % 7 + 1) * t + i)) for i in range(250) for t in range(5)],
-        "key string, t int, value double",
-    )
-    calls = []  # the key count of each call into the distributed tier
-    monkeypatch.setattr(
-        mc, "_correlation_matrix_distributed", lambda *a: calls.append(len(a[-1]))
-    )
-    monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", 250)
-    assert mc.correlation_matrix(small, "key", "t", "value").count() == 3
-    assert mc.correlation_matrix(big, "key", "t", "value").count() == 250 * 249 // 2
-    assert calls == []
-    monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", 249)
-    assert mc.correlation_matrix(big, "key", "t", "value") is None
-    assert calls == [250]
-
-
-def test_correlation_matrix_ragged_panel(spark):
-    """A ragged panel — 250 keys, each present at about 10 % of 720
-    hours, like the 300-user hourly panel of ev_user_communities — must
-    match pandas ``.corr()`` pairwise: r to 1e-6 and n exactly. A
-    listwise route finds no complete hour here and returns no pairs."""
-    rng = np.random.default_rng(42)
-    hours = 720
+def _ragged_rows(seed: int, hours: int) -> list:
+    """250 keys, each present at about 10 % of ``hours``: five factors
+    plus noise around levels 10..16, so most pairs overlap at one to a
+    few hours whose values lie far from the key's mean."""
+    rng = np.random.default_rng(seed)
     factors = rng.normal(0, 1, (5, hours))
     rows = []
     for i in range(250):
@@ -557,10 +521,51 @@ def test_correlation_matrix_ragged_panel(spark):
             (f"k{i:03d}", int(t), float(series[t]))
             for t in np.flatnonzero(rng.random(hours) < 0.1)
         ]
+    return rows
+
+
+def test_correlation_matrix_ragged_panel(spark):
+    """A ragged panel — 250 keys, each present at about 10 % of 720
+    hours, like the 300-user hourly panel of ev_user_communities — must
+    match pandas ``.corr()`` pairwise: r to 1e-6 and n exactly. A
+    listwise route finds no complete hour here and returns no pairs."""
+    rows = _ragged_rows(42, 720)
     df = spark.createDataFrame(rows, "key string, t int, value double")
     ref = _pandas_pairs(rows)
     assert len(ref) > 0.9 * 250 * 249 // 2
     _assert_matches_pandas(_corr_pairs(df), ref, 1e-6)
+
+
+def test_correlation_matrix_near_constant_overlaps(spark):
+    """Seed 1 of the ragged panel over 300 hours holds short overlaps whose
+    values nearly coincide: uncentred moment sums put r 1.0e-5 off pandas
+    there. The exactly recomputed partials stay within 1e-9."""
+    rows = _ragged_rows(1, 300)
+    df = spark.createDataFrame(rows, "key string, t int, value double")
+    _assert_matches_pandas(_corr_pairs(df), _pandas_pairs(rows), 1e-9)
+
+
+def test_correlation_matrix_reads_windowed_input_once(spark):
+    """Materializing the result evaluates the input once: an accumulator
+    counts the rows fed to the input's window exchange, and they pass it
+    exactly once (a key pre-scan before the main pass would run it twice)."""
+    from pyspark.sql.window import Window
+
+    fed = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            fed.add(len(pdf))
+            yield pdf
+
+    prices = spark.createDataFrame(
+        [(f"k{i}", t, float(10 + i + np.sin(t * (i + 1)))) for i in range(5) for t in range(40)],
+        "key string, t int, price double",
+    ).mapInPandas(counted, "key string, t int, price double")
+    prev = F.lag("price").over(Window.partitionBy("key").orderBy("t"))
+    returns = prices.select("key", "t", (F.col("price") / prev).alias("r"))
+    assert correlation_matrix(returns, "key", "t", "r").count() == 5 * 4 // 2
+    assert fed.value == 5 * 40
 
 
 def test_correlation_matrix_constant_series_null(spark):
@@ -593,14 +598,11 @@ def test_dbscan_auto_eps_layout_invariant(spark, blobs_df):
     assert len(eps_seen) == 1
 
 
-def test_correlation_matrix_distributed_parity(spark, monkeypatch):
-    """The unbounded-k tier (columnSimilarities on centered columns) must
-    match pandas ``.corr()`` pair-for-pair on a complete panel, where
-    its listwise semantics and pandas' pairwise ones agree — nothing
-    k²-sized touches the driver in this mode."""
+def test_correlation_matrix_distributed_parity(spark):
+    """300 keys on a complete panel: the one route, whose result is a
+    distributed frame with no k²-sized state on the driver, matches
+    pandas ``.corr()`` pair for pair."""
     import math
-
-    import financial_big_data_spark.ml.clustering as mc
 
     rows = [
         (f"k{i:03d}", t, math.sin((i % 13 + 1) * 0.29 * t) + 0.002 * i * t)
@@ -608,10 +610,8 @@ def test_correlation_matrix_distributed_parity(spark, monkeypatch):
         for t in range(15)
     ]
     df = spark.createDataFrame(rows, "key string, t int, value double")
-    monkeypatch.setattr(mc, "_MOMENTS_MAX_KEYS", 0)
     ref = _pandas_pairs(rows)
     assert len(ref) == 300 * 299 // 2
-    # sparse entries may omit exact-zero correlations; none exist here
     _assert_matches_pandas(_corr_pairs(df), ref, 1e-9)
 
 

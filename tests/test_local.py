@@ -81,11 +81,7 @@ def _read_jobs(spark, group, frames) -> int:
 
 
 def _route_results(spark, route):
-    from financial_big_data_spark.ml.clustering import (
-        correlation_matrix,
-        dbscan,
-        kmeans_clusters,
-    )
+    from financial_big_data_spark.ml.clustering import dbscan, kmeans_clusters
     from financial_big_data_spark.ml.graph import louvain_distributed_df
     from financial_big_data_spark.ml.metrics import evaluate
 
@@ -93,12 +89,6 @@ def _route_results(spark, route):
     points = spark.createDataFrame(
         [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(xy)], "id string, x double, y double"
     )
-    if route == "correlation":
-        panel = spark.createDataFrame(
-            [(f"k{k}", t, float(np.sin(t * (k + 1)))) for k in range(6) for t in range(20)],
-            "key string, t int, value double",
-        )
-        return [correlation_matrix(panel, "key", "t", "value")]
     if route == "louvain":
         cliques = [(a, b) for g in (0, 4) for a in range(g, g + 4) for b in range(a + 1, g + 4)]
         edges = spark.createDataFrame(cliques + [(3, 4)], "src long, dst long")
@@ -113,10 +103,10 @@ def _route_results(spark, route):
     return list(evaluate(preds))
 
 
-@pytest.mark.parametrize("route", ["correlation", "louvain", "kmeans", "dbscan", "evaluate"])
+@pytest.mark.parametrize("route", ["louvain", "kmeans", "dbscan", "evaluate"])
 def test_driver_route_results_read_without_jobs(spark, route):
-    """Each driver route (correlation under 2500 keys, Louvain, k-means and
-    DBSCAN under their caps, the forecast metrics) returns local relations:
-    reading them runs no Spark job."""
+    """Each driver route (Louvain, k-means and DBSCAN under their caps, the
+    forecast metrics) returns local relations: reading them runs no Spark
+    job."""
     frames = _route_results(spark, route)
     assert _read_jobs(spark, f"read_driver_route_{route}", frames) == 0

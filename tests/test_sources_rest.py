@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from financial_big_data_spark.sources.rest import fetch_ohlcv, top_symbols, write_bars
@@ -56,6 +59,27 @@ def test_fetch_ohlcv_retries(spark):
         symbols, flaky, start_ms=0, end_ms=99 * HOUR_MS, max_retries=3, backoff_s=0.0
     )
     assert bars.count() == 100
+
+
+def test_fetch_ohlcv_does_not_retry_other_errors(spark):
+    """Only transport errors (``OSError``) are retried: a ``ValueError``
+    from ``fetch_page`` propagates from its first call, with no retry and
+    no backoff sleep."""
+    calls = {"n": 0}
+
+    def malformed(symbol, since, limit):
+        calls["n"] += 1
+        raise ValueError(f"malformed page (call {calls['n']})")
+
+    symbols = spark.createDataFrame([("AAA/USDT",)], "symbol string")
+    bars = fetch_ohlcv(
+        symbols, malformed, start_ms=0, end_ms=99 * HOUR_MS, max_retries=3, backoff_s=10.0
+    )
+    start = time.monotonic()
+    with pytest.raises(Exception, match=r"malformed page \(call 1\)") as err:
+        bars.collect()
+    assert time.monotonic() - start < 10.0
+    assert "call 2" not in str(err.value)
 
 
 def test_top_symbols(spark):
