@@ -886,7 +886,7 @@ def main() -> None:
             ev3.select("user_id", "event_id", "ts", "value"),
             series="user_id", time="ts", close="value", high="value", low="value",
             volume="value", model=model_name, order_tiebreak=["event_id"],
-            macd_buckets=64, **kw,
+            **kw,
         )
         acc = fres.accuracy.collect()[0].accuracy
         fres.weighted_f1.collect()
@@ -952,7 +952,7 @@ def main() -> None:
             hard_bars,
             series="user_id", time="ts", close="value", high="value",
             low="value", volume="value", model=model_name,
-            order_tiebreak=["event_id"], macd_buckets=8, **kw,
+            order_tiebreak=["event_id"], **kw,
         )
         acc = fres.accuracy.collect()[0].accuracy
         return round(time.time() - t0, 3), round(acc, 4)

@@ -4,7 +4,7 @@ The reference trains an LSTM+attention classifier per symbol on 30-step
 windows of 16 features (reference src/models/lstm_forecasting.py:15-35,
 186-218, 227-302). The engine owns everything up to and after the model:
 
-    bars → lstm_features (one window stage + MACD grouped-map)
+    bars → lstm_features (one window stage + sorted MACD pass)
          → label (next-hour regime = prediction target)
          → sequences (collect_list window)
          → ordered 70/15/15 split
@@ -83,7 +83,6 @@ def regime_prediction_dataset(
     volume: str = "volume",
     thresholds: ShortTermThresholds | None = None,
     order_tiebreak: list[str] | None = None,
-    macd_buckets: int | None = None,
 ) -> DataFrame:
     """Features + current regime + next-step target label, one pipeline.
 
@@ -94,7 +93,7 @@ def regime_prediction_dataset(
     w = Window.partitionBy(series).orderBy(*[F.col(c) for c in order])
     feats = lstm_features(
         bars, series=series, time=time, close=close, high=high, low=low, volume=volume,
-        order_tiebreak=order_tiebreak, macd_buckets=macd_buckets,
+        order_tiebreak=order_tiebreak,
     )
     labeled = detect_regime_5way(
         regime_features(
@@ -153,7 +152,7 @@ def mllib_regime_classifier(
 
     feature_cols = feature_cols or FEATURE_COLS
     # the feature pipeline above this point is expensive (16 window features
-    # + regime labeling + grouped-map MACD) and is re-read by the indexer
+    # + regime labeling + the MACD pass) and is re-read by the indexer
     # fit, the LBFGS fit and the scoring pass — persist once (tracked:
     # released by cache.release_tracked between registry queries)
     from ..cache import tracked_persist
@@ -759,7 +758,6 @@ def forecast_and_evaluate(
     volume: str = "volume",
     model: str = "baseline",
     order_tiebreak: list[str] | None = None,
-    macd_buckets: int | None = None,
     seq_len: int = 30,
 ) -> ForecastResult:
     """End-to-end EP3: dataset → split → score → metrics.
@@ -783,7 +781,7 @@ def forecast_and_evaluate(
     """
     ds = regime_prediction_dataset(
         bars, series=series, time=time, close=close, high=high, low=low,
-        volume=volume, order_tiebreak=order_tiebreak, macd_buckets=macd_buckets,
+        volume=volume, order_tiebreak=order_tiebreak,
     )
     ds = ordered_split(ds, series=series, time=time, order_tiebreak=order_tiebreak)
     if model in ("lstm", "lstm_dist"):
@@ -804,7 +802,7 @@ def forecast_and_evaluate(
         scored = persistence_baseline(ds)
     # the confusion collect fills this cache, so a caller reading the
     # predictions does not recompute the feature pipeline (incl. the
-    # grouped-map MACD); tracked: bulk-released between registry queries
+    # MACD pass); tracked: bulk-released between registry queries
     from ..cache import tracked_persist
 
     test = tracked_persist(

@@ -28,6 +28,8 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..local import local_frame
+
 
 class _CapSignal:
     """Truncation telemetry for one bucket-cap site (ADVICE r11).
@@ -913,9 +915,8 @@ def pair_clusters(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         # sizes + canonical flags resolved driver-side too: the graph is
-        # already in memory (bounded by driver_max_pairs), so the old
-        # groupBy(component) + join — two more shuffles over a tiny frame —
-        # collapse into one createDataFrame of final rows
+        # already in memory (bounded by driver_max_pairs), so the final
+        # rows go back as one local relation, read with no Spark job
         sizes: dict = {}
         comp_of = {node: find(node) for node in parent}
         for c in comp_of.values():
@@ -923,17 +924,13 @@ def pair_clusters(
         rows = [
             (node, c, sizes[c], int(node == c)) for node, c in comp_of.items()
         ]
-        id_type = pairs.schema["id_a"].dataType
         schema = (
             pairs.select(F.col("id_a").alias(id_col)).schema
-            .add("cluster_id", id_type)
+            .add("cluster_id", pairs.schema["id_a"].dataType)
+            .add("cluster_size", "long")
+            .add("is_canonical", "integer")
         )
-        from pyspark.sql.types import IntegerType, LongType
-
-        schema = schema.add("cluster_size", LongType()).add(
-            "is_canonical", IntegerType()
-        )
-        return pairs.sparkSession.createDataFrame(rows, schema=schema)
+        return local_frame(pairs.sparkSession, rows, schema)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     comp = connected_components(edges)
     sizes_df = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))

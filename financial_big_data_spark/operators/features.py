@@ -3,7 +3,7 @@
 Mirrors the reference's 16-feature matrix (src/models/lstm_forecasting.py:
 55-128), sliding sequence construction (:186-192) and the time-ordered
 70/15/15 split (:210-218) — all as one window stage per series plus a single
-grouped-map pass for the MACD recurrence.
+sorted pass for the MACD recurrence (functions/ewm.py).
 
 Scale notes: every feature shares W_sym = partitionBy(series).orderBy(time),
 so Catalyst fuses them into ONE window physical node after ONE exchange.
@@ -50,12 +50,10 @@ def lstm_features(
     low: str = "low",
     volume: str = "volume",
     order_tiebreak: list[str] | None = None,
-    macd_buckets: int | None = None,
 ) -> DataFrame:
     """16-feature block (reference lstm_forecasting.py:57-105), one window
-    stage + one grouped-map (MACD). Clips/fills follow the reference.
-    ``macd_buckets`` forwards to :func:`functions.ewm.macd` (vectorized
-    bucket mode, bit-identical)."""
+    stage + one sorted MACD pass on the same series partitioning.
+    Clips/fills follow the reference."""
     order = [time] + (order_tiebreak or [])
     w = bar_window(series, order)
     ret = pct_change(close, w)
@@ -89,7 +87,7 @@ def lstm_features(
     )
     with_macd = macd(
         with_feats, close=close, series=series, time=time,
-        order_tiebreak=order_tiebreak, n_buckets=macd_buckets,
+        order_tiebreak=order_tiebreak,
     )
     # reference fills: neutral constants, then zero (lstm_forecasting.py:109-110)
     filled = with_macd.na.fill({"rsi": 50.0, "bb_position": 0.5})

@@ -3211,7 +3211,8 @@ FROM p GROUP BY pack_id ORDER BY pack_id
 
 
 def q_ev_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W8: MACD(12,26,9) via grouped-map EWM recurrence (applyInPandas).
+    """W8: MACD(12,26,9) via the seeded EWM kernel over series-sorted
+    Arrow batches (functions/ewm.py).
 
     Oracle: DuckDB reproduces the ``adjust=False`` EWM recurrence with a
     recursive CTE that walks row_number order per user — the float ops
@@ -3221,12 +3222,11 @@ def q_ev_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.ewm import macd
 
     ev = _events(spark, sf_dir).select("user_id", "event_id", "ts", "value")
-    # bucketed-vectorized mode: 64 buckets keeps per-task memory at
-    # corpus/64 while pandas' C GroupBy.ewm kernel runs once per bucket
-    # instead of once per series (bit-identical; ~4x faster wall-clock)
+    # per-task memory is one Arrow batch plus the carry; pandas' C
+    # GroupBy.ewm kernel runs once per batch, across every user in it
     out = macd(
         ev, close="value", series="user_id", time="ts",
-        order_tiebreak=["event_id"], n_buckets=64,
+        order_tiebreak=["event_id"],
     )
     return out.select(
         "user_id", "event_id", _r6(F.col("macd")).alias("macd"),

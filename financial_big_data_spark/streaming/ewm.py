@@ -1,29 +1,25 @@
-"""Streaming EWM / MACD — O(1)-state continuation of the batch recurrence
+"""Streaming EWM / MACD: the batch kernel, continued across micro-batches
 (SURVEY §2.10 / W8 streaming surface).
 
-``functions/ewm.py`` computes the adjust=False recurrence
-``y_t = (1-α)·y_{t-1} + α·x_t`` (reference src/models/lstm_forecasting.py:
-150-163) with one ``applyInPandas`` task per series and explicitly declares
-the pathological case — a single series whose full history exceeds one
-task's memory — out of scope for batch, pointing at "chunked carry-over
-(stateful streaming)". This module IS that carry-over path:
+``functions/ewm.py`` holds the one seeded EWM kernel. The batch operators
+fold it over the Arrow batches of a series-sorted partition; the
+operators here call the same columns on each micro-batch's rows of one
+series, with the kernel's carry as their state:
 
-- the carry per series is O(1) — exactly the last EWM value(s), not a
-  window of history (contrast streaming/regime.py, which must carry the
-  last ``2×window`` closes): one double for ``streaming_ewm_mean``, three
-  for ``streaming_macd`` (fast/slow/signal EMAs);
-- each emitted slice continues the recurrence bit-for-bit: the carried
-  value seeds pandas' own C ``ewm`` kernel (prepend-seed-then-drop-it),
-  which runs the identical float recurrence in the identical operand
-  order — so splitting a series across ANY number of micro-batches
-  produces byte-identical doubles to the single-pass batch operator
-  (pinned by the parity test, which asserts ``==`` on floats, not
-  approx);
+- the carry per series is O(1), not a window of history (contrast
+  streaming/regime.py, which must carry the last ``2×window`` closes):
+  per EWM, the last weighted value and the number of NULL inputs since the
+  last observation, so a micro-batch may end inside a NULL run. That is
+  one pair for ``streaming_ewm_mean`` and three for ``streaming_macd``
+  (fast/slow/signal EMAs);
+- splitting a series across ANY number of micro-batches therefore gives
+  byte-identical doubles to the single-pass batch operator (pinned by the
+  parity tests, which assert ``==`` on floats, not approx);
 - ordering, admission (``on_late``), the reorder buffer
   (``delay_seconds``, default 0 = in-order delivery), the state layout
   guard and the TTL (none by default; see the trigger caveat) are the
   shared driver's, ``streaming/ordering.py``. Each operator here is only
-  its output schema, its carry fields and its ``step``.
+  its output schema, its carry fields and its columns.
 
 API note: built on ``applyInPandasWithState``. Spark 4 also ships the
 richer ``transformWithStateInPandas``; its Python state server requires
@@ -35,29 +31,34 @@ API is the right dependency floor.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..functions.ewm import MACD_COLS, Columns, ewm_columns, macd_columns
 from .ordering import ordered_recurrence
 
 
-def _continue_ewm(series: pd.Series, span: int, prev: float | None) -> pd.Series:
-    """Continue an adjust=False EWM from carried value ``prev`` —
-    bit-exact: the seed row reproduces the recurrence's y_{t-1} operand and
-    the kernel is the same C path the batch operator uses.
+def _one_series(columns: Columns):
+    """``columns`` as an ``ordered_recurrence`` step: the rows are one
+    series, i.e. one run."""
 
-    Parameterized by ``span``, NOT a precomputed alpha: pandas derives the
-    internal decay weight differently for ``span=`` (com/(1+com)) and
-    ``alpha=`` (1-alpha) — equal as reals, off by one ulp as doubles, which
-    diverges the recurrence within ~5 steps (measured). Byte-parity with
-    ``functions/ewm.py`` requires the identical parameterization."""
-    s = series.astype("float64").reset_index(drop=True)
-    if prev is None:
-        return s.ewm(span=span, adjust=False).mean()
-    seeded = pd.concat([pd.Series([prev], dtype="float64"), s], ignore_index=True)
-    return seeded.ewm(span=span, adjust=False).mean().iloc[1:].reset_index(drop=True)
+    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame, tuple]:
+        cols, carry = columns(rows, np.zeros(len(rows), dtype=np.int64), carry)
+        return rows.assign(**cols), carry
+
+    return step
+
+
+def _carry_fields(*names: str) -> list[T.StructField]:
+    """One kernel carry per name: its last value and its pending NULLs."""
+    return [
+        f
+        for n in names
+        for f in (T.StructField(n, T.DoubleType()), T.StructField(f"{n}_nans", T.LongType()))
+    ]
 
 
 def streaming_ewm_mean(
@@ -80,26 +81,21 @@ def streaming_ewm_mean(
     ``order_tiebreak``: extra sort columns after ``time``. Duplicate
     timestamps within a series otherwise leave the recurrence order (and
     the carried value) to Arrow chunk arrival order — pass a unique
-    column (event id) whenever ties are possible. The sort is stable
-    (mergesort) either way, matching functions/ewm.py.
+    column (event id) whenever ties are possible; the batch operator
+    sorts by the same keys.
 
     ``on_late``, ``delay_seconds`` and ``state_ttl_ms`` are the shared
     driver's (streaming/ordering.py): a row older than the last emitted
     event time raises naming the series and timestamps, or is dropped;
     a positive ``delay_seconds`` holds rows until the series' watermark
     passes them, absorbing disorder up to that bound."""
-
-    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame, tuple]:
-        y = _continue_ewm(rows[value], span, carry[0])
-        return rows.assign(**{out: y.to_numpy()}), (float(y.iloc[-1]),)
-
     return ordered_recurrence(
         stream,
-        step,
+        _one_series(ewm_columns(value, span, out)),
         out_schema=T.StructType(
             stream.schema.fields + [T.StructField(out, T.DoubleType())]
         ),
-        carry_fields=[T.StructField("last_ewm", T.DoubleType())],
+        carry_fields=_carry_fields("last_ewm"),
         operator="streaming_ewm_mean",
         series=series,
         time=time,
@@ -125,37 +121,16 @@ def streaming_macd(
 ) -> DataFrame:
     """Streaming MACD(fast, slow, signal) — appends macd, macd_signal,
     macd_hist exactly as ``functions.ewm.macd`` does in batch, carrying
-    three doubles per series across micro-batches. See
+    three kernel carries per series across micro-batches. See
     ``streaming_ewm_mean`` for ``order_tiebreak``, ``on_late``,
     ``delay_seconds`` and ``state_ttl_ms``."""
-
-    def step(rows: pd.DataFrame, carry: tuple) -> tuple[pd.DataFrame, tuple]:
-        prev_f, prev_s, prev_sig = carry
-        ef = _continue_ewm(rows[close], fast, prev_f)
-        es = _continue_ewm(rows[close], slow, prev_s)
-        macd_line = ef - es
-        sig = _continue_ewm(macd_line, signal, prev_sig)
-        out = rows.assign(
-            macd=macd_line.to_numpy(),
-            macd_signal=sig.to_numpy(),
-            macd_hist=(macd_line - sig).to_numpy(),
-        )
-        return out, (float(ef.iloc[-1]), float(es.iloc[-1]), float(sig.iloc[-1]))
-
     return ordered_recurrence(
         stream,
-        step,
+        _one_series(macd_columns(close, fast, slow, signal)),
         out_schema=T.StructType(
-            stream.schema.fields
-            + [
-                T.StructField(c, T.DoubleType())
-                for c in ("macd", "macd_signal", "macd_hist")
-            ]
+            stream.schema.fields + [T.StructField(c, T.DoubleType()) for c in MACD_COLS]
         ),
-        carry_fields=[
-            T.StructField(c, T.DoubleType())
-            for c in ("ema_fast", "ema_slow", "ema_signal")
-        ],
+        carry_fields=_carry_fields("ema_fast", "ema_slow", "ema_signal"),
         operator="streaming_macd",
         series=series,
         time=time,

@@ -72,7 +72,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 #   3 (r10)             — + leading layout-version tag (this guard)
 #   4                   — one driver layout: tag, last emitted µs, max
 #                         seen µs, held rows (Arrow IPC), operator carry
-STATE_VERSION = 4
+#   5                   — EWM/MACD carries gain each EWM's pending-NULL
+#                         count
+STATE_VERSION = 5
 
 Step = Callable[[pd.DataFrame, tuple], tuple[pd.DataFrame | None, tuple]]
 

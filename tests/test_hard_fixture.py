@@ -20,7 +20,7 @@ def _acc(spark, bars, model, **kw):
     r = forecast_and_evaluate(
         bars, series="user_id", time="ts", close="value", high="value",
         low="value", volume="value", model=model,
-        order_tiebreak=["event_id"], macd_buckets=8, **kw,
+        order_tiebreak=["event_id"], **kw,
     )
     return r.accuracy.collect()[0].accuracy
 
@@ -66,7 +66,6 @@ def test_three_regimes_present(spark, hard_bars):
     ds = regime_prediction_dataset(
         hard_bars, series="user_id", time="ts", close="value", high="value",
         low="value", volume="value", order_tiebreak=["event_id"],
-        macd_buckets=8,
     )
     regs = {
         r.regime

@@ -110,3 +110,16 @@ def test_driver_route_results_read_without_jobs(spark, route):
     job."""
     frames = _route_results(spark, route)
     assert _read_jobs(spark, f"read_driver_route_{route}", frames) == 0
+
+
+def test_pair_clusters_driver_route_reads_without_jobs(spark):
+    """``pair_clusters``' driver union-find returns a local relation: its
+    rows are the distributed route's, and reading it runs no Spark job."""
+    from financial_big_data_spark.operators.dedup import pair_clusters
+
+    pairs = spark.createDataFrame([(5, 2), (2, 9), (9, 7), (40, 41)], "id_a long, id_b long")
+    driver = pair_clusters(pairs, "doc_id")
+    assert _read_jobs(spark, "read_pair_clusters", [driver]) == 0
+    distributed = pair_clusters(pairs, "doc_id", driver_max_pairs=0)
+    assert driver.columns == distributed.columns
+    assert sorted(driver.collect()) == sorted(distributed.collect())

@@ -56,6 +56,19 @@ def test_window_block_single_exchange(spark, bars_df):
     assert "hashpartitioning(symbol" in plan
 
 
+def test_macd_after_window_stage_adds_no_exchange(spark, bars_df):
+    """The MACD pass's repartition(series) is dropped after a window stage
+    on the same key: it adds a local sort, not an exchange."""
+    from pyspark.sql import Window
+
+    from financial_big_data_spark.functions.ewm import macd
+
+    w = Window.partitionBy("symbol").orderBy("ts")
+    windowed = bars_df.withColumn("prev", F.lag("close").over(w))
+    assert _plan(windowed).count("Exchange") == 1
+    assert _plan(macd(windowed)).count("Exchange") == 1
+
+
 def test_transitions_reuse_series_partitioning(spark, bars_df):
     """Windows + islands + run aggregation: the island groupBy must NOT add
     a full re-shuffle of the labeled rows — only the final tiny run-table

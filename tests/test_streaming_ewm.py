@@ -1,6 +1,5 @@
 """Streaming EWM/MACD: byte-exact continuation of the batch recurrence
-across micro-batches (the chunked carry-over path functions/ewm.py declares
-out of scope for batch)."""
+across micro-batches, through the one seeded kernel both share."""
 
 from __future__ import annotations
 
@@ -110,23 +109,69 @@ def test_streaming_macd_bit_exact_across_batches(spark, ewm_stream):
 def test_continue_ewm_span_not_alpha():
     """pandas derives the decay weight differently for span= and alpha= —
     equal as reals, one ulp apart as doubles, diverging the recurrence
-    within a few steps. The continuation must use span=."""
+    within a few steps. The shared kernel, continued chunk by chunk from
+    its carry, must use span=."""
+    import numpy as np
     import pandas as pd
+
+    from financial_big_data_spark.functions.ewm import FRESH, ewm_runs
 
     s = pd.Series([100.0 + ((i * 37) % 13) for i in range(20)])
     a = s.ewm(span=10, adjust=False).mean()
     b = s.ewm(alpha=2.0 / 11.0, adjust=False).mean()
     assert (a.to_numpy() != b.to_numpy()).any()  # the trap is real
 
-    from financial_big_data_spark.streaming.ewm import _continue_ewm
-
-    out, prev = [], None
+    out, carry = [], FRESH
     for chunk in (s[:7], s[7:13], s[13:]):
-        y = _continue_ewm(chunk, 10, prev)
+        y, carry = ewm_runs(chunk, np.zeros(len(chunk), dtype=np.int64), 10, carry)
         out.append(y)
-        prev = float(y.iloc[-1])
-    got = pd.concat(out, ignore_index=True)
-    assert (got.to_numpy() == a.to_numpy()).all()
+    assert (np.concatenate(out) == a.to_numpy()).all()
+
+
+@pytest.fixture(scope="module")
+def null_run_stream(spark):
+    """Every cut point of two series with NULL closes, in one stream: series
+    ``{name}/{cut}`` holds the values of ``name``, rows before ``cut`` in
+    micro-batch 1 and the rest in micro-batch 2. ``lead`` is NULL-led."""
+    values = {
+        "mid": [1.0, 2.0, None, None, 5.0, 6.0, 7.0],
+        "lead": [None, None, 3.0, None, None, 6.0, 7.0],
+    }
+    rows = [
+        (f"{name}/{cut}", dt.datetime(2024, 3, 1) + dt.timedelta(minutes=i), v, i, cut)
+        for name, vs in values.items()
+        for cut in range(len(vs) + 1)
+        for i, v in enumerate(vs)
+    ]
+    df = spark.createDataFrame(
+        rows, "symbol string, ts timestamp, close double, i int, cut int"
+    )
+    d = tempfile.mkdtemp(prefix="ewm_null_run_")
+    _write_batches(df, [F.col("i") < F.col("cut"), F.col("i") >= F.col("cut")], d)
+    yield df, d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("op", ["ewm", "macd"])
+def test_streaming_cut_inside_null_run_matches_batch(spark, null_run_stream, op):
+    """A micro-batch may end inside a NULL-close run: pandas decays its
+    weight on every NULL row without resetting it, so the carry must hold
+    the pending NULLs as well as the value. Every cut point gives the batch
+    operator's doubles exactly."""
+    df, d = null_run_stream
+    if op == "ewm":
+        build = lambda s: streaming_ewm_mean(s, value="close", span=12)  # noqa: E731
+        batch = batch_ewm(df, value="close", span=12)
+        cols = ["ewm"]
+    else:
+        build, batch, cols = streaming_macd, batch_macd(df), ["macd", "macd_signal", "macd_hist"]
+    got_df, n_batches = _run(spark, d, build, f"null_run_{op}")
+    assert n_batches == 2
+    got = {(r.symbol, r.i): tuple(r[c] for c in cols) for r in got_df.collect()}
+    exp = {(r.symbol, r.i): tuple(r[c] for c in cols) for r in batch.collect()}
+    assert len(got) == len(exp) == 112
+    mism = sorted(k for k in exp if got[k] != exp[k])
+    assert not mism, mism[:5]
 
 
 def test_streaming_ewm_multi_chunk_group(spark, ewm_stream):

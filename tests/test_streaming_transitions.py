@@ -148,9 +148,9 @@ def test_state_layout_guard_named_error():
     # r9 layout: right op fields + last_ts but NO version tag
     with pytest.raises(ValueError, match="incompatible layout"):
         read_state(FakeState((0.5, dt.datetime(2024, 1, 1))), 3, "x")
-    # same length but a stale tag value (the r10 layout's 3)
+    # same length but a stale tag value (the previous layout's 4)
     with pytest.raises(ValueError, match="incompatible layout"):
-        read_state(FakeState((3, 0.5, None)), 3, "x")
+        read_state(FakeState((4, 0.5, None)), 3, "x")
     # current layout round-trips
     assert read_state(FakeState((STATE_VERSION, 0.5, None)), 3, "x") == (0.5, None)
 

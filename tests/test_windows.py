@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from financial_big_data_spark.functions.windows import (
@@ -141,30 +142,74 @@ def test_bollinger(bars_df, bars_pdf):
     assert_series_close(got_width, _expected(bars_pdf, exp_width), atol=1e-8, name="bb_width")
 
 
-def test_macd_bucketed_equals_per_series(spark, bars_df):
-    """The bucketed-vectorized MACD (pandas GroupBy.ewm across a bucket)
-    must be bit-identical to the per-series grouped-map path."""
-    from financial_big_data_spark.functions.ewm import macd
+def _ewm_panel():
+    """Rows (symbol, ts, event_id, close) for the EWM batch-boundary test:
+    a 10-row NULL-close run (so a 7-row Arrow batch ends inside it), a
+    series that starts with NULLs, tied timestamps whose order only
+    ``event_id`` decides (ids run against arrival order) and a NULL series
+    key, which must form one series as in ``groupBy``."""
+    t0 = pd.Timestamp("2024-01-01")
+    rows, eid = [], 0
+    for sym, n in (("AAA", 60), ("BBB", 30), ("CCC", 40), (None, 25)):
+        for i in range(n):
+            close = 100.0 + ((i * 37) % 13) - (i % 5) * 0.7
+            if sym == "AAA" and (10 <= i < 20 or i % 9 == 4):
+                close = None
+            if sym == "BBB" and (i < 4 or i == 11):
+                close = None
+            if sym is None and i in (7, 8):
+                close = None
+            ts = t0 + pd.Timedelta(hours=i // 3 if sym == "CCC" else i)
+            eid += 1
+            rows.append((sym, ts.to_pydatetime(), -eid if sym == "CCC" else eid, close))
+    return rows
 
-    per_series = macd(bars_df, close="close", series="symbol", time="ts")
-    bucketed = macd(bars_df, close="close", series="symbol", time="ts", n_buckets=4)
-    key = lambda r: (r.symbol, r.ts)  # noqa: E731
-    a = {key(r): (r.macd, r.macd_signal, r.macd_hist) for r in per_series.collect()}
-    b = {key(r): (r.macd, r.macd_signal, r.macd_hist) for r in bucketed.collect()}
-    assert a == b and len(a) > 0
+
+def _pandas_ewm(rows, cols):
+    """Per-series pandas ``ewm(adjust=False)`` of ``close`` (the reference
+    formulation), keyed by event_id, NaN as None."""
+    pdf = pd.DataFrame(rows, columns=["symbol", "ts", "event_id", "close"])
+    out = {}
+    for _, g in pdf.groupby("symbol", dropna=False, sort=False):
+        g = g.sort_values(["ts", "event_id"], kind="mergesort")
+        for eid, vals in zip(g["event_id"], zip(*[f(g["close"]) for f in cols])):
+            out[eid] = tuple(None if np.isnan(v) else v for v in vals)
+    return out
 
 
-def test_ewm_mean_bucketed_equals_per_series(spark, bars_df):
-    from financial_big_data_spark.functions.ewm import ewm_mean
+def _macd_pandas(close):
+    fast = close.ewm(span=12, adjust=False).mean()
+    line = fast - close.ewm(span=26, adjust=False).mean()
+    sig = line.ewm(span=9, adjust=False).mean()
+    return line, sig, line - sig
 
-    a = {
-        (r.symbol, r.ts): r.e
-        for r in ewm_mean(bars_df, "close", 12, series="symbol", time="ts", out="e").collect()
-    }
-    b = {
-        (r.symbol, r.ts): r.e
-        for r in ewm_mean(
-            bars_df, "close", 12, series="symbol", time="ts", out="e", n_buckets=4
-        ).collect()
-    }
-    assert a == b and len(a) > 0
+
+@pytest.mark.parametrize("batch_rows", [7, 97, None])
+def test_ewm_batch_boundaries_match_pandas(spark, batch_rows):
+    """The batch EWM/MACD kernel, seeded across Arrow batches, gives the
+    same doubles (``==``) as per-series pandas ``ewm`` at any batch size,
+    including batches that end inside a NULL run or a series."""
+    from financial_big_data_spark.functions.ewm import ewm_mean, macd
+
+    rows = _ewm_panel()
+    df = spark.createDataFrame(rows, "symbol string, ts timestamp, event_id long, close double")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    if batch_rows is not None:
+        spark.conf.set(conf, str(batch_rows))
+    try:
+        got_ewm = {
+            r.event_id: (r.e,)
+            for r in ewm_mean(df, "close", 5, out="e", order_tiebreak=["event_id"]).collect()
+        }
+        got_macd = {
+            r.event_id: (r.macd, r.macd_signal, r.macd_hist)
+            for r in macd(df, order_tiebreak=["event_id"]).collect()
+        }
+    finally:
+        spark.conf.set(conf, old)
+    exp_ewm = _pandas_ewm(rows, [lambda c: c.ewm(span=5, adjust=False).mean()])
+    exp_macd = _pandas_ewm(rows, [lambda c, i=i: _macd_pandas(c)[i] for i in range(3)])
+    assert len(got_ewm) == len(rows) == 155
+    assert got_ewm == exp_ewm
+    assert got_macd == exp_macd
